@@ -100,10 +100,13 @@ object FraudScorer {
       .select(col("event_id"), col("user_id"), col("label"), col("features"))
   }
 
+  // the summary is dropped: it pins the training session, which stops
+  // being serializable once an Observation has run in it (ModelBridge)
   private def fit(train: DataFrame) =
-    new LogisticRegression()
-      .setMaxIter(10).setRegParam(0.01).setStandardization(true)
-      .fit(train)
+    org.apache.spark.ml.graftbridge.ModelBridge.withoutSummary(
+      new LogisticRegression()
+        .setMaxIter(10).setRegParam(0.01).setStandardization(true)
+        .fit(train))
 
   /** Deterministic uniform cap: lr's maxIter passes need a
     * representative sample, not 100 TB of facts. `n` is the

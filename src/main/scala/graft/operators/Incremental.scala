@@ -23,11 +23,4 @@ object Incremental {
   def changedSince(df: DataFrame, createCol: String, updateCol: String,
                    watermark: String): DataFrame =
     df.filter(coalesce(col(updateCol), col(createCol)) > lit(watermark).cast("timestamp"))
-
-  /** The new watermark after a load — max over the change column.
-    * Returned as a 1-row DataFrame, not a driver-side collect, so it can
-    * be written back to a metadata sink in the same job.
-    */
-  def nextWatermark(df: DataFrame, tsCol: String): DataFrame =
-    df.agg(max(col(tsCol)).as("max_update_dt"))
 }

@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType, TimestampType}
 
 import graft.operators.{Incremental, Scd}
 import graft.sources.{DelimitedSource, FileIngest, JsonlSource, XlsxSource}
@@ -13,7 +14,8 @@ import graft.sources.{DelimitedSource, FileIngest, JsonlSource, XlsxSource}
   * The reference drives everything from `trsh_meta_core_table_mapping`
   * rows; here [[TableMapping]] is the same contract. One `run` produces
   * the merged DWH tables plus the run-log DataFrame — counts come from
-  * the merge plans themselves (`action` column), not from driver-side
+  * the merge plans themselves (observed on the `action` column and the
+  * tombstone flag as the table is written), not from driver-side
   * mutation counters.
   */
 object EtlPipeline {
@@ -48,20 +50,24 @@ object EtlPipeline {
     * counts derived from the merge output itself.
     */
   private def runLog(runId: Long, table: String, merged: DataFrame, scd: Int): DataFrame = {
-    val counts =
-      if (scd == 1)
-        merged.agg(
-          sum(when(col("action") === "I", 1L).otherwise(0L)).as("rows_inserted"),
-          sum(when(col("action") === "U", 1L).otherwise(0L)).as("rows_updated"),
-          lit(0L).as("rows_deleted"))
-      else
-        merged.agg(
-          sum(when(!col("deleted_flg"), 1L).otherwise(0L)).as("rows_inserted"),
-          lit(0L).as("rows_updated"),
-          sum(when(col("deleted_flg"), 1L).otherwise(0L)).as("rows_deleted"))
-    counts.select(lit(runId).as("run_id"), lit(table).as("table_name"),
-      col("rows_inserted"), col("rows_updated"), col("rows_deleted"))
+    val cols = mergeCounts(scd)
+    merged.agg(cols.head, cols.tail: _*)
+      .select(lit(runId).as("run_id"), lit(table).as("table_name"),
+        col("rows_inserted"), col("rows_updated"), col("rows_deleted"))
   }
+
+  /** The run-log counts as aggregates over a merge output: scd1 counts
+    * its `action` tags, scd2 its live versions and tombstones.
+    */
+  private def mergeCounts(scd: Int): Seq[Column] =
+    if (scd == 1) Seq(
+      count(when(col("action") === "I", 1)).as("rows_inserted"),
+      count(when(col("action") === "U", 1)).as("rows_updated"),
+      lit(0L).as("rows_deleted"))
+    else Seq(
+      count(when(!col("deleted_flg"), 1)).as("rows_inserted"),
+      lit(0L).as("rows_updated"),
+      count(when(col("deleted_flg"), 1)).as("rows_deleted"))
 
   /** Incremental staging pull (reference etl.py:190-199): only rows whose
     * change timestamp is past the stored watermark.
@@ -260,7 +266,27 @@ object EtlPipeline {
     * read-modify-written in place.
     *
     * Scale: the driver touches only metadata (file lists, watermark map,
-    * 1-row count aggregates); every data motion is a distributed plan.
+    * observed counts); every data motion is a distributed plan.
+    *  - One execution per file: stage → merge → table write is ONE SQL
+    *    execution with nothing cached. The `stg_` row count and the
+    *    merge's insert/update/delete counts are
+    *    [[org.apache.spark.sql.Observation]]s completed by the table
+    *    write itself (a stage that came out empty may be recounted, see
+    *    [[Staged]]). With a quarantine, the reject count and append add
+    *    their own jobs.
+    *  - Concurrent by target: distinct targets share nothing but the
+    *    watermark store, so the mappings run in one group per target on
+    *    `min(targets, defaultParallelism)` threads. Inside a group the
+    *    order is the sequential one: mapping order, files in
+    *    business-date order, each fresh-file filter reading the live
+    *    watermark. Watermark updates and writes are serialized under one
+    *    lock, so every table swap is followed by a watermark write that
+    *    includes it. Run-log rows and the processed/archived file lists
+    *    come out in mapping order.
+    *  - Failure: a failing mapping stops only its own target's group.
+    *    The run waits for every other group to finish, then rethrows the
+    *    first failure in mapping order as it was thrown, and writes no
+    *    run log.
     * Daily dimension files are small by construction — the 100 TB side
     * (facts) flows through [[stage]]/Incremental against partitioned
     * sources, not through this inbox loop.
@@ -280,14 +306,13 @@ object EtlPipeline {
           archiveFiles: Boolean = true,
           quarantineDir: Option[String] = None): RunReport = {
     val runStart = new java.sql.Timestamp(System.currentTimeMillis())
+    mappings.foreach(m => requireValidTarget(m.targetName))
     var wm = loadWatermarks(spark, warehouseDir)
-    val logRows = Seq.newBuilder[(Long, String, Long, Long, Long)]
-    val processed = Seq.newBuilder[String]
-    val archived = Seq.newBuilder[String]
+    val wmLock = new Object
+    val outs = mappings.map(_ => new MappingOutput)
 
-    mappings.foreach { m =>
-      requireValidTarget(m.targetName)
-      val last = wm.get(m.targetName)
+    def runMapping(m: FileMapping, out: MappingOutput): Unit = {
+      val last = wmLock.synchronized(wm.get(m.targetName))
       val fresh = FileIngest.find(spark, inboxDir, Seq(m.template))
         .map(p => (p, businessDate(p)))
         .filter { case (_, d) => last.forall(d.isAfter) }
@@ -339,7 +364,7 @@ object EtlPipeline {
               q.bad.withColumn("run_id", lit(runId))
                 .write.mode(org.apache.spark.sql.SaveMode.Append)
                 .parquet(s"$qdir/${m.targetName}")
-              logRows += ((runId, s"qtn_${m.targetName}", nBad, 0L, 0L))
+              out.log += ((runId, s"qtn_${m.targetName}", nBad, 0L, 0L))
               val badKeys =
                 if (isJsonl)
                   q.bad.select(get_json_object(col("raw_line"), s"$$.${m.key}").as(m.key))
@@ -362,32 +387,66 @@ object EtlPipeline {
         }
         val stg = norm.select(
           (m.key +: m.payload).map(col) :+
-            col("create_dt").cast("timestamp").as("create_dt"): _*).persist()
-        logRows += ((runId, s"stg_${m.targetName}", stg.count(), 0L, 0L))
+            col("create_dt").cast("timestamp").as("create_dt"): _*)
+        val staged = new Staged(stg)
 
         val deleteTs = dt.atStartOfDay().format(
           java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-        mergeInto(spark, warehouseDir,
+        val merged = mergeInto(spark, warehouseDir,
           TableMapping(m.template, m.targetName, m.key, m.payload, m.scd),
-          stg, runId, deleteTs, liveness, logRows)
-        stg.unpersist(blocking = false)
+          staged.frame, runId, deleteTs, liveness)
+        out.log += ((runId, s"stg_${m.targetName}", staged.rows, 0L, 0L))
+        out.log += merged
 
-        wm += (m.targetName -> dt)
         // persist the watermark WITH each table swap, not once at the
         // end of the whole run: a later mapping failing must not leave
         // an already-merged table accepting a redelivered older
         // snapshot (which would tombstone newer keys and invert
         // version intervals)
-        saveWatermarks(spark, warehouseDir, wm)
-        processed += path
-        if (archiveFiles) archived += FileIngest.archive(spark, path)
+        wmLock.synchronized {
+          wm += (m.targetName -> dt)
+          saveWatermarks(spark, warehouseDir, wm)
+        }
+        out.processed += path
+        if (archiveFiles) out.archived += FileIngest.archive(spark, path)
       }
     }
 
-    val log = writeRunLog(spark, warehouseDir, logRows.result(), runStart)
+    // one group per target, each in mapping order; a group stops at its
+    // first failure, which it reports with the failing mapping's index
+    def runGroup(ix: Seq[Int]): Option[(Int, Throwable)] =
+      ix.iterator.flatMap { i =>
+        try { runMapping(mappings(i), outs(i)); None }
+        catch { case e: Throwable => Some(i -> e) }
+      }.nextOption()
+    val groups = mappings.indices.groupBy(i => mappings(i).targetName).values.toSeq
+    val threads = math.max(1, math.min(groups.size, spark.sparkContext.defaultParallelism))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
+      (r: Runnable) => { val t = new Thread(r, "graft-etl-merge"); t.setDaemon(true); t })
+    val failures =
+      try groups.map(ix => pool.submit(new java.util.concurrent.Callable[Option[(Int, Throwable)]] {
+          def call(): Option[(Int, Throwable)] = {
+            SparkSession.setActiveSession(spark)
+            runGroup(ix)
+          }
+        })).map(_.get())
+      finally pool.shutdown()
+    failures.flatten.minByOption(_._1).foreach { case (_, e) => throw e }
+
+    val log = writeRunLog(spark, warehouseDir, outs.flatMap(_.log.result()), runStart)
 
     refreshMarts(spark, warehouseDir, marts.toSeq)
-    RunReport(runId, log, processed.result(), archived.result())
+    RunReport(runId, log, outs.flatMap(_.processed.result()),
+      outs.flatMap(_.archived.result()))
+  }
+
+  private type LogRow = (Long, String, Long, Long, Long)
+
+  /** What one mapping of a [[run]] did, in the order it did it. */
+  private final class MappingOutput {
+    val log = Seq.newBuilder[LogRow]
+    val processed = Seq.newBuilder[String]
+    val archived = Seq.newBuilder[String]
   }
 
   /** Append this run's log rows (with run start/end timestamps — the
@@ -441,7 +500,7 @@ object EtlPipeline {
                     deleteTs: String): RunReport = {
     val runStart = new java.sql.Timestamp(System.currentTimeMillis())
     var wm = loadTsWatermarks(spark, warehouseDir)
-    val logRows = Seq.newBuilder[(Long, String, Long, Long, Long)]
+    val logRows = Seq.newBuilder[LogRow]
 
     feeds.foreach { f =>
       val m = f.mapping
@@ -451,23 +510,29 @@ object EtlPipeline {
         case Some(u) => coalesce(col(u), col(f.createCol))
         case None    => col(f.createCol)
       }
+      // the staged count and the next watermark (etl.py:100-106, the
+      // newest staged change) are observed in the merge write itself
       val stg = stage(f.source, f.createCol, f.updateCol, watermark)
         .select((m.key +: m.payload).map(col) :+
           changeTs.cast("timestamp").as("create_dt"): _*)
-        .persist()
-      logRows += ((runId, s"stg_${m.targetName}", stg.count(), 0L, 0L))
+      val staged = new Staged(stg, "next_wm" -> max(col("create_dt")))
       // full key list: a column-pruned scan of the source (stg_del)
       val liveness = if (m.scd == 2) Scd.KeyList(f.source.select(m.key))
                      else Scd.SnapshotStg
-      mergeInto(spark, warehouseDir, m, stg, runId, deleteTs, liveness, logRows)
-      // advance the watermark to the newest staged change
-      // (etl.py:100-106), rendered in UTC explicitly —
-      // Timestamp.toString would use the JVM-default timezone while the
-      // session (which re-parses it next run) is UTC, silently shifting
-      // the watermark and skipping rows on tz-offset drivers
-      val mx = Incremental.nextWatermark(stg, "create_dt").collect()(0)
-      if (!mx.isNullAt(0)) wm += (m.targetName -> utcString(mx.getTimestamp(0)))
-      stg.unpersist(blocking = false)
+      val merged = mergeInto(spark, warehouseDir, m, staged.frame, runId, deleteTs, liveness)
+      logRows += ((runId, s"stg_${m.targetName}", staged.rows, 0L, 0L))
+      logRows += merged
+      // Only the merge's own observation may move the watermark. A source
+      // is live (a JDBC table), so recomputing max(create_dt) with a read
+      // of its own could cover rows committed after the merge read it and
+      // skip them for good; an unobserved feed keeps its watermark, and
+      // the rows it re-stages next run merge idempotently. The watermark
+      // is rendered in UTC explicitly — Timestamp.toString would use the
+      // JVM-default timezone while the session (which re-parses it next
+      // run) is UTC, silently shifting the watermark and skipping rows on
+      // tz-offset drivers.
+      staged.observedRow.flatMap(r => Option(r.getAs[java.sql.Timestamp]("next_wm")))
+        .foreach(ts => wm += (m.targetName -> utcString(ts)))
       // persist per feed, same reasoning as the file loop
       saveTsWatermarks(spark, warehouseDir, wm)
     }
@@ -515,11 +580,10 @@ object EtlPipeline {
           if (!alreadyDone) {
             val runStart = new java.sql.Timestamp(System.currentTimeMillis())
             val stg = batch.persist()
-            val logRows = Seq.newBuilder[(Long, String, Long, Long, Long)]
-            logRows += ((batchId, marker, 0L, 0L, 0L))
-            mergeInto(spark, warehouseDir, m, stg, batchId,
-              deleteTs = "9999-12-31 00:00:00", Scd.NoDeletes, logRows)
-            writeRunLog(spark, warehouseDir, logRows.result(), runStart)
+            val merged = mergeInto(spark, warehouseDir, m, stg, batchId,
+              deleteTs = "9999-12-31 00:00:00", Scd.NoDeletes)
+            writeRunLog(spark, warehouseDir,
+              Seq((batchId, marker, 0L, 0L, 0L), merged), runStart)
             stg.unpersist(blocking = false)
           }
         }
@@ -562,7 +626,7 @@ object EtlPipeline {
     requireValidTarget(m.targetName)
     val runStart = new java.sql.Timestamp(System.currentTimeMillis())
     val path = s"$quarantineDir/${m.targetName}"
-    val logRows = Seq.newBuilder[(Long, String, Long, Long, Long)]
+    val logRows = Seq.newBuilder[LogRow]
     val fs = hadoopFs(spark, path)
     requireNoOrphanStage(spark, path)
     if (fs.exists(new Path(path))) {
@@ -619,9 +683,9 @@ object EtlPipeline {
           val stg = current.select(
             (m.key +: m.payload).map(col) :+
               col("create_dt").cast("timestamp").as("create_dt"): _*).persist()
-          mergeInto(spark, warehouseDir,
+          logRows += mergeInto(spark, warehouseDir,
             TableMapping(m.template, m.targetName, m.key, m.payload, m.scd),
-            stg, runId, deleteTs = "9999-12-31 00:00:00", Scd.NoDeletes, logRows)
+            stg, runId, deleteTs = "9999-12-31 00:00:00", Scd.NoDeletes)
           stg.unpersist(blocking = false)
         }
         // replayed AND superseded rows both leave; only still-invalid stay
@@ -646,36 +710,84 @@ object EtlPipeline {
       s"target name '$name' starts with a reserved run-log prefix " +
         s"(${ReservedPrefixes.mkString(", ")}) — pick another name")
 
-  /** Shared merge→log→snapshot-swap step for both the file and the
-    * database loops.
+  /** Shared merge→log→snapshot-swap step for every loop: ONE SQL
+    * execution writes the merged table, and the run-log counts are
+    * observed on the written frame (nothing is cached, no DAG runs
+    * twice). Any [[Observation]] on `stg` completes in the same write.
+    * Returns the target's run-log row.
     */
   private def mergeInto(spark: SparkSession, warehouseDir: String,
                         m: TableMapping, stg: DataFrame, runId: Long,
-                        deleteTs: String, liveness: Scd.Liveness,
-                        logRows: scala.collection.mutable.Builder[
-                          (Long, String, Long, Long, Long),
-                          Seq[(Long, String, Long, Long, Long)]]): Unit = {
+                        deleteTs: String, liveness: Scd.Liveness): LogRow = {
     val targetPath = s"$warehouseDir/${m.targetName}"
+    // the empty target is built from the schema, not derived from stg: a
+    // second copy of an observed stg in the plan would observe it twice
+    val stgCols = stg.select((m.key +: m.payload).map(col): _*).schema.fields.toSeq
+    val emptyCols =
+      if (m.scd == 2) stgCols ++ Seq(
+        StructField("effective_from", TimestampType),
+        StructField("effective_to", TimestampType),
+        StructField("deleted_flg", BooleanType, nullable = false))
+      else stgCols
     val dwh = readTargetOrEmpty(spark, targetPath,
-      if (m.scd == 2)
-        stg.select((m.key +: m.payload).map(col): _*).limit(0)
-          .withColumn("effective_from", lit(null).cast("timestamp"))
-          .withColumn("effective_to", lit(null).cast("timestamp"))
-          .withColumn("deleted_flg", lit(false))
-      else stg.select((m.key +: m.payload).map(col): _*).limit(0))
-    val merged = ((m.scd, liveness) match {
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType(emptyCols)))
+    val merged = (m.scd, liveness) match {
       case (1, _)                   => Scd.scd1Merge(dwh, stg, m.key, m.payload)
       case (2, Scd.KeyList(lk))     => Scd.scd2MergeIncremental(dwh, stg, lk, m.key, m.payload, deleteTs)
       case (2, Scd.SnapshotStg)     => Scd.scd2Merge(dwh, stg, m.key, m.payload, deleteTs)
       case (2, Scd.NoDeletes)       => Scd.scd2MergeNoDeletes(dwh, stg, m.key, m.payload)
       case (other, _)               => throw new IllegalArgumentException(s"unsupported scd=$other")
-    }).persist()
-    val lr = runLog(runId, m.targetName, merged, m.scd).collect()(0)
-    logRows += ((runId, m.targetName, lr.getAs[Long]("rows_inserted"),
-      lr.getAs[Long]("rows_updated"), lr.getAs[Long]("rows_deleted")))
-    writeSwap(if (m.scd == 1) merged.drop("action") else merged, targetPath)
-    merged.unpersist(blocking = false)
+    }
+    val counted = Observation()
+    val cols = mergeCounts(m.scd)
+    val written = merged.observe(counted, cols.head, cols.tail: _*)
+    writeSwap(if (m.scd == 1) written.drop("action") else written, targetPath)
+    val c = observedRow(counted, "rows_inserted", "rows_updated", "rows_deleted")
+    (runId, m.targetName, c.getLong(0), c.getLong(1), c.getLong(2))
   }
+
+  /** The stage's row count, plus any named `metrics`, observed on
+    * `frame` as the merge writes it. When the stage produced no rows,
+    * adaptive execution may replace its side of the merge join with an
+    * empty relation, which drops the observed node from the executed
+    * plan and leaves [[observedRow]] empty. [[rows]] then recounts the
+    * stage with an action of its own — a missing count is recounted,
+    * never read as 0; the other metrics stay unobserved.
+    */
+  private final class Staged(stg: DataFrame, metrics: (String, Column)*) {
+    private val obs = Observation()
+    val frame: DataFrame = stg.observe(obs, count(lit(1)).as("rows"),
+      metrics.map { case (n, c) => c.as(n) }: _*)
+    lazy val observedRow: Option[Row] = observed(obs, "rows" +: metrics.map(_._1))
+    def rows: Long = observedRow.fold(stg.count())(_.getAs[Long]("rows"))
+  }
+
+  /** The row an [[Observation]] collected in an execution that has
+    * already returned. Metrics reach the Observation through the
+    * session's listener bus, so this waits for them — bounded, since a
+    * lost event must fail the run rather than hang it. A requested name
+    * missing from the row (its node was optimized out of the executed
+    * plan, which completes the Observation empty) throws: an unobserved
+    * count is unknown, never 0.
+    */
+  private[graft] def observedRow(obs: Observation, names: String*): Row =
+    observed(obs, names).getOrElse(throw new IllegalStateException(
+      s"observed metrics ${names.mkString(", ")} missing from the executed plan"))
+
+  /** The observed row, or None when any of `names` is missing from it. */
+  private def observed(obs: Observation, names: Seq[String]): Option[Row] = {
+    val row =
+      try scala.concurrent.Await.result(obs.future, ObservedWait)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(
+            s"observation ${obs.name} not delivered within $ObservedWait")
+      }
+    val have = Option(row.schema).map(_.fieldNames.toSet).getOrElse(Set.empty[String])
+    if (names.forall(have)) Some(row) else None
+  }
+
+  private val ObservedWait = scala.concurrent.duration.Duration(5, "min")
 
   /** Business date from `name_DDMMYYYY.ext` — the shared definition. */
   def businessDate(path: String): java.time.LocalDate =

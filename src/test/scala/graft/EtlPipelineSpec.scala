@@ -95,6 +95,197 @@ class EtlPipelineSpec extends SparkSpec {
     assert(fullLog.filter(col("run_id") === 2).count() == 4)
   }
 
+  private def storedWatermarks(wh: String): Map[String, String] =
+    spark.read.parquet(s"$wh/etl_watermark").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  test("targets merge concurrently; one target's mappings keep mapping order") {
+    val inbox = Files.createTempDirectory("graft_cc_in").toString
+    val wh = Files.createTempDirectory("graft_cc_wh").toString
+    // two feeds into ONE target: the second's fresh-file filter must see
+    // the watermark the first advanced, so its same-date file is skipped
+    val mappings = Seq(
+      FileMapping("fxa_*.csv", "dwh_fx", "cur", Seq("rate"), scd = 1),
+      FileMapping("terms_*.csv", "dwh_cc_terms", "term_id", Seq("city"), scd = 2),
+      FileMapping("fxb_*.csv", "dwh_fx", "cur", Seq("rate"), scd = 1),
+      FileMapping("limits_*.csv", "dwh_cc_limits", "acct", Seq("lim"), scd = 1))
+    val fxa = mkFile(inbox, "fxa_01012024.csv", "cur;rate\nUSD;1\nEUR;2\n")
+    mkFile(inbox, "fxb_01012024.csv", "cur;rate\nUSD;9\n")
+    val fxb2 = mkFile(inbox, "fxb_02012024.csv", "cur;rate\nUSD;3\nGBP;4\n")
+    val terms = mkFile(inbox, "terms_01012024.csv", "term_id;city\nT1;Moscow\nT2;Kazan\n")
+    val limits = mkFile(inbox, "limits_01012024.csv", "acct;lim\nA1;10\n")
+
+    val r = EtlPipeline.run(spark, inbox, wh, mappings, runId = 91, archiveFiles = false)
+    assert(r.processedFiles.map(Paths.get(_).getFileName.toString) ===
+      Seq(fxa, terms, fxb2, limits).map(Paths.get(_).getFileName.toString),
+      "processed files come out in mapping order; fxb's 01 file is behind fxa's watermark")
+    assert(r.log.collect().map(_.getString(1)).toSeq === Seq(
+      "stg_dwh_fx", "dwh_fx", "stg_dwh_cc_terms", "dwh_cc_terms",
+      "stg_dwh_fx", "dwh_fx", "stg_dwh_cc_limits", "dwh_cc_limits"),
+      "run-log rows come out in mapping order")
+    val fx = spark.read.parquet(s"$wh/dwh_fx").collect()
+      .map(x => x.getString(0) -> x.getString(1)).toMap
+    assert(fx === Map("USD" -> "3", "EUR" -> "2", "GBP" -> "4"),
+      "fxb's 02 file merged after fxa's 01 file")
+    val fxLogs = r.log.filter(col("table_name") === "dwh_fx").collect()
+    assert(fxLogs.map(x => (x.getLong(2), x.getLong(3))).toSeq === Seq((2L, 0L), (1L, 1L)))
+    assert(storedWatermarks(wh) === Map("dwh_fx" -> "2024-01-02",
+      "dwh_cc_terms" -> "2024-01-01", "dwh_cc_limits" -> "2024-01-01"))
+  }
+
+  test("a failing target surfaces its own exception after the other targets finish") {
+    val inbox = Files.createTempDirectory("graft_ccf_in").toString
+    val wh = Files.createTempDirectory("graft_ccf_wh").toString
+    // mapping 0's target has an orphaned swap stage (IllegalStateException);
+    // mapping 3 has two files on one business date (IllegalArgumentException)
+    Files.createDirectories(Paths.get(s"$wh/dwh_orphan__stage"))
+    val mappings = Seq(
+      FileMapping("orphan_*.csv", "dwh_orphan", "k", Seq("v"), scd = 1),
+      FileMapping("rates_*.csv", "dwh_ccf_rates", "cur", Seq("rate"), scd = 1),
+      FileMapping("terms_*.csv", "dwh_ccf_terms", "term_id", Seq("city"), scd = 2),
+      FileMapping("dup*_*.csv", "dwh_dup", "k", Seq("v"), scd = 1))
+    mkFile(inbox, "orphan_01012024.csv", "k;v\nK1;1\n")
+    mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;1\n")
+    mkFile(inbox, "rates_02012024.csv", "cur;rate\nUSD;2\n")
+    mkFile(inbox, "terms_01012024.csv", "term_id;city\nT1;Moscow\n")
+    mkFile(inbox, "dupa_01012024.csv", "k;v\nK1;1\n")
+    mkFile(inbox, "dupb_01012024.csv", "k;v\nK1;2\n")
+
+    val e = intercept[IllegalStateException] {
+      EtlPipeline.run(spark, inbox, wh, mappings, runId = 92, archiveFiles = false)
+    }
+    assert(e.getMessage.contains("interrupted"),
+      "the first failure in mapping order surfaces as thrown, not wrapped")
+    assert(spark.read.parquet(s"$wh/dwh_ccf_rates").collect()
+      .map(x => x.getString(0) -> x.getString(1)).toMap === Map("USD" -> "2"),
+      "the other targets ran all their files")
+    assert(spark.read.parquet(s"$wh/dwh_ccf_terms").count() === 1L)
+    assert(storedWatermarks(wh) === Map("dwh_ccf_rates" -> "2024-01-02",
+      "dwh_ccf_terms" -> "2024-01-01"), "every swapped table has its watermark stored")
+    assert(!Files.exists(Paths.get(s"$wh/dwh_dup")) && !Files.exists(Paths.get(s"$wh/dwh_orphan")))
+    assert(!Files.exists(Paths.get(s"$wh/etl_run_log")), "a failed run logs nothing")
+  }
+
+  test("header-only and all-rejected deliveries log stg_ = 0 with the merge's counts") {
+    val inbox = Files.createTempDirectory("graft_obs_in").toString
+    val wh = Files.createTempDirectory("graft_obs_wh").toString
+    val qdir = Files.createTempDirectory("graft_obs_qtn").toString
+    val mappings = Seq(
+      FileMapping("rates_*.csv", "dwh_obs_rates", "cur", Seq("rate"), scd = 1,
+        decimalCols = Seq("rate")),
+      FileMapping("terms_*.csv", "dwh_obs_terms", "term_id", Seq("fee"), scd = 2,
+        decimalCols = Seq("fee")),
+      FileMapping("caps_*.csv", "dwh_obs_caps", "k", Seq("cap"), scd = 1,
+        decimalCols = Seq("cap")))
+    mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;1,5\nEUR;2,5\n")
+    mkFile(inbox, "terms_01012024.csv", "term_id;fee\nT1;1,0\nT2;2,0\n")
+    // all rejected on the table's first day: the target appears empty
+    mkFile(inbox, "caps_01012024.csv", "k;cap\nK1;zz\nK2;yy\n")
+    val r1 = EtlPipeline.run(spark, inbox, wh, mappings, runId = 93,
+      quarantineDir = Some(qdir))
+    def counts(r: EtlPipeline.RunReport, t: String) = {
+      val x = logRow(r, t); (x.getLong(2), x.getLong(3), x.getLong(4))
+    }
+    assert(counts(r1, "stg_dwh_obs_caps") === ((0L, 0L, 0L)))
+    assert(counts(r1, "qtn_dwh_obs_caps") === ((2L, 0L, 0L)))
+    assert(counts(r1, "dwh_obs_caps") === ((0L, 0L, 0L)))
+    assert(spark.read.parquet(s"$wh/dwh_obs_caps").isEmpty)
+
+    // day 2: header-only snapshots for the scd1 and scd2 tables, an
+    // all-rejected one against the existing scd2 history
+    mkFile(inbox, "rates_02012024.csv", "cur;rate\n")
+    mkFile(inbox, "terms_02012024.csv", "term_id;fee\n")
+    val r2 = EtlPipeline.run(spark, inbox, wh, mappings.take(2), runId = 94,
+      quarantineDir = Some(qdir))
+    assert(counts(r2, "stg_dwh_obs_rates") === ((0L, 0L, 0L)))
+    assert(counts(r2, "dwh_obs_rates") === ((0L, 0L, 0L)), "scd1 keeps absent keys")
+    assert(counts(r2, "stg_dwh_obs_terms") === ((0L, 0L, 0L)))
+    // an empty snapshot closes both live versions and tombstones both keys
+    assert(counts(r2, "dwh_obs_terms") === ((2L, 0L, 2L)))
+    mkFile(inbox, "terms_03012024.csv", "term_id;fee\nT1;xx\nT2;yy\n")
+    val r3 = EtlPipeline.run(spark, inbox, wh, mappings.slice(1, 2), runId = 95,
+      quarantineDir = Some(qdir))
+    assert(counts(r3, "stg_dwh_obs_terms") === ((0L, 0L, 0L)))
+    assert(counts(r3, "qtn_dwh_obs_terms") === ((2L, 0L, 0L)))
+    // the quarantined keys are live: the tombstones stay, nothing new dies
+    assert(counts(r3, "dwh_obs_terms") === ((2L, 0L, 2L)))
+    assert(spark.read.parquet(s"$wh/dwh_obs_rates").count() === 2L)
+  }
+
+  test("an observed metric missing from the executed plan throws instead of reading 0") {
+    val gone = org.apache.spark.sql.Observation()
+    // a false filter prunes the observed node from the optimized plan
+    assert(spark.range(5).observe(gone, count(lit(1)).as("n"))
+      .filter(lit(false)).collect().isEmpty)
+    intercept[IllegalStateException](EtlPipeline.observedRow(gone, "n"))
+    val seen = org.apache.spark.sql.Observation()
+    spark.range(5).observe(seen, count(lit(1)).as("n")).collect()
+    assert(EtlPipeline.observedRow(seen, "n").getLong(0) === 5L)
+    intercept[IllegalStateException](EtlPipeline.observedRow(seen, "n", "rows"))
+  }
+
+  test("a three-mapping day caches nothing and fires a bounded number of jobs") {
+    val inbox = Files.createTempDirectory("graft_jb_in").toString
+    val wh = Files.createTempDirectory("graft_jb_wh").toString
+    val qdir = Files.createTempDirectory("graft_jb_qtn").toString
+    val mappings = Seq(
+      FileMapping("clients_*.csv", "dwh_jb_clients", "client_id", Seq("segment", "balance"),
+        scd = 2, decimalCols = Seq("balance")),
+      FileMapping("limits_*.csv", "dwh_jb_limits", "account_id", Seq("credit_limit"),
+        scd = 1, decimalCols = Seq("credit_limit")),
+      FileMapping("txn_*.jsonl", "dwh_jb_txn", "txn_id", Seq("client_id", "amount"),
+        scd = 1, decimalCols = Seq("amount")))
+    def deliver(day: Int, clients: String, limits: String, txn: String): Unit = {
+      mkFile(inbox, f"clients_$day%02d012024.csv", "client_id;segment;balance\n" + clients)
+      mkFile(inbox, f"limits_$day%02d012024.csv", "account_id;credit_limit\n" + limits)
+      mkFile(inbox, f"txn_$day%02d012024.jsonl", txn)
+    }
+    deliver(1, "C1;retail;10,5\nC2;vip;20,0\nC3;retail;1,0\n", "A1;100\nA2;200\n",
+      """{"txn_id":"X1","client_id":"C1","amount":"5,0"}""" + "\n")
+    EtlPipeline.run(spark, inbox, wh, mappings, runId = 96, quarantineDir = Some(qdir))
+    // the measured day merges against existing tables and quarantines
+    // one reject per delivery
+    deliver(2, "C1;vip;10,5\nC2;vip;zz\nC4;retail;3,0\n", "A1;150\nA3;300\n;9\n",
+      """{"txn_id":"X2","client_id":"C2","amount":"7,5"}""" + "\n" +
+        """{"txn_id":"X3","client_id":"C4","amount":""" + "\n")
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val blocks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onBlockUpdated(
+          b: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
+        if (b.blockUpdatedInfo.blockId.isRDD && b.blockUpdatedInfo.storageLevel.isValid) {
+          blocks.incrementAndGet(); ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val r = try {
+      val res = EtlPipeline.run(spark, inbox, wh, mappings, runId = 97,
+        quarantineDir = Some(qdir))
+      org.apache.spark.graftbridge.TestListenerBridge
+        .waitUntilListenerBusEmpty(spark.sparkContext)
+      res
+    } finally spark.sparkContext.removeSparkListener(listener)
+
+    assert(r.processedFiles.size === 3)
+    assert(r.log.collect().map(_.getString(1)).toSeq === Seq(
+      "qtn_dwh_jb_clients", "stg_dwh_jb_clients", "dwh_jb_clients",
+      "qtn_dwh_jb_limits", "stg_dwh_jb_limits", "dwh_jb_limits",
+      "qtn_dwh_jb_txn", "stg_dwh_jb_txn", "dwh_jb_txn"))
+    assert(blocks.get() === 0, "no frame of the merge loop may be cached")
+    // measured at 31 jobs: per file the reject count, the quarantine
+    // append and one merge write (stage and log counts observed in it),
+    // plus watermark, run-log and schema reads and AQE's per-stage
+    // sub-jobs. Caching the stage and the merge and counting them with
+    // actions of their own fired 49 jobs and stored 16 RDD blocks.
+    assert(jobs.get() <= 31,
+      s"the day fired ${jobs.get()} jobs — has a merge started running its DAG twice?")
+  }
+
   test("random daily deliveries: warehouse PIT reproduces every delivered snapshot") {
     // The file-loop totality property (end-to-end sibling of
     // ScdPropertySpec's operator-level fold): deliver random daily
@@ -622,6 +813,58 @@ class EtlPipelineSpec extends SparkSpec {
     assert(t == Map("USD" -> 92.0, "EUR" -> 99.1))
   }
 
+  test("from-database watermark never moves past rows the merge did not read") {
+    val s = spark
+    import s.implicits._
+    val wh = Files.createTempDirectory("graft_whdb_live").toString
+    def ts(x: String) = java.sql.Timestamp.valueOf(x)
+    def feed(src: org.apache.spark.sql.DataFrame) = Seq(EtlPipeline.TableFeed(
+      TableMapping("rates", "dwh_live_rates", "cur", Seq("rate"), 1), src, updateCol = None))
+    def rates() = spark.read.parquet(s"$wh/dwh_live_rates").collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    def storedWm() = spark.read.parquet(s"$wh/etl_watermark_ts").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    EtlPipeline.runFromTables(spark, wh,
+      feed(Seq(("USD", 90.5, ts("2024-01-01 08:00:00"))).toDF("cur", "rate", "create_dt")),
+      1, "2024-01-02 00:00:00")
+    val wm1 = storedWm()
+
+    // a live source: its only row commits after the merge's read, so the
+    // merge stages nothing and every later read sees the new row
+    LiveSource.reads.set(0)
+    val live = spark.range(1).select(lit("USD").as("cur"), lit(92.0).as("rate"),
+      LiveSource.createDt().as("create_dt"))
+    val r2 = EtlPipeline.runFromTables(spark, wh, feed(live), 2, "2024-01-03 00:00:00")
+    assert(logRow(r2, "dwh_live_rates").getAs[Long]("rows_updated") === 0L)
+    assert(rates() === Map("USD" -> 90.5))
+    assert(storedWm() === wm1, "the watermark stays behind the row the merge never saw")
+
+    val r3 = EtlPipeline.runFromTables(spark, wh, feed(live), 3, "2024-01-04 00:00:00")
+    assert(logRow(r3, "stg_dwh_live_rates").getAs[Long]("rows_inserted") === 1L)
+    assert(rates() === Map("USD" -> 92.0), "the late row merges on the next run")
+    assert(storedWm()("dwh_live_rates").startsWith("2024-01-03"))
+  }
+
+  test("a mapping resolves staged columns case-insensitively on a new target") {
+    val s = spark
+    import s.implicits._
+    val inDir = Files.createTempDirectory("graft_smc_in").toString
+    val wh = Files.createTempDirectory("graft_smc_wh").toString
+    // Derby-style uppercase column names under a lowercase mapping; a
+    // stream's batches reach the merge without a re-select
+    Seq((1L, 10.0)).toDF("ID", "BAL").coalesce(1).write.mode("append").parquet(inDir)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("ID", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("BAL", org.apache.spark.sql.types.DoubleType)))
+    val q = EtlPipeline.streamingMerge(spark.readStream.schema(schema).parquet(inDir), wh,
+      TableMapping("stream", "dwh_case_cust", "id", Seq("bal"), scd = 1))
+    try {
+      q.processAllAvailable()
+      assert(spark.read.parquet(s"$wh/dwh_case_cust").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap === Map(1L -> 10.0))
+    } finally q.stop()
+  }
+
   test("streaming merge upserts each micro-batch into the warehouse") {
     val s = spark
     import s.implicits._
@@ -738,4 +981,17 @@ class EtlPipelineSpec extends SparkSpec {
     assert(log.getAs[Long]("rows_deleted") == 5)
     assert(res.merged.filter(col("deleted_flg")).count() == 5)
   }
+}
+
+/** A one-row source whose change timestamp moves after its first read:
+  * the first evaluation sees the row as already loaded, every later one
+  * as changed on 2024-01-03. Static, so the executor-side UDF and the
+  * test share one counter in local mode.
+  */
+private object LiveSource {
+  val reads = new java.util.concurrent.atomic.AtomicInteger()
+  val createDt = udf { () =>
+    java.sql.Timestamp.valueOf(
+      if (reads.getAndIncrement() == 0) "2024-01-01 08:00:00" else "2024-01-03 08:00:00")
+  }.asNondeterministic()
 }

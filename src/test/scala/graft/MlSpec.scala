@@ -55,4 +55,19 @@ class MlSpec extends SparkSpec {
     assert(byLabel(1.0) > byLabel(0.0),
       s"labeled-fraud mean prob ${byLabel(1.0)} must exceed clean ${byLabel(0.0)}")
   }
+
+  test("scoring and evaluation run after an Observation in the session") {
+    // the first Observation gives the session a non-serializable
+    // observation manager; a model that kept its training summary (and
+    // through it the session) then fails its transform closures
+    val obs = org.apache.spark.sql.Observation()
+    spark.range(3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") === 3L)
+    // a training cap of its own keys a fresh fit after the observation
+    val cap = 999983L
+    val n = graft.sources.Tables.events(spark, sf).count()
+    assert(graft.ml.FraudScorer.score(spark, sf, trainSampleCap = cap).count() === n)
+    val m = graft.ml.FraudScorer.evaluate(spark, sf, trainSampleCap = cap).collect()(0)
+    assert(m.getAs[Long]("n_train") + m.getAs[Long]("n_test") === n)
+  }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 object ProbeQ85 {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/testdata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
