@@ -12,79 +12,32 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q20_fraud_report")(spark, "/root/testdata/sf0.001")
 
+  /** The query modules, folded into [[queries]] and [[oracleSql]]. */
+  val modules: Seq[graft.queries.QuerySet] = {
+    import graft.queries._
+    Seq(CoreQueries, ScdQueries, FraudQueries, DedupQueries, TextQueries,
+      OlapQueries, ExtendedQueries, PipelineQueries, AnalyticsQueries,
+      CorpusQueries, PrivacyQueries, CurationQueries, SignalQueries,
+      ValidationQueries, AuditQueries, NoveltyQueries, PqQueries,
+      RiskQueries, MarketQueries, ServingQueries, OpsQueries, SeriesQueries,
+      InfoQueries)
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.CoreQueries.queries ++
-      graft.queries.ScdQueries.queries ++
-      graft.queries.FraudQueries.queries ++
-      graft.queries.DedupQueries.queries ++
-      graft.queries.TextQueries.queries ++
-      graft.queries.OlapQueries.queries ++
-      graft.queries.ExtendedQueries.queries ++
-      graft.queries.PipelineQueries.queries ++
-      graft.queries.AnalyticsQueries.queries ++
-      graft.queries.CorpusQueries.queries ++
-      graft.queries.PrivacyQueries.queries ++
-      graft.queries.CurationQueries.queries ++
-      graft.queries.SignalQueries.queries ++
-      graft.queries.ValidationQueries.queries ++
-      graft.queries.AuditQueries.queries ++
-      graft.queries.NoveltyQueries.queries ++
-      graft.queries.PqQueries.queries ++
-      graft.queries.RiskQueries.queries ++
-      graft.queries.MarketQueries.queries ++
-      graft.queries.ServingQueries.queries ++
-      graft.queries.OpsQueries.queries ++
-      graft.queries.SeriesQueries.queries ++
-      graft.queries.InfoQueries.queries
+    modules.foldLeft(Map.empty[String, (SparkSession, String) => DataFrame])(_ ++ _.queries)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
   def oracleSql: Map[String, String] =
-    graft.queries.CoreQueries.oracle ++
-      graft.queries.ScdQueries.oracle ++
-      graft.queries.FraudQueries.oracle ++
-      graft.queries.DedupQueries.oracle ++
-      graft.queries.TextQueries.oracle ++
-      graft.queries.OlapQueries.oracle ++
-      graft.queries.ExtendedQueries.oracle ++
-      graft.queries.PipelineQueries.oracle ++
-      graft.queries.AnalyticsQueries.oracle ++
-      graft.queries.CorpusQueries.oracle ++
-      graft.queries.PrivacyQueries.oracle ++
-      graft.queries.CurationQueries.oracle ++
-      graft.queries.SignalQueries.oracle ++
-      graft.queries.ValidationQueries.oracle ++
-      graft.queries.AuditQueries.oracle ++
-      graft.queries.NoveltyQueries.oracle ++
-      graft.queries.RiskQueries.oracle ++
-      graft.queries.MarketQueries.oracle ++
-      graft.queries.ServingQueries.oracle ++
-      graft.queries.OpsQueries.oracle ++
-      graft.queries.SeriesQueries.oracle ++
-      graft.queries.InfoQueries.oracle
+    modules.foldLeft(Map.empty[String, String])(_ ++ _.oracle)
 
-  /** Release every cache-tracker-owned persisted intermediate (the
-    * dedup/similarity operators' shingle streams and pair frames, the
-    * query objects' session-shared memo frames). End-of-sweep hygiene
-    * for the long-lived harness mains (Bench/Verify) and any caller
-    * moving between corpora — results already computed are unaffected;
-    * un-executed lazy plans recompute.
+  /** Release every cache-tracker-owned persisted intermediate and
+    * session memo ([[graft.util.CacheTracker.releaseAll]]). End-of-sweep
+    * hygiene for the long-lived harness mains (Bench/Verify) and any
+    * caller moving between corpora — results already computed are
+    * unaffected; un-executed lazy plans recompute.
     */
-  def releaseAllCaches(): Unit = {
-    graft.operators.Dedup.releaseCaches()
-    graft.operators.Similarity.releaseCaches()
-    graft.queries.DedupQueries.releaseCaches()
-    graft.queries.AnalyticsQueries.releaseCaches()
-    graft.queries.MarketQueries.releaseCaches()
-    graft.queries.TextQueries.releaseCaches()
-    graft.queries.CurationQueries.releaseCaches()
-    graft.queries.PipelineQueries.releaseCaches()
-    graft.queries.SignalQueries.releaseCaches()
-    graft.queries.RiskQueries.releaseCaches()
-    graft.ml.FraudScorer.releaseCaches()
-    graft.operators.Importance.releaseCaches()
-    graft.operators.ProductQuant.releaseCaches()
-  }
+  def releaseAllCaches(): Unit = graft.util.CacheTracker.releaseAll()
 }

@@ -1281,18 +1281,19 @@ object Dedup {
     math.max(64L * 1024 * 1024, heap / 24)
   }
 
-  // Cache ownership: the near-dup pipelines persist small derived frames
-  // (shingle stream, banded signatures, simhash chunks) that their
-  // self-joins would otherwise recompute. Policy lives in the shared
-  // [[graft.util.CacheTracker]].
+  // Cache ownership ([[graft.util.CacheTracker]]): the near-dup
+  // pipelines persist small derived frames (shingle stream, banded
+  // signatures, simhash chunks) that their self-joins would otherwise
+  // recompute; the hot-bucket census is a session memo.
   private val caches = new graft.util.CacheTracker
 
   private def trackPersist(df: DataFrame): DataFrame = caches.trackPersist(df)
 
   /** Unpersist every intermediate frame cached by [[lshVerifiedPairs]],
     * [[minhashLshPairs]], [[simhashPairs]] and [[embeddingLshPairs]] so
-    * far. Call between corpora in long-lived sessions; results already
-    * computed are unaffected, un-executed lazy plans recompute.
+    * far and drop the census memo. Call between corpora in long-lived
+    * sessions; results already computed are unaffected, un-executed
+    * lazy plans recompute.
     */
   def releaseCaches(): Unit = caches.release()
 
@@ -1604,8 +1605,8 @@ object Dedup {
     *
     * Memoized per (analyzed-plan, keys, dials) — retuning a dial
     * mid-session re-censuses rather than silently reusing the old
-    * pricing — and the memo is size-bounded (cleared past 64 entries)
-    * so a long-lived ingest session cannot accumulate driver state. An
+    * pricing; the memo's entry bound keeps a long-lived ingest session
+    * (a new batch plan per day) from accumulating driver state. An
     * index that GROWS under an unchanged plan (dedupIncrement appends
     * within one session) can under-salt later batches — a
     * task-granularity effect only, never a result change; restart the
@@ -1615,8 +1616,8 @@ object Dedup {
     * the pairs frame is not lazy, and the maxHotBuckets refusal throws
     * from the builder, not the first action.
     */
-  private val saltMemo = new java.util.concurrent.ConcurrentHashMap[
-    (Long, Long, Seq[String], Long, Long, Int), (Int, Seq[Long])]
+  private val saltMemo =
+    caches.memo[(Long, Long, Seq[String], Long, Long, Int), (Int, Seq[Long])]("salt_census")
   def saltForExplode(l: DataFrame, r: DataFrame, keys: Seq[String]): Int =
     hotCensus(l, r, keys)._1
   private[graft] def hotCensus(l: DataFrame, r: DataFrame,
@@ -1635,11 +1636,7 @@ object Dedup {
     // either rail) mid-session must re-census, not silently reuse the
     // old pricing
     val memoKey = (hash(l), hash(r), keys, target, volumeCap, maxHot)
-    // bound the memo so a long-lived ingest session (a new batch plan
-    // per day, each entry up to maxHotBuckets longs) cannot accumulate
-    // unbounded driver state: past the bound, drop and re-census
-    if (saltMemo.size > 64) saltMemo.clear()
-    saltMemo.computeIfAbsent(memoKey, { _ =>
+    saltMemo(l.sparkSession, memoKey) {
       def counts(df: DataFrame, as: String): DataFrame =
         df.groupBy(keys.map(col): _*).agg(count(lit(1)).as(as))
       val hot = counts(l, "__cl").join(counts(r, "__cr"), keys)
@@ -1661,7 +1658,7 @@ object Dedup {
         val g = math.min(1024L, math.max(1L, math.min(gPairs, gVolume))).toInt
         (g, hot.map(_.getLong(0)).toSeq)
       }
-    })
+    }
   }
 
   private def lshPairsFromSignatures(sig: DataFrame, idCol: String,

@@ -57,8 +57,7 @@ object Importance {
           .cast("long").as("score_micro"))
   }
 
-  // Cache ownership (the Dedup.releaseCaches contract): dsirScore
-  // persists its per-doc feature-count frame across three consumers.
+  // Cache ownership ([[graft.util.CacheTracker]]): dsirScore persists
+  // its per-doc feature-count frame across three consumers.
   private val caches = new graft.util.CacheTracker
-  def releaseCaches(): Unit = caches.release()
 }

@@ -32,10 +32,9 @@ object ProductQuant {
   case class Codebook(m: Int, k: Int, subDim: Int,
                       centroids: Array[Array[Array[Double]]])
 
-  // Cache ownership (the Dedup.releaseCaches contract): the session's
-  // PQ index codes frame. Released via SparkEntry.releaseAllCaches.
+  // Cache ownership ([[graft.util.CacheTracker]]): the session's PQ
+  // index codes frame.
   private val caches = new graft.util.CacheTracker
-  def releaseCaches(): Unit = { caches.release(); pqMemo.clear() }
 
   /** Session-shared PQ index memo — the [[Similarity]] ivfIndex posture:
     * a warehouse stores ONE PQ index (codebook + coded corpus) per
@@ -46,11 +45,10 @@ object ProductQuant {
     * local KMeans on a content-hash, lexicographically sorted sample),
     * so memoization cannot change any result. The corpus' canonicalized
     * plan hash + column names ride in the key (the r14 advisor's
-    * stale-index hazard); liveness mirrors ivfIndex: the codes frame
-    * must be registered AND bound to the calling session.
+    * stale-index hazard).
     */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String, String, Int, Int, Long), (Codebook, DataFrame)]()
+  private val pqMemo = caches.memo[(String, Int, String, String, Int, Int, Long),
+    (Codebook, DataFrame)]("pq_index", v => Seq(v._2))
 
   def pqIndex(corpus: DataFrame, idCol: String, vecCol: String,
               m: Int, k: Int, fitSampleCap: Long = 100000L,
@@ -60,21 +58,13 @@ object ProductQuant {
       case None =>
         val cb = build()
         (cb, encode(corpus, idCol, vecCol, cb))
-      case Some(key) => pqMemo.synchronized {
-        val s = corpus.sparkSession
+      case Some(key) =>
         val memoKey = (key, corpus.queryExecution.analyzed.semanticHash(),
           idCol, vecCol, m, k, fitSampleCap)
-        val cached = pqMemo.get(memoKey)
-        if (cached != null && (cached._2.sparkSession eq s) &&
-            cached._2.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          cached
-        else {
+        pqMemo(corpus.sparkSession, memoKey) {
           val cb = build()
-          val tracked = (cb, caches.trackPersist(encode(corpus, idCol, vecCol, cb)))
-          pqMemo.put(memoKey, tracked)
-          tracked
+          (cb, caches.trackPersist(encode(corpus, idCol, vecCol, cb)))
         }
-      }
     }
   }
 

@@ -19,6 +19,18 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
+  // Cache ownership ([[graft.util.CacheTracker]]): semDedup persists its
+  // corpus assignment (four consumers); the IVF index and the SemDeDup
+  // assignment are session memos.
+  private val caches = new graft.util.CacheTracker
+
+  /** Unpersist every intermediate frame cached by [[semDedup]] and drop
+    * the IVF and SemDeDup memos. Call between corpora in long-lived
+    * sessions; results already computed are unaffected, un-executed
+    * lazy plans recompute.
+    */
+  def releaseCaches(): Unit = caches.release()
+
   /** Exact top-k cosine neighbors for each probe (probe ≠ neighbor). */
   def bruteForceTopK(corpus: DataFrame, probes: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
@@ -92,15 +104,10 @@ object Similarity {
     * sweep (q49's search and q122's recall eval). Deterministic for a
     * fixed corpus (seeded fit on a content-hash-stable sample), so
     * memoization cannot change any result — the [[DedupQueries]]
-    * verifiedPairs precedent. The assigned frame is persisted via the
-    * cache tracker; [[releaseCaches]] drops cache AND memo. Liveness
-    * check mirrors verifiedPairs: a frame must be registered AND bound
-    * to the calling session (an external clearCache or a recreated
-    * session triggers a rebuild, which is plan-identical by the seeded
-    * determinism above).
+    * verifiedPairs precedent.
     */
-  private val ivfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, String, String, Int, Long), (DataFrame, DataFrame)]()
+  private val ivfMemo = caches.memo[(String, Int, String, String, Int, Long),
+    (DataFrame, DataFrame)]("ivf_index", v => Seq(v._1))
 
   private def ivfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int, fitSampleCap: Long,
@@ -113,8 +120,7 @@ object Similarity {
     }
     indexKey match {
       case None => build()
-      case Some(key) => ivfMemo.synchronized {
-        val s = corpus.sparkSession
+      case Some(key) =>
         // the corpus' CANONICALIZED plan hash + column names ride in the
         // memo key (r14 advisor): a future caller passing a filtered or
         // reshaped corpus under the same dir-derived key must get its own
@@ -123,17 +129,10 @@ object Similarity {
         // analyzed plans canonicalize identically and still share.
         val memoKey = (key, corpus.queryExecution.analyzed.semanticHash(),
           idCol, vecCol, nCells, fitSampleCap)
-        val cached = ivfMemo.get(memoKey)
-        if (cached != null && (cached._1.sparkSession eq s) &&
-            cached._1.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          cached
-        else {
+        ivfMemo(corpus.sparkSession, memoKey) {
           val (a, cents) = build()
-          val tracked = (caches.trackPersist(a), cents)
-          ivfMemo.put(memoKey, tracked)
-          tracked
+          (caches.trackPersist(a), cents)
         }
-      }
     }
   }
 
@@ -255,22 +254,15 @@ object Similarity {
       case None =>
         semDedupAssignment(corpus, idCol, vecCol, nClusters, fitSampleCap,
           maxClusterSize)
-      case Some(key) => semMemo.synchronized {
+      case Some(key) =>
         val s = corpus.sparkSession
         val memoKey = (key, corpus.queryExecution.analyzed.semanticHash(),
           idCol, vecCol, nClusters, fitSampleCap, maxClusterSize,
           Dedup.targetPairsPerTask(s))
-        val cached = semMemo.get(memoKey)
-        if (cached != null && (cached.sparkSession eq s) &&
-            cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-          cached
-        else {
-          val built = semDedupAssignment(corpus, idCol, vecCol, nClusters,
+        semMemo(s, memoKey) {
+          semDedupAssignment(corpus, idCol, vecCol, nClusters,
             fitSampleCap, maxClusterSize)
-          semMemo.put(memoKey, built)
-          built
         }
-      }
     }
     // both branches rename EVERY column (incl. the join key) so the
     // self-join cannot trip attribute-reference ambiguity
@@ -295,8 +287,9 @@ object Similarity {
   }
 
   /** Session-shared SemDeDup assignment memo — see [[semDedup]]. */
-  private val semMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String, String, Int, Long, Long, Long), DataFrame]()
+  private val semMemo = caches.memo[
+    (String, Int, String, String, Int, Long, Long, Long), DataFrame](
+    "semdedup_assignment", Seq(_))
 
   /** The (id, cell, cv, csim_micro) assignment frame behind [[semDedup]]:
     * quantizer fit, censused hot-cell residual splits, exact cell means,
@@ -438,19 +431,6 @@ object Similarity {
         .withColumn("csim_micro",
           floor(cosine(col("cv"), col("ctr")) * 1e6).cast("long"))
         .select(col("cell"), col(idCol), col("cv"), col("csim_micro")))
-  }
-
-  // Cache ownership: semDedup persists its corpus assignment (four
-  // consumers). Policy shared with Dedup via [[graft.util.CacheTracker]];
-  // call between corpora in long-lived sessions.
-  private val caches = new graft.util.CacheTracker
-
-  /** Unpersist every intermediate frame cached by [[semDedup]] so far.
-    * Results already computed are unaffected; un-executed lazy plans
-    * recompute.
-    */
-  def releaseCaches(): Unit = {
-    caches.release(); ivfMemo.clear(); semMemo.clear()
   }
 
   /** ANN via shared LSH bucket; exact cosine ranking within the bucket.

@@ -18,18 +18,13 @@ import graft.sources.Tables
   * iterative work (q88) touches the corpus once — iterations run on the
   * metadata-sized derived graph.
   */
-object AnalyticsQueries {
+object AnalyticsQueries extends QuerySet {
 
-  // Cache ownership (same contract as Dedup.releaseCaches, shared
-  // implementation in [[graft.util.CacheTracker]]): q88 persists its
-  // vocabulary-sized graph frames for the 3 iterative joins; a
-  // long-lived multi-corpus session releases them between corpora.
+  // Cache ownership ([[graft.util.CacheTracker]]): q88 persists its
+  // vocabulary-sized graph frames for the 3 iterative joins.
   private val caches = new graft.util.CacheTracker
 
   private def trackPersist(df: DataFrame): DataFrame = caches.trackPersist(df)
-
-  /** Unpersist every intermediate frame cached by [[q88]] so far. */
-  def releaseCaches(): Unit = caches.release()
 
   // --- q86: max concurrent intervals per day (sweep line). Each event
   // opens a half-open 30-minute activity interval [ts, ts+30m); the
@@ -606,7 +601,7 @@ object AnalyticsQueries {
     "q92_interarrival"  -> (q92 _),
     "q93_skew_profile"  -> (q93 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q161_last_error"      -> q161Sql,
     "q162_disorder_audit"  -> q162Sql,
     "q111_pareto_frontier" -> q111Sql,

@@ -22,7 +22,7 @@ import graft.sources.Tables
   * Benford's expected shares as shared literal constants (never an
   * engine's log10).
   */
-object AuditQueries {
+object AuditQueries extends QuerySet {
 
   /** FLOOR(1e6·log10(1+1/d)) for d = 1..9 — Benford's law as exact ppm
     * literals, shared verbatim by both compare sides so no engine ever
@@ -214,7 +214,7 @@ object AuditQueries {
     "q144_dormancy"  -> (q144 _),
     "q145_survival"  -> (q145 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q142_benford"   -> q142Sql,
     "q143_reconcile" -> q143Sql,
     "q144_dormancy"  -> q144Sql,

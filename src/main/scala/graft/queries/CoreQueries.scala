@@ -13,7 +13,7 @@ import graft.sources.Tables
   * engines and partition orders) and cast to double only in the final
   * projection, so the DuckDB oracle hashes identically.
   */
-object CoreQueries {
+object CoreQueries extends QuerySet {
 
   private val D = DecimalType(18, 2)
   /** Decimal-exact money sum surfaced as double. */
@@ -183,7 +183,7 @@ object CoreQueries {
     "q09_incremental"     -> (q09 _),
     "q10_dedup_exact"     -> (q10 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q01_pricing_summary" -> q01Sql,
     "q02_filter_pushdown" -> q02Sql,
     "q03_star_join"       -> q03Sql,

@@ -19,7 +19,7 @@ import graft.sources.Tables
   * side is metadata-sized), windows partition by bounded keys, and the
   * corpus is scanned once per query.
   */
-object CorpusQueries {
+object CorpusQueries extends QuerySet {
 
   private val ChunkTokens = 32
   private val ChunkStride = 16
@@ -529,7 +529,7 @@ object CorpusQueries {
     "q98_sliding_distinct" -> (q98 _),
     "q99_dataset_card"     -> (q99 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q158_dsir_score"      -> q158Sql,
     "q108_quantize_embed"  -> q108Sql,
     "q107_quantile_sketch" -> q107Sql,

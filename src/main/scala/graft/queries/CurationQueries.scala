@@ -25,14 +25,11 @@ import graft.sources.Tables
   * q47 pattern), and per-row imperative work (deflate, BPE merge loop)
   * stays in mapPartitions operators.
   */
-object CurationQueries {
+object CurationQueries extends QuerySet {
 
-  // Cache ownership (the Dedup.releaseCaches contract, shared
-  // implementation in [[graft.util.CacheTracker]]): q120 persists its
-  // bounded value histogram across its four consumers. Released
-  // session-wide via SparkEntry.releaseAllCaches.
+  // Cache ownership ([[graft.util.CacheTracker]]): q120 persists its
+  // bounded value histogram across its four consumers.
   private val caches = new graft.util.CacheTracker
-  def releaseCaches(): Unit = caches.release()
 
   /** BM25 probe query (Robertson/Spärck Jones; the Lucene-style idf).
     * Terms are data-independent literals, like q76's eval split.
@@ -724,7 +721,7 @@ object CurationQueries {
     "q120_mad_outliers"   -> (q120 _),
     "q121_containment"    -> (q121 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q128_changepoint"    -> q128Sql,
     "q126_gini"           -> q126Sql,
     "q127_heatmap"        -> q127Sql,

@@ -14,7 +14,7 @@ import graft.sources.Tables
   * TF-IDF scoring, and semi-structured JSON extraction. All eight are
   * oracle-checked.
   */
-object ExtendedQueries {
+object ExtendedQueries extends QuerySet {
 
   private val D = DecimalType(18, 2)
 
@@ -625,7 +625,7 @@ object ExtendedQueries {
     "q60_outliers"      -> (q60 _),
     "q61_moving_avg"    -> (q61 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q41_range_join"    -> q41Sql,
     "q42_window_suite"  -> q42Sql,
     "q43_percentiles"   -> q43Sql,

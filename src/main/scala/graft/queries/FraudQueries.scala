@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.pipeline.FraudMart
 
 /** Fraud mart queries (SURVEY.md §2, q16–q20) with DuckDB oracles. */
-object FraudQueries {
+object FraudQueries extends QuerySet {
 
   private val EvCte =
     "WITH ev AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
@@ -71,7 +71,7 @@ object FraudQueries {
     "q19_fraud_guessing"  -> ((s: SparkSession, d: String) => FraudMart.r4Guessing(s, d)),
     "q20_fraud_report"    -> ((s: SparkSession, d: String) => FraudMart.report(s, d)))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q16_fraud_blacklist" -> q16Sql,
     "q17_fraud_expired"   -> q17Sql,
     "q18_fraud_velocity"  -> q18Sql,

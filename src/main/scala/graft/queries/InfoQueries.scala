@@ -24,7 +24,7 @@ import graft.sources.Tables
   * emits the exact integer num/den of the least-squares slope
   * (beta = num/den, derivable exactly) instead of a double ratio.
   */
-object InfoQueries {
+object InfoQueries extends QuerySet {
 
   // --- q178: per-user event-type entropy — the behavior-regularity
   // score: a user whose events are one type (entropy 0) is an
@@ -206,7 +206,7 @@ object InfoQueries {
     "q180_heaps_fit" -> (q180 _),
     "q182_pmi_profile" -> (q182 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q178_user_entropy" -> q178Sql,
     "q179_char_entropy" -> q179Sql,
     "q180_heaps_fit" -> q180Sql,

@@ -19,14 +19,12 @@ import graft.sources.Tables
   * fixed-point integer DIV (the floor-ppm house convention — both
   * engines run the identical integer op sequence).
   */
-object MarketQueries {
+object MarketQueries extends QuerySet {
 
-  // Cache ownership (the Dedup.releaseCaches contract, shared
-  // implementation in [[graft.util.CacheTracker]]): q154 persists its
+  // Cache ownership ([[graft.util.CacheTracker]]): q154 persists its
   // basket frame across the order-census / part-count / pair-explode
-  // consumers. Released session-wide via SparkEntry.releaseAllCaches.
+  // consumers.
   private val caches = new graft.util.CacheTracker
-  def releaseCaches(): Unit = caches.release()
 
   // --- q152: price-dispersion audit per brand — list-price spread of a
   // brand's catalog plus its realized lineitem revenue. Shape: part is
@@ -232,7 +230,7 @@ object MarketQueries {
     "q154_basket_pairs" -> (q154 _),
     "q184_discount_sensitivity" -> (q184 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q152_price_spread" -> q152Sql,
     "q153_hhi"          -> q153Sql,
     "q154_basket_pairs" -> q154Sql,

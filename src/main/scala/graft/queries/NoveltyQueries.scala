@@ -21,7 +21,7 @@ import graft.sources.Tables
   * Compare-surface posture: integer counts, integer cents, epoch-day
   * arithmetic, ppm by integer DIV.
   */
-object NoveltyQueries {
+object NoveltyQueries extends QuerySet {
 
   // --- q146: per-doc 4-gram novelty vs the doc_id-ordered corpus
   // prefix. A shingle is NOVEL in the first doc (min doc_id) that
@@ -161,7 +161,7 @@ object NoveltyQueries {
     "q147_freq_spectrum" -> (q147 _),
     "q148_rfm"           -> (q148 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q146_novelty"       -> q146Sql,
     "q147_freq_spectrum" -> q147Sql,
     "q148_rfm"           -> q148Sql)

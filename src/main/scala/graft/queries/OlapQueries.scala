@@ -11,7 +11,7 @@ import graft.sources.Tables
   * sets, sessionization, approximate aggregates, skew-salted join, and
   * point-in-time snapshot.
   */
-object OlapQueries {
+object OlapQueries extends QuerySet {
 
   private val D = DecimalType(18, 2)
 
@@ -206,7 +206,7 @@ object OlapQueries {
     "q40_pit_snapshot"  -> (q40 _),
     "q75_supplier_part" -> (q75 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q83_bloom_join"    -> q83Sql,
     "q34_cube"          -> q34Sql,
     "q35_pivot"         -> q35Sql,

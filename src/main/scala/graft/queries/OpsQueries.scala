@@ -31,7 +31,7 @@ import graft.sources.Tables
   * arithmetic (posture 3), with the cross-source denominator summed
   * over INTEGERS so no double accumulation order can differ.
   */
-object OpsQueries {
+object OpsQueries extends QuerySet {
 
   // --- q164: as-of join under late dimension updates — click facts
   // resolved to the user's latest signup version at-or-before each
@@ -489,7 +489,7 @@ object OpsQueries {
     "q172_token_budget" -> (q172 _),
     "q181_bloom_advisor" -> (q181 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q164_asof_update" -> q164Sql,
     "q165_rebuild_advisor" -> q165Sql,
     "q166_mixture_weights" -> q166Sql,

@@ -15,7 +15,7 @@ import graft.sources.Tables
   * codebooks and float LUTs aren't SQL-reproducible; PqSpec pins the
   * determinism, code-range, and recall-floor contracts.
   */
-object PqQueries {
+object PqQueries extends QuerySet {
 
   /** PQ geometry for the 64-dim test embeddings: 16 subspaces × 16
     * centroids = 16 small codes per vector (16× vs float32); ADC
@@ -60,6 +60,4 @@ object PqQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q149_pq_recall" -> (q149 _))
-
-  val oracle: Map[String, String] = Map.empty
 }

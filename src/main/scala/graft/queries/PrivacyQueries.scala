@@ -35,7 +35,7 @@ import graft.sources.Tables
   * 100 TB when the aggregate fits in a broadcast. The row side stays
   * a single scan + map.
   */
-object PrivacyQueries {
+object PrivacyQueries extends QuerySet {
 
   /** Suppress quasi-identifier columns of rows whose QI combination
     * has fewer than k members. Returns the input plus one string
@@ -117,6 +117,6 @@ object PrivacyQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q105_privacy_extract" -> (q105 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q105_privacy_extract" -> q105Sql)
 }

@@ -18,13 +18,11 @@ import graft.sources.Tables
   *
   * Compare surface: exact integer cents/days/ranks only.
   */
-object RiskQueries {
+object RiskQueries extends QuerySet {
 
-  // Cache ownership (the Dedup.releaseCaches contract): q151 persists
-  // its bounded ship-latency histogram across two consumers. Released
-  // session-wide via SparkEntry.releaseAllCaches.
+  // Cache ownership ([[graft.util.CacheTracker]]): q151 persists its
+  // bounded ship-latency histogram across two consumers.
   private val caches = new graft.util.CacheTracker
-  def releaseCaches(): Unit = caches.release()
 
   /** q150 contract: ≥ MinHistory purchases before a user's own σ is
     * trusted; flag when (c·n − s)² > 9·(n·ssq − s²) — the exact
@@ -132,7 +130,7 @@ object RiskQueries {
     "q150_self_outlier" -> (q150 _),
     "q151_ship_latency" -> (q151 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q150_self_outlier" -> q150Sql,
     "q151_ship_latency" -> q151Sql)
 }

@@ -14,7 +14,7 @@ import graft.sources.Tables
   * (state = event_type), exactly how the reference versions dimensions
   * from daily snapshots (etl.py:297-388).
   */
-object ScdQueries {
+object ScdQueries extends QuerySet {
 
   private val Split = "2024-01-16 00:00:00"
   private val DelTs = "2024-02-01 00:00:00"
@@ -468,7 +468,7 @@ object ScdQueries {
     "q15_run_log"    -> (q15 _),
     "q129_dim_chain" -> (q129 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q187_asof_within" -> q187Sql,
     "q186_asof_outer" -> q186Sql,
     "q160_asof_native" -> q160Sql,

@@ -25,7 +25,7 @@ import graft.sources.Tables
   * INTEGER ppm weights fixed at plan time, so the smoothed value is an
   * exact integer dot product, not a recursive double.
   */
-object SeriesQueries {
+object SeriesQueries extends QuerySet {
 
   // --- q173: autocorrelation diagnostics of the daily revenue series —
   // the mart owner's "is there weekly structure / drift momentum in my
@@ -361,7 +361,7 @@ object SeriesQueries {
     "q177_char_bigrams" -> (q177 _),
     "q183_cohort_ltv" -> (q183 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q173_acf" -> q173Sql,
     "q174_ewma_anomaly" -> q174Sql,
     "q175_compaction_plan" -> q175Sql,

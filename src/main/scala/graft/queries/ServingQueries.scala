@@ -15,7 +15,7 @@ import graft.sources.Tables
   * positions, folds; ratios as micro units by integer DIV. No
   * ROUND(double), no calendar builtins.
   */
-object ServingQueries {
+object ServingQueries extends QuerySet {
 
   /** q155's phrase, chosen to occur across the test corpus; any
     * two-token phrase works — the plan does not depend on the terms.
@@ -210,7 +210,7 @@ object ServingQueries {
     "q157_target_encode" -> (q157 _),
     "q163_retraction_view" -> (q163 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q155_phrase_search" -> q155Sql,
     "q156_delta_view" -> q156Sql,
     "q157_target_encode" -> q157Sql,

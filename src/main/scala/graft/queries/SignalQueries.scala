@@ -34,15 +34,13 @@ import graft.sources.Tables
   * FLOOR fixed-point ppm via integer DIV — never ROUND(double) and never
   * a calendar builtin beyond CAST(ts AS DATE).
   */
-object SignalQueries {
+object SignalQueries extends QuerySet {
 
-  // Cache ownership (the Dedup.releaseCaches contract): q135/q136
-  // persist their bounded value histograms across the n-census /
+  // Cache ownership ([[graft.util.CacheTracker]]): q135/q136 persist
+  // their bounded value histograms across the n-census /
   // cumulative-window / rollup consumers (each reference otherwise
-  // re-ran the events scan + groupBy). Released session-wide via
-  // SparkEntry.releaseAllCaches.
+  // re-ran the events scan + groupBy).
   private val caches = new graft.util.CacheTracker
-  def releaseCaches(): Unit = caches.release()
 
   /** RRF dampening constant (Cormack et al.'s k=60 convention). */
   val RrfK = 60
@@ -511,7 +509,7 @@ object SignalQueries {
     "q137_attribution"    -> (q137 _),
     "q138_forecast_eval"  -> (q138 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q130_rrf_fusion"     -> q130Sql,
     "q131_burst_days"     -> q131Sql,
     "q132_vocab_coverage" -> q132Sql,

@@ -11,14 +11,12 @@ import graft.sources.Tables
 /** Text analysis, multimodal, streaming-equivalent, and ML queries
   * (SURVEY.md §2, q27–q33).
   */
-object TextQueries {
+object TextQueries extends QuerySet {
 
-  // Cache ownership (the Dedup.releaseCaches contract, shared
-  // implementation in [[graft.util.CacheTracker]]): q80 persists its
+  // Cache ownership ([[graft.util.CacheTracker]]): q80 persists its
   // per-doc bigram-count frame across the global-count fold and the
-  // scoring join. Released session-wide via SparkEntry.releaseAllCaches.
+  // scoring join.
   private val caches = new graft.util.CacheTracker
-  def releaseCaches(): Unit = caches.release()
 
   // --- q27: per-document text statistics ---
   def q27(s: SparkSession, dir: String): DataFrame = {
@@ -284,7 +282,7 @@ object TextQueries {
     "q74_stream_join"     -> (q74 _),
     "q77_repetition"      -> (q77 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q82_char_coverage"   -> q82Sql,
     "q80_lm_score"        -> q80Sql,
     "q27_text_stats"      -> q27Sql,

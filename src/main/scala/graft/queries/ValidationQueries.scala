@@ -22,7 +22,7 @@ import graft.sources.Tables
   * Compare-surface posture as q130-q138: integer arithmetic only —
   * counts, epoch-µs gaps, integer cents, sign-only trend labels.
   */
-object ValidationQueries {
+object ValidationQueries extends QuerySet {
 
   /** Accepted event types for q139's InSet check. */
   val KnownTypes = Seq("view", "click", "purchase", "signup", "error")
@@ -184,7 +184,7 @@ object ValidationQueries {
     "q140_trend"        -> (q140 _),
     "q141_pair_charges" -> (q141 _))
 
-  val oracle: Map[String, String] = Map(
+  override val oracle: Map[String, String] = Map(
     "q139_check_suite"  -> q139Sql,
     "q140_trend"        -> q140Sql,
     "q141_pair_charges" -> q141Sql)

@@ -1,18 +1,23 @@
 package graft.util
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Shared cache-ownership helper behind `Dedup.releaseCaches` and
-  * `AnalyticsQueries.releaseCaches` (one implementation, not two
-  * drifting copies): persisted intermediates are MEMORY_AND_DISK —
-  * blocks evicted from memory move to disk and stay until unpersist,
-  * so long-lived sessions sweeping many corpora must release between
-  * corpora. Unpersisting is always safe: already-computed results are
+/** Cache ownership for one library object: the intermediates it
+  * persists and the [[SessionMemo]]s it keeps. Persisted intermediates
+  * are MEMORY_AND_DISK — blocks evicted from memory move to disk and
+  * stay until unpersist, so long-lived sessions sweeping many corpora
+  * must release between corpora. [[release]] drops both the frames and
+  * the memos; [[CacheTracker.releaseAll]] releases every tracker.
+  * Unpersisting is always safe: already-computed results are
   * unaffected, un-executed lazy plans recompute.
   */
 final class CacheTracker {
-  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val tracked = ArrayBuffer.empty[DataFrame]
+  private val memos = ArrayBuffer.empty[SessionMemo[_, _]]
+  CacheTracker.register(this)
 
   def trackPersist(df: DataFrame): DataFrame = tracked.synchronized {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -20,9 +25,28 @@ final class CacheTracker {
     p
   }
 
-  def release(): Unit = tracked.synchronized {
-    tracked.foreach(_.unpersist(blocking = false))
-    tracked.clear()
+  /** A new memo owned by this tracker. `frames` names the persisted
+    * frames a value holds, which must still be cached for a hit.
+    */
+  def memo[K, V](name: String,
+                 frames: V => Seq[DataFrame] = (_: V) => Nil): SessionMemo[K, V] =
+    memos.synchronized {
+      val m = new SessionMemo[K, V](name, frames)
+      memos += m
+      m
+    }
+
+  private[util] def ownMemos: List[SessionMemo[_, _]] =
+    memos.synchronized(memos.toList)
+
+  // memos first, outside the frame lock: a memo build holds its memo's
+  // lock while it calls trackPersist
+  def release(): Unit = {
+    ownMemos.foreach(_.clear())
+    tracked.synchronized {
+      tracked.foreach(_.unpersist(blocking = false))
+      tracked.clear()
+    }
   }
 
   /** Unpersist ONE tracked frame and forget it — for early releases
@@ -34,4 +58,21 @@ final class CacheTracker {
     val i = tracked.indexWhere(_ eq df)
     if (i >= 0) tracked.remove(i)
   }
+}
+
+/** The registry of trackers: each registers when its owning object is
+  * initialized, so an object never loaded has nothing to release.
+  */
+object CacheTracker {
+  private val live = ArrayBuffer.empty[CacheTracker]
+
+  private def register(t: CacheTracker): Unit = live.synchronized(live += t)
+
+  private def trackers: List[CacheTracker] = live.synchronized(live.toList)
+
+  /** Release every tracker's frames and memos. */
+  def releaseAll(): Unit = trackers.foreach(_.release())
+
+  /** Every memo of every registered tracker. */
+  private[graft] def memos: Seq[SessionMemo[_, _]] = trackers.flatMap(_.ownMemos)
 }

@@ -6,32 +6,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * `++`, where a duplicate key silently OVERWRITES an earlier module's
   * query — this spec turns that into a test failure, at `sbt test`
   * time rather than Bench's runtime require.
-  *
-  * NOTE: keep this list in sync with SparkEntry.queries — a module
-  * missing HERE hides exactly the collision this spec exists to catch
-  * (the total-size assert below fails loudly when the lists drift).
   */
 class SparkEntrySpec extends AnyFunSuite {
 
-  private val moduleQueryMaps = Seq(
-    graft.queries.CoreQueries.queries, graft.queries.ScdQueries.queries,
-    graft.queries.FraudQueries.queries, graft.queries.DedupQueries.queries,
-    graft.queries.TextQueries.queries, graft.queries.OlapQueries.queries,
-    graft.queries.ExtendedQueries.queries, graft.queries.PipelineQueries.queries,
-    graft.queries.AnalyticsQueries.queries, graft.queries.CorpusQueries.queries,
-    graft.queries.PrivacyQueries.queries, graft.queries.CurationQueries.queries,
-    graft.queries.SignalQueries.queries, graft.queries.ValidationQueries.queries,
-    graft.queries.AuditQueries.queries, graft.queries.NoveltyQueries.queries,
-    graft.queries.PqQueries.queries, graft.queries.RiskQueries.queries,
-    graft.queries.MarketQueries.queries, graft.queries.ServingQueries.queries,
-    graft.queries.OpsQueries.queries, graft.queries.SeriesQueries.queries,
-    graft.queries.InfoQueries.queries)
-
   test("no module's query name collides with another's") {
-    val all = moduleQueryMaps.flatMap(_.keys)
+    val all = SparkEntry.modules.flatMap(_.queries.keys)
     val dups = all.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
     assert(dups.isEmpty, s"colliding query names: ${dups.mkString(", ")}")
     assert(SparkEntry.queries.size === all.size)
+    val oracles = SparkEntry.modules.flatMap(_.oracle.keys)
+    assert(SparkEntry.oracleSql.size === oracles.size)
   }
 
   test("qNN prefixes are unique and well-formed") {
