@@ -12,27 +12,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Fail on duplicate qNN prefixes BEFORE the ~15-minute bench pass,
-    // not after: a registry mistake should cost milliseconds, not the
+    // Resolve every query through its qNN prefix BEFORE the ~15-minute
+    // bench pass: a duplicate prefix, which would silently drop a timing
+    // from the short-keyed stdout line, costs milliseconds, not the
     // whole run plus the driver-contract stdout line.
-    val registeredShort = SparkEntry.queries.keys.map(_.takeWhile(_ != '_')).toSeq
-    require(registeredShort.distinct.size == registeredShort.size,
-      s"duplicate qNN prefixes would silently drop timings: ${registeredShort.sorted}")
+    val ordered = SparkEntry.byShortName(
+      SparkEntry.queries.keys.toSeq.sorted.map(SparkEntry.shortName))
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString).toInt)
 
     // Host-state annotation for the artifact (the recurring round-7
     // lesson): cross-round comparisons need to know whether the sweep
@@ -71,12 +58,20 @@ object Bench {
       spark.range(1000000).selectExpr("sum(id * 3)").collect()
       (System.nanoTime() - t0) / 1e6
     }
-    val coldPass: Map[String, Double] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        name -> (try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-                 catch { case _: Throwable => -1.0 })
-      }.toMap
+    // A failed query reports -1, never a misleadingly fast timing, and
+    // names itself on stderr — in the cold pass as in the timed ones.
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).count()
+      (System.nanoTime() - t0) / 1e9
+    }
+    def sweep(): Map[String, Double] = ordered.map { case (name, fn) =>
+      name -> (try once(fn) catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        -1.0
+      })
+    }.toMap
+    val coldPass = sweep()
 
     // TWO timed passes, report the per-query min: a transient host stall
     // during a single pass misgrades the whole artifact (round 5: q17
@@ -90,19 +85,6 @@ object Bench {
     // (round 6: q25 44.9s in the artifact vs 0.38s isolated). Sweeping
     // the whole suite between a query's two samples separates them by
     // minutes — one of the two almost surely lands outside any freeze.
-    // A failed query reports -1, never a misleadingly fast timing.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def sweep(): Map[String, Double] = ordered.map { case (name, fn) =>
-      name -> (try once(fn) catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        -1.0
-      })
-    }.toMap
     // storage pressure census (the r13 in-sweep-interference question):
     // bytes pinned by ALL cached frames at end-of-sweep — the session
     // accumulates every query's tracked intermediates across the whole
@@ -189,7 +171,7 @@ object Bench {
     // whole suite always live in BENCH_DETAIL.json, which the bench
     // writes unconditionally above.
     def lineOf(subset: Seq[(String, Double)], dec: Int): String = {
-      val qs = subset.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + fmtN(v, dec) }
+      val qs = subset.map { case (k, v) => "\"" + SparkEntry.shortName(k) + "\":" + fmtN(v, dec) }
         .mkString("{", ",", "}")
       val omitted = results.size - subset.size
       val om = if (omitted > 0) s""","omitted":$omitted,"detail":"BENCH_DETAIL.json"""" else ""

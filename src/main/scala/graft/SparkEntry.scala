@@ -33,6 +33,24 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     modules.foldLeft(Map.empty[String, String])(_ ++ _.oracle)
 
+  /** A query's qNN prefix ("q01" for "q01_pricing_summary"): the key of
+    * Bench's stdout line and the name BenchSome takes.
+    */
+  def shortName(name: String): String = name.takeWhile(_ != '_')
+
+  /** The registry entries named by `shorts` (qNN prefixes), in the order
+    * given. Fails before anything runs if two queries share a prefix or
+    * if a name matches no query, naming the offenders.
+    */
+  def byShortName(shorts: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val byShort = queries.toSeq.groupBy { case (name, _) => shortName(name) }
+    val dups = byShort.collect { case (short, qs) if qs.size > 1 => short }
+    require(dups.isEmpty, s"duplicate qNN prefixes: ${dups.toSeq.sorted.mkString(", ")}")
+    val unknown = shorts.filterNot(byShort.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    shorts.map(byShort(_).head)
+  }
+
   /** Release every cache-tracker-owned persisted intermediate and
     * session memo ([[graft.util.CacheTracker.releaseAll]]). End-of-sweep
     * hygiene for the long-lived harness mains (Bench/Verify) and any

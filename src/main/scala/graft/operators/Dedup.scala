@@ -1008,7 +1008,7 @@ object Dedup {
     // schema migration) and ride the same broadcast. The build side is
     // the BARE frame — renames live in Projects ABOVE each join, keeping
     // the two broadcast children canonically identical. MEASURED CAVEAT
-    // (tools/ProbeReuse, final-plan evidence r12): under AQE the two
+    // (round 12's final executed plans, SURVEY.md): under AQE the two
     // joins materialize DISTINCT BroadcastQueryStages — two copies ship
     // regardless of caching or child canonicalization; with AQE off the
     // ReuseExchange rule collapses them to one. A planner property of

@@ -278,23 +278,6 @@ object ProductQuant {
       .select("probe_id", "neighbor_id", "rank")
   }
 
-  /** PQ search with exact re-ranking — the production ANN pipeline:
-    * ADC produces a `shortlist`-deep candidate set per probe (coarse,
-    * cheap: code lookups over the whole corpus), then ONLY the
-    * shortlisted vectors are fetched and exactly re-ranked by L2 (the
-    * q72 LSH→exact-verify philosophy applied to ANN). At 100 TB the
-    * refine join touches |probes|·shortlist rows — the full-precision
-    * vectors never stream past the coarse stage. Recall is set by the
-    * shortlist depth (measured by q149, floor-pinned by PqSpec).
-    */
-  def pqTopKRefined(corpus: DataFrame, probes: DataFrame, idCol: String,
-                    vecCol: String, k: Int, shortlist: Int,
-                    cb: Codebook): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must cover k=$k")
-    refine(pqTopK(corpus, probes, idCol, vecCol, shortlist, cb),
-      corpus, probes, idCol, vecCol, k)
-  }
-
   /** The exact re-rank stage alone: take any (probe_id, neighbor_id)
     * candidate frame (an ADC shortlist, an LSH bucket, …), fetch the
     * candidates' full vectors, rank by exact L2 per probe, keep top-k.

@@ -44,9 +44,7 @@ object SkewJoin {
     * running it before every large join is cheap relative to the join
     * itself.
     */
-  final case class SkewProfile(nRows: Long, hotKeyRows: Long, nKeys: Long) {
-    def hotShare: Double = if (nRows == 0) 0.0 else hotKeyRows.toDouble / nRows
-  }
+  final case class SkewProfile(nRows: Long, hotKeyRows: Long, nKeys: Long)
 
   def profile(facts: DataFrame, factKey: String): SkewProfile = {
     val row = facts.groupBy(col(factKey)).agg(count(lit(1)).as("n"))

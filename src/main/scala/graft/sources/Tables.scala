@@ -45,10 +45,10 @@ object Tables {
   /** `events.parquet` has stored `ts` two ways across driver testdata
     * generations: parquet TIMESTAMP(NANOS) (no Spark vectorized nanos
     * type — the legacy conf `spark.sql.legacy.parquet.nanosAsLong`, set
-    * once at session build in Verify/Bench/Explain/SparkSpec, reads the
-    * raw int64 nanos which we convert here), and TIMESTAMP(MICROS,
+    * once in [[graft.GraftSession.local]], reads the raw int64 nanos
+    * which we convert here), and TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) (which Spark 4 infers as TIMESTAMP_NTZ; the
-    * builders set `spark.sql.parquet.inferTimestampNTZ.enabled=false`
+    * builder sets `spark.sql.parquet.inferTimestampNTZ.enabled=false`
     * so it reads as TimestampType under the UTC session — identical
     * wall values to DuckDB's naive view of the same file). Both normal
     * forms land on a µs TimestampType column; the NTZ cast below is the

@@ -55,6 +55,10 @@ final class SessionMemo[K, V] private[util] (
 
   private[graft] def size: Int = synchronized(entries.size)
 
+  /** The values cached for session `s`. */
+  private[graft] def valuesFor(s: SparkSession): Seq[V] =
+    synchronized(entries.collect { case ((owner, _), e) if owner eq s => e.value }.toSeq)
+
   private[util] def clear(): Unit = synchronized(entries.clear())
 }
 

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ml.classification.LogisticRegressionModel
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -40,6 +40,18 @@ class SessionMemoSpec extends SparkSpec {
 
   private def q(name: String) =
     SparkEntry.queries.find(_._1.startsWith(name + "_")).get._2
+
+  // the memo families Bench fills, and queries whose construction
+  // alone fills them all: each builds its value (or the eager part of
+  // it) inside the query constructor
+  private val Families = Set("verified_pairs", "banding_census",
+    "semdedup_assignment", "ivf_index", "fraud_feature_table", "pq_index",
+    "doc_token_sets", "cooc_vocab", "dedup_assign_edges", "fraud_lr_model")
+
+  private def fillAll(s: SparkSession, dir: String): Unit =
+    Seq("q69", "q72", "q192", "q49", "q189", "q149", "q78").foreach(name => q(name)(s, dir))
+
+  private def memoDir(): String = copyOf("documents", "embeddings", "events", "customer")
 
   test("a rewritten corpus gets a fresh banding choice after a release") {
     val dir = Files.createTempDirectory("graft_memo_band").toString
@@ -129,18 +141,30 @@ class SessionMemoSpec extends SparkSpec {
     } finally pool.shutdown()
   }
 
+  test("every memo family serves a second session its own value and keeps the first's") {
+    val dir = memoDir()
+    def held(s: SparkSession): Map[String, Seq[Any]] =
+      CacheTracker.memos.filter(m => Families(m.name)).map(m => m.name -> m.valuesFor(s)).toMap
+    fillAll(spark, dir)
+    val first = held(spark)
+    assert(first.keySet === Families)
+    val other = spark.newSession()
+    fillAll(other, dir)
+    val missing = held(other).collect { case (name, vs) if vs.isEmpty => name }
+    assert(missing.isEmpty, s"no entry for the second session: ${missing.mkString(", ")}")
+    fillAll(spark, dir)
+    val rebuilt = held(spark).collect {
+      case (name, vs) if vs.size != first(name).size ||
+          !first(name).forall(v => vs.exists(_.asInstanceOf[AnyRef] eq v.asInstanceOf[AnyRef])) => name
+    }
+    assert(rebuilt.isEmpty, s"first session's values rebuilt: ${rebuilt.mkString(", ")}")
+  }
+
   test("releaseAllCaches empties every registered memo") {
-    val dir = copyOf("documents", "embeddings", "events", "customer")
-    // construction alone fills every memo family: each builds its
-    // value (or the eager part of it) inside the query constructor
-    Seq("q69", "q72", "q192", "q49", "q189", "q149", "q78")
-      .foreach(name => q(name)(spark, dir))
-    val families = Set("verified_pairs", "banding_census",
-      "semdedup_assignment", "ivf_index", "fraud_feature_table", "pq_index",
-      "doc_token_sets", "cooc_vocab", "dedup_assign_edges", "fraud_lr_model")
+    fillAll(spark, memoDir())
     val memos = CacheTracker.memos
-    assert(families.subsetOf(memos.map(_.name).toSet))
-    val empty = memos.filter(m => families(m.name) && m.size == 0).map(_.name)
+    assert(Families.subsetOf(memos.map(_.name).toSet))
+    val empty = memos.filter(m => Families(m.name) && m.size == 0).map(_.name)
     assert(empty.isEmpty, s"memos not filled: ${empty.mkString(", ")}")
     SparkEntry.releaseAllCaches()
     val left = memos.filter(_.size > 0).map(_.name)

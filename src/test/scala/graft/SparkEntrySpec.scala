@@ -19,11 +19,18 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("qNN prefixes are unique and well-formed") {
-    val shorts = SparkEntry.queries.keys.map(_.takeWhile(_ != '_')).toSeq
+    val shorts = SparkEntry.queries.keys.map(SparkEntry.shortName).toSeq
     assert(shorts.forall(_.matches("q\\d{2,3}")),
       "every query name must start with a qNN_ prefix")
-    val dups = shorts.groupBy(identity).collect { case (k, v) if v.size > 1 => k }
-    assert(dups.isEmpty, s"duplicate qNN prefixes: ${dups.mkString(", ")}")
+    assert(SparkEntry.byShortName(shorts).size === shorts.size) // throws on a shared prefix
+  }
+
+  test("short names resolve in the given order, and unknown ones fail by name") {
+    val names = SparkEntry.byShortName(Seq("q20", "q01")).map(_._1)
+    assert(names.map(SparkEntry.shortName) === Seq("q20", "q01"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.byShortName(Seq("q01", "q999", "q20_fraud_report")))
+    assert(e.getMessage.contains("unknown query names: q999, q20_fraud_report"))
   }
 
   test("every oracle entry has a registered query") {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scales the driver's testdata to a larger SF by key-shifted
@@ -44,19 +44,12 @@ object GenScale {
     val out = if (args.length > 1) args(1) else "target/testdata/sf1"
     val n = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Base timestamps are TIMESTAMP(MICROS, isAdjustedToUTC=false).
-      // Read them as NTZ so the rewrite round-trips the physical type —
-      // reading as LTZ would write isAdjustedToUTC=true and flip the
-      // DuckDB oracle's column type to TIMESTAMPTZ at sf1.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(Runtime.getRuntime.availableProcessors)
+    // Base timestamps are TIMESTAMP(MICROS, isAdjustedToUTC=false).
+    // Read them as NTZ so the rewrite round-trips the physical type —
+    // reading as LTZ would write isAdjustedToUTC=true and flip the
+    // DuckDB oracle's column type to TIMESTAMPTZ at sf1.
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     import spark.implicits._
 
     def load(t: String): DataFrame = spark.read.parquet(s"$base/$t.parquet")
