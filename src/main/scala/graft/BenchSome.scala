@@ -26,9 +26,10 @@ object BenchSome {
       Runtime.getRuntime.availableProcessors.toString).toInt)
     // Optional dial overrides for scale probes (the graft.* dials are
     // runtime conf, readable via spark.conf at call sites):
-    // SPARK_GRAFT_CONF="k1=v1;k2=v2". E.g. the sf10 q85 probe sizes
-    // graft.dedup.maxBroadcastSetBytes to the measured corpus (125k-doc
-    // index ≈ 340 MB raw > the conservative 256 MB default).
+    // SPARK_GRAFT_CONF="k1=v1;k2=v2", e.g.
+    // "graft.dedup.maxBroadcastBandRows=0" to time a dedup query's
+    // censused band join instead of its broadcast fast path. README's
+    // dial table lists every key.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
       .foreach { kv =>
         val i = kv.indexOf('=')

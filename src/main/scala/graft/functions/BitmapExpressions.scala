@@ -97,7 +97,7 @@ object BitmapOps {
   /** Pack a hashed-element set into a FIXED-width bitmap: element h sets
     * bit pmod(h, words·64). Collisions are expected and SAFE — the
     * packed form is used only through the provable intersection upper
-    * bound derivation (see Dedup.jaccardVerify):
+    * bound derivation (see Dedup.screenCandidates):
     *
     *   |A∩B| ≤ popcount(pkA ∧ pkB) + min(|A|−popcount(pkA), |B|−popcount(pkB))
     *
@@ -107,10 +107,9 @@ object BitmapOps {
     * group of the superset).
     *
     * `words` must be in [1, 2^20] — validated loudly here because the
-    * SQL registration and the `graft.dedup.screenWords` conf both reach
-    * this with user-supplied values (0 would divide by zero, a negative
-    * would allocate a negative array, huge values overflow the bit
-    * index).
+    * SQL registration reaches this with user-supplied values (0 would
+    * divide by zero, a negative would allocate a negative array, huge
+    * values overflow the bit index).
     */
   def packBits(a: ArrayData, words: Int): ArrayData = {
     if (words < 1 || words > (1 << 20))

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite for large-scale corpus cleaning.
@@ -197,9 +199,8 @@ object Dedup {
     denseBitmaps(sh, dict, vocab, idCol)
   }
 
-  private def maxBitmapVocab(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.dedup.maxBitmapVocab")
-      .map(_.toLong).getOrElse(DefaultMaxBitmapVocab)
+  private def maxBitmapVocab(spark: SparkSession): Long =
+    conf(spark, "graft.dedup.maxBitmapVocab", DefaultMaxBitmapVocab, min = 0L)
 
   private def shingleDict(sh: DataFrame): (DataFrame, Long) = {
     import org.apache.spark.sql.expressions.Window
@@ -260,7 +261,7 @@ object Dedup {
     */
   private def docSetsFromShingles(sh: DataFrame, idCol: String): (DataFrame, Boolean) = {
     val spark = sh.sparkSession
-    val mode = spark.conf.getOption("graft.dedup.verifier").getOrElse("auto")
+    val mode = conf(spark, "graft.dedup.verifier").getOrElse("auto")
     mode match {
       case "hashed" => (hashSetsFromShingles(sh, idCol), true)
       case "auto" | "bitmap" =>
@@ -294,37 +295,40 @@ object Dedup {
     floor(lit(threshold) * (col("size_a") + col("size_b")) /
       lit(1.0 + threshold)).cast("bigint") - lit(1L)
 
-  /** Row-wise candidate screens shared by [[jaccardVerify]] and the
-    * assignment any-match aggregation: size-ratio prefilter plus (when
-    * the caller ships the pk/pkc columns) the packed-bitmap reject on
-    * the PROVABLE intersection upper bound
+  /** The packed-bitmap candidate screen, applied when [[attachSets]]
+    * shipped the pk/pkc columns: reject on the PROVABLE intersection
+    * upper bound
     *   |A∩B| ≤ popcount(pkA ∧ pkB) + min(sizeA−pkcA, sizeB−pkcB)
     * — every shared element's bit lands in the AND, and the collision
-    * excess inside A∩B is bounded by the excess inside either whole set.
-    * The AND is a branchless screenWords-long loop vs the branchy
-    * sorted merge, and on a dense corpus ~93% of candidates fail
-    * verification (sf1: 58M candidates → 4.3M pairs), so the screen is
-    * where almost every candidate's cost ends. Pure PRE-filters: a
+    * excess inside A∩B is bounded by the excess inside either whole set —
+    * against `minRequired`, any LOWER bound on the intersection a
+    * surviving pair needs (Jaccard's [[minRequiredCol]], containment's
+    * ⌊t·min⌋−1). The AND is a branchless [[ScreenWords]]-long loop vs
+    * the branchy sorted merge, and on a dense corpus ~93% of candidates
+    * fail verification (sf1: 58M candidates → 4.3M pairs), so the screen
+    * is where almost every candidate's cost ends. A pure PRE-filter: a
     * surviving row still needs the exact merge; a rejected row provably
     * cannot pass it.
     */
-  private def screenCandidates(pairs: DataFrame, threshold: Double,
-                               hashed: Boolean): DataFrame = {
-    val sized = pairs
-      .filter(least(col("size_a"), col("size_b")).cast("double") >=
-        lit(threshold) * greatest(col("size_a"), col("size_b")).cast("double"))
-    if (hashed && sized.columns.contains("pk_a"))
-      sized.filter(
-        graft.functions.BitmapFunctions.andCount(col("pk_a"), col("pk_b")) +
-          least(col("size_a") - col("pkc_a"), col("size_b") - col("pkc_b")) >=
-          minRequiredCol(threshold))
-    else sized
-  }
+  private def screenCandidates(pairs: DataFrame, minRequired: Column): DataFrame =
+    if (!pairs.columns.contains("pk_a")) pairs
+    else pairs.filter(
+      graft.functions.BitmapFunctions.andCount(col("pk_a"), col("pk_b")) +
+        least(col("size_a") - col("pkc_a"), col("size_b") - col("pkc_b")) >=
+        minRequired)
+
+  /** Jaccard's row-wise screens, shared by [[jaccardVerify]] and the
+    * assignment any-match aggregation: the size-ratio prefilter, then
+    * [[screenCandidates]].
+    */
+  private def jaccardScreen(pairs: DataFrame, threshold: Double): DataFrame =
+    screenCandidates(pairs.filter(least(col("size_a"), col("size_b")).cast("double") >=
+      lit(threshold) * greatest(col("size_a"), col("size_b")).cast("double")),
+      minRequiredCol(threshold))
 
   private def jaccardVerify(pairs: DataFrame, threshold: Double,
-                            hashed: Boolean): DataFrame = {
-    val screened = screenCandidates(pairs, threshold, hashed)
-    screened
+                            hashed: Boolean): DataFrame =
+    jaccardScreen(pairs, threshold)
       .withColumn("n_inter",
         if (hashed)
           // early-exit merge: aborts as soon as the pair provably fails
@@ -337,31 +341,22 @@ object Dedup {
           (col("size_a") + col("size_b") - col("n_inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_inter", "jaccard")
-  }
 
-  /** Words dial for the packed screen bitmap (default 128 longs = 8192
-    * bit slots ≈ 1 KB/doc). Collision excess grows ~set_size²/(2·slots),
-    * so past ~2·slots distinct shingles per doc the bound stops
-    * rejecting anything (stays SAFE — it only ever under-rejects) —
-    * raise the dial for long-document corpora.
+  /** Width of the packed screen bitmap: 128 longs = 8192 bit slots ≈
+    * 1 KB/doc. Collision excess grows ~set_size²/(2·slots), so past
+    * ~2·slots distinct shingles per doc the bound stops rejecting
+    * anything — it stays SAFE, it only ever under-rejects.
     */
-  private def screenWords(spark: org.apache.spark.sql.SparkSession): Int = {
-    val w = spark.conf.getOption("graft.dedup.screenWords").map(_.toInt).getOrElse(128)
-    require(w >= 1 && w <= (1 << 20),
-      s"graft.dedup.screenWords must be in [1, ${1 << 20}], got $w")
-    w
-  }
+  private val ScreenWords = 128
 
   /** Attach the packed-screen columns (pk, pkc) to a per-doc hashed-set
     * frame — derived from the stored sorted set, so a persisted index
     * needs NO schema migration to benefit.
     */
-  private def withPackedScreen(sets: DataFrame): DataFrame = {
-    val w = screenWords(sets.sparkSession)
+  private def withPackedScreen(sets: DataFrame): DataFrame =
     sets
-      .withColumn("pk", graft.functions.BitmapFunctions.packBits(col("bm"), lit(w)))
+      .withColumn("pk", graft.functions.BitmapFunctions.packBits(col("bm"), lit(ScreenWords)))
       .withColumn("pkc", graft.functions.BitmapFunctions.popcount(col("pk")))
-  }
 
   /** Census gate for the packed screen: below `graft.dedup.
     * screenMinCandidatesPerDoc` (default 256) candidates per document
@@ -375,12 +370,70 @@ object Dedup {
     * provable upper-bound pre-filter, so gated and ungated plans return
     * byte-identical rows (spec-pinned).
     */
-  private def screenPays(spark: org.apache.spark.sql.SparkSession,
+  private def screenPays(spark: SparkSession,
                          candidatesPerDoc: Option[Double]): Boolean = {
-    val minDensity = spark.conf
-      .getOption("graft.dedup.screenMinCandidatesPerDoc")
+    val minDensity = conf(spark, "graft.dedup.screenMinCandidatesPerDoc")
       .map(_.toDouble).getOrElse(256.0)
     candidatesPerDoc.forall(_ >= minDensity)
+  }
+
+  /** The verify-set join of every near-dup verifier ([[lshVerifiedPairs]],
+    * [[containmentPairs]], [[dedupIncrement]], [[assignIncrementEdges]]):
+    * returns a function that joins each candidate row's id_a and id_b
+    * ends to the per-doc set frame `sets` (idCol, bm, set_size) as
+    * bm_a/size_a and bm_b/size_b, keeping every candidate column. It
+    * decides three things from ONE sizing aggregation over `sets` (the
+    * callers persist it, so the action also materializes the cache):
+    *  - the packed screen: hashed sets only, gated by [[screenPays]] on
+    *    `candidatesPerDoc(nDocs)`; when on, pk/pkc ride both ends for
+    *    [[screenCandidates]].
+    *  - broadcast vs shuffle, MEASURED: hashed-set payloads are ~8 B per
+    *    shingle, so a set frame is often just past Spark's 10 MB
+    *    autoBroadcast line even when it trivially fits memory — and then
+    *    BOTH verify joins sort-merge, shuffling every candidate pair WITH
+    *    its 2 set arrays (the sf1 sweep: 58M pairs × ~4.6 KB riding two
+    *    exchanges, 164 s vs 52 s broadcast; the sf10 containment census:
+    *    400M candidate rows × ~2 KB spilled local disk to zero). Under
+    *    [[defaultBroadcastSetBytes]] the set side broadcasts explicitly
+    *    and the candidate stream never shuffles; past it (a truly
+    *    corpus-sized set frame) the shuffled join is the correct plan.
+    *    The raw payload is priced by size(bm) — dense bitmaps (fixed
+    *    width × docs) and hashed sets (set sizes) alike — plus the
+    *    screen bitmap and ~40 B of id/size overhead per doc.
+    *  - with `disjointIds`, the ingest precondition of the increment
+    *    paths (new ids are new) is ENFORCED: an overlapping id would let
+    *    a (new, new) pair also surface through the (new, old) channel.
+    *    It rides the sizing aggregation as a distinct-id count.
+    * Under AQE the two joins ship two copies of the set side (distinct
+    * BroadcastQueryStages — round 12's final executed plans, SURVEY.md);
+    * the one-copy reformulation shuffles every candidate with its set
+    * payload, the measured 3× regression, so the bound keeps the honest
+    * two-copies accounting (see [[defaultBroadcastSetBytes]]).
+    */
+  private def attachSets(sets: DataFrame, idCol: String, hashed: Boolean,
+                         candidatesPerDoc: Long => Option[Double],
+                         disjointIds: Boolean = false): DataFrame => DataFrame = {
+    val spark = sets.sparkSession
+    val sizing = Seq(sum(size(col("bm")).cast("long")), count(lit(1))) ++
+      (if (disjointIds) Seq(count_distinct(col(idCol))) else Nil)
+    val est = sets.agg(sizing.head, sizing.tail: _*).head()
+    val nDocs = est.getLong(1)
+    require(!disjointIds || est.isNullAt(0) || nDocs == est.getLong(2),
+      s"dedupIncrement requires disjoint id spaces (new ids are new — the " +
+        s"ingest precondition): the stored index and the batch share " +
+        s"${nDocs - est.getLong(2)} document id(s)")
+    val screen = hashed && screenPays(spark, candidatesPerDoc(nDocs))
+    val estBytes =
+      if (est.isNullAt(0)) 0L
+      else est.getLong(0) * 8L + nDocs * (40L + (if (screen) 8L * ScreenWords else 0L))
+    val hint: DataFrame => DataFrame =
+      if (estBytes <= defaultBroadcastSetBytes(spark)) broadcast(_: DataFrame) else identity
+    val base = if (screen) withPackedScreen(sets) else sets
+    def end(e: String): DataFrame = hint(base.select(Seq(col(idCol).as(s"id_$e"),
+      col("bm").as(s"bm_$e"), col("set_size").as(s"size_$e")) ++
+      (if (screen) Seq(col("pk").as(s"pk_$e"), col("pkc").as(s"pkc_$e")) else Nil): _*))
+    val (a, b) = (end("a"), end("b"))
+    cands => cands.join(a, Seq("id_a")).join(b, Seq("id_b"))
   }
 
   /** Exact n-gram Jaccard near-duplicate pairs — VERIFICATION-ONLY entry
@@ -438,41 +491,8 @@ object Dedup {
     // document) so the shingle→set aggregation runs once, not twice
     val (docsRaw, hashed) = docSetsFromShingles(sh, idCol)
     val docs = trackPersist(docsRaw)
-    // hashed path ships the packed-screen columns so jaccardVerify can
-    // kill failing candidates with a branchless AND before the merge —
-    // unless the caller's banding census says there are too few
-    // candidates per doc for the screen to pay (see screenPays)
-    val screen = hashed && screenPays(spark(df), candidatesPerDocHint)
-    val docsS = if (screen) withPackedScreen(docs) else docs
-    val extraA = if (screen) Seq(col("pk").as("pk_a"), col("pkc").as("pkc_a")) else Nil
-    val extraB = if (screen) Seq(col("pk").as("pk_b"), col("pkc").as("pkc_b")) else Nil
-    // Verify-join strategy — the dedupIncrement/containment broadcast
-    // decision applied to the BACKFILL path too (round 13: the first
-    // sf10 run of the cluster family's shared pair frame sort-merged
-    // ~10⁹ candidates × ~2 KB set payloads through two exchanges and
-    // took local disk to zero — the exact q121 cliff, on the one verify
-    // path that still trusted AQE's 10 MB line). Under the
-    // memory-derived raw-payload bound both doc-set joins broadcast and
-    // the candidate stream never shuffles; past it the shuffled join is
-    // the correct corpus-sized plan and stands. sum(size(bm)) prices
-    // dense bitmaps (fixed width × docs) and hashed sets (set sizes)
-    // alike; the aggregation rides the docs persist.
-    val est = docsS.agg(sum(size(col("bm")).cast("long")), count(lit(1))).head()
-    val estBytes =
-      if (est.isNullAt(0)) 0L
-      else est.getLong(0) * 8L +
-        est.getLong(1) * (40L + (if (screen) 8L * screenWords(spark(df)) else 0L))
-    val maxBytes = spark(df).conf
-      .getOption("graft.dedup.maxBroadcastSetBytes").map(_.toLong)
-      .getOrElse(defaultBroadcastSetBytes(spark(df)))
-    val hint: DataFrame => DataFrame =
-      if (estBytes <= maxBytes) broadcast(_: DataFrame) else identity
-    val a = docsS.select(Seq(col(idCol).as("id_a"), col("bm").as("bm_a"),
-      col("set_size").as("size_a")) ++ extraA: _*)
-    val b = docsS.select(Seq(col(idCol).as("id_b"), col("bm").as("bm_b"),
-      col("set_size").as("size_b")) ++ extraB: _*)
-    jaccardVerify(cands.join(hint(a), Seq("id_a")).join(hint(b), Seq("id_b")),
-      threshold, hashed)
+    val attach = attachSets(docs, idCol, hashed, _ => candidatesPerDocHint)
+    jaccardVerify(attach(cands), threshold, hashed)
   }
 
   /** Geometric rungs the containment posting-cap budget chooses from.
@@ -543,13 +563,10 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold must be in (0, 1], got $threshold")
     val spark = df.sparkSession
-    val explicitCap = spark.conf.getOption("graft.dedup.maxPostingDf")
-      .map(_.toLong)
     // any value >= 1 is legal, as before this dial was budgeted — the
     // cap only enters `<=` comparisons and a min(), never arithmetic,
     // so a Long.MaxValue "disable the prune" setting stays safe
-    explicitCap.foreach(v => require(v >= 1,
-      s"graft.dedup.maxPostingDf must be >= 1, got $v"))
+    val explicitCap = conf(spark, "graft.dedup.maxPostingDf", min = 1L)
     // one shingle scan feeds the candidate postings AND the verification
     // sets — persist it, like lshVerifiedPairs' shingle stream
     val sh = trackPersist(
@@ -561,7 +578,7 @@ object Dedup {
       sh.select(col(idCol), xxhash64(col("shingle")).as("h"))
         .groupBy(col(idCol))
         .agg(sort_array(collect_set(col("h"))).as("bm"))
-        .withColumn("sz", size(col("bm")).cast("bigint")))
+        .withColumn("set_size", size(col("bm")).cast("bigint")))
     // posting-frequency frame: feeds the cap ladder, the cold-shingle
     // prune, the per-shingle salt, AND the screen-gate census — persisted
     // so the census action is not paid twice
@@ -587,48 +604,19 @@ object Dedup {
     // default budget = one wave of target-sized verify tasks. Computed
     // LAZILY (an explicit dial must not even read shuffle.partitions —
     // some deployments set it non-numeric, e.g. "auto") and with a
-    // saturating multiply: a huge user targetPairsPerTask must fail the
-    // >=1 require with a sane clamp, not wrap negative.
-    val budget = spark.conf.getOption("graft.dedup.maxContainmentPairs")
-      .map(_.toLong).getOrElse {
-        val parts = scala.util.Try(
-          spark.conf.get("spark.sql.shuffle.partitions").toLong)
-          .getOrElse(spark.sparkContext.defaultParallelism.toLong)
-        try math.multiplyExact(target, math.max(1L, parts))
-        catch { case _: ArithmeticException => Long.MaxValue }
-      }
-    require(budget >= 1, s"graft.dedup.maxContainmentPairs must be >= 1, got $budget")
+    // saturating multiply: a huge user targetPairsPerTask must clamp,
+    // not wrap negative.
+    val budget = conf(spark, "graft.dedup.maxContainmentPairs", min = 1L).getOrElse {
+      val parts = scala.util.Try(
+        spark.conf.get("spark.sql.shuffle.partitions").toLong)
+        .getOrElse(spark.sparkContext.defaultParallelism.toLong)
+      try math.multiplyExact(target, math.max(1L, parts))
+      catch { case _: ArithmeticException => Long.MaxValue }
+    }
     val (maxDf, candMass) = explicitCap match {
       case Some(_) => masses.head
       case None    => postingCapForBudget(masses, budget)
     }
-    // sets is needed by the verify joins regardless — sizing it here
-    // just materializes the cache early and reads the stats back (one
-    // action: doc count for the screen census + element total for the
-    // broadcast decision below)
-    val est = sets.agg(count(lit(1)), sum(col("sz"))).head()
-    val nDocs = est.getLong(0)
-    val screen = screenPays(spark,
-      Some(if (nDocs == 0L) 0.0 else candMass.toDouble / nDocs))
-    // Verify-join strategy — the dedupIncrement lesson applied here
-    // (Dedup.scala's measured caveat): hashed-set payloads are ~8 B per
-    // element, so the sets frame is often just past Spark's 10 MB
-    // autoBroadcast line even when it trivially fits memory, and then
-    // BOTH verify joins sort-merge, shuffling every candidate pair WITH
-    // its two set arrays. At the sf10 census that was 400M candidate
-    // rows × ~2 KB — the shuffle spilled local disk to zero. Under the
-    // same memory-derived bound the sets side broadcasts and the
-    // candidate stream never shuffles; past the bound the shuffled
-    // join is the correct corpus-sized plan and stands.
-    val estBytes =
-      if (est.isNullAt(1)) 0L
-      else est.getLong(1) * 8L +
-        nDocs * (40L + (if (screen) 8L * screenWords(spark) else 0L))
-    val maxBytes = spark.conf
-      .getOption("graft.dedup.maxBroadcastSetBytes").map(_.toLong)
-      .getOrElse(defaultBroadcastSetBytes(spark))
-    val hint: DataFrame => DataFrame =
-      if (estBytes <= maxBytes) broadcast(_: DataFrame) else identity
     // Salt ONLY when the hottest ADMITTED posting list's own pair mass
     // exceeds the per-task target — the census already measured the
     // admitted max df per rung, so this is a driver-side lookup, not
@@ -660,29 +648,15 @@ object Dedup {
         .filter(col("id_a") < col("id_b"))
         .select("id_a", "id_b").distinct()
     }
-    // containment requires n_common ≥ t·min(sizes): the same packed-
-    // bitmap screen + early-exit merge as jaccardVerify, with the bound
-    // m = ⌊t·min(sizes)⌋ − 1 (any value ≤ the true requirement is safe);
-    // the screen itself is census-gated (see screenPays)
-    val renamed = sets.withColumnRenamed("sz", "set_size")
-    val setsS = if (screen) withPackedScreen(renamed) else renamed
-    val extraA = if (screen)
-      Seq(col("pk").as("pk_a"), col("pkc").as("pkc_a")) else Nil
-    val extraB = if (screen)
-      Seq(col("pk").as("pk_b"), col("pkc").as("pkc_b")) else Nil
+    // containment requires n_common ≥ t·min(sizes): the same census-
+    // gated packed screen + early-exit merge as jaccardVerify, with the
+    // bound m = ⌊t·min(sizes)⌋ − 1 (any value ≤ the true requirement is
+    // safe); the screen census is the budgeted candidate mass per doc
+    val attach = attachSets(sets, idCol, hashed = true,
+      nDocs => Some(if (nDocs == 0L) 0.0 else candMass.toDouble / nDocs))
     val minReq = floor(lit(threshold) *
       least(col("size_a"), col("size_b")).cast("double")).cast("bigint") - lit(1L)
-    val joined = cands
-      .join(hint(setsS.select(Seq(col(idCol).as("id_a"), col("bm").as("bm_a"),
-        col("set_size").as("size_a")) ++ extraA: _*)), Seq("id_a"))
-      .join(hint(setsS.select(Seq(col(idCol).as("id_b"), col("bm").as("bm_b"),
-        col("set_size").as("size_b")) ++ extraB: _*)), Seq("id_b"))
-    val screened =
-      if (screen) joined.filter(
-        graft.functions.BitmapFunctions.andCount(col("pk_a"), col("pk_b")) +
-          least(col("size_a") - col("pkc_a"), col("size_b") - col("pkc_b")) >= minReq)
-      else joined
-    screened
+    screenCandidates(attach(cands), minReq)
       .withColumn("n_common",
         graft.functions.BitmapFunctions.sortedAndCountBounded(
           col("bm_a"), col("bm_b"), minReq))
@@ -875,13 +849,12 @@ object Dedup {
   /** Incremental ingest dedup: verified near-dup pairs touching a NEW
     * batch — (new × corpus) ∪ (new × new) — against a corpus represented
     * ONLY by its [[nearDupIndex]]. The corpus text is never re-read:
-    * candidates come from equi-joining the batch's band buckets to the
-    * index's (for a daily batch ≪ corpus, [[saltedExplodeJoin]]'s
-    * broadcast fast path ships the batch side — under
+    * candidates come from [[incrementCandidates]]' one band join of the
+    * index and batch rows against the batch's (for a daily batch ≪
+    * corpus the broadcast fast path ships the batch side — under
     * `graft.dedup.maxBroadcastBandRows` the index scan is shuffle-free
-    * and no census job runs); verification equi-joins the
-    * candidate list to the stored hashed sets. Batch-internal dups use
-    * the same one-bucket-shuffle self-join as the backfill.
+    * and no census job runs); verification equi-joins the candidate
+    * list to the stored hashed sets.
     *
     * Id spaces must be disjoint (new ids are new — the ingest
     * precondition; ENFORCED by a guard riding the broadcast-sizing
@@ -892,151 +865,72 @@ object Dedup {
                      newDocs: DataFrame, idCol: String, textCol: String,
                      k: Int, threshold: Double, numPerm: Int, bands: Int,
                      candidatesPerDocHint: Option[Double] = None): DataFrame = {
+    val c = incrementCandidates(indexBands, newDocs, idCol, textCol, k, numPerm, bands)
+    // persisted: joined on BOTH candidate ends (the q72 docs-persist
+    // rationale), and the persist gives the broadcast decision a
+    // materialized frame to measure
+    val allSets = trackPersist(indexSets.unionByName(c.newSets))
+    val attach = attachSets(allSets, idCol, hashed = true,
+      _ => candidatesPerDocHint, disjointIds = true)
+    jaccardVerify(attach(c.pairs.select(least(col("pid"), col("rid")).as("id_a"),
+      greatest(col("pid"), col("rid")).as("id_b"))), threshold, hashed = true)
+  }
+
+  /** An increment batch's LSH candidates against a stored index: `pairs`
+    * holds (pid, rid, __new) — rid a batch doc, pid an index doc
+    * (__new = false) or a batch doc with pid < rid (__new = true) —
+    * each candidate pair exactly once. `newSets` is the batch's hashed
+    * sets and `smallBatch` the band-row probe's verdict.
+    */
+  private case class IncrementCandidates(pairs: DataFrame, newSets: DataFrame,
+                                         smallBatch: Boolean)
+
+  /** ONE salted band join feeds BOTH candidate channels (r13 ran two —
+    * index×batch and batch×batch — and the double generation was the
+    * whole small-scale premium over a single join): the probe side is
+    * the index's banded rows UNIONED with the batch's, the replicate
+    * side is the batch's, and the channel tag (__new) tells oriented
+    * batch→corpus candidates from ordered batch-internal ones. The
+    * first-agreeing-band filter (symmetric in its array arguments) makes
+    * each pair surface exactly once across the whole union, so no
+    * `.distinct()` — whose pairs×bands multiset shuffle was the measured
+    * q85 scale bottleneck at sf1 — is needed.
+    */
+  private def incrementCandidates(indexBands: DataFrame, newDocs: DataFrame,
+                                  idCol: String, textCol: String,
+                                  k: Int, numPerm: Int, bands: Int): IncrementCandidates = {
     require(indexBands.columns.contains("buckets"),
       "this index predates the round-10 banded format (no 'buckets' band-array " +
         "column) — rebuild it with nearDupIndex; the curate loop rewrites it " +
         "every batch, so one batch migrates")
     val (newBandsRaw, newSets) = nearDupIndex(newDocs, idCol, textCol, k, numPerm, bands)
-    val nb = trackPersist(newBandsRaw) // feeds the cross-batch join AND the self-join
-    // ONE bounded sizing probe of nb serves BOTH salted joins below
-    // (each would otherwise run its own limit(bound+1).count() over the
-    // same frame — a duplicate job + plan analysis per increment call)
-    val bcastRows = conf(nb, "graft.dedup.maxBroadcastBandRows",
-      256L << 10, min = 0L)
-    val nbSmall = bcastRows > 0 && {
-      val probeLimit = (math.min(bcastRows, Int.MaxValue - 1L) + 1L).toInt
-      nb.limit(probeLimit).count() <= bcastRows
-    }
-    // first-agreeing-band filter on BOTH candidate channels (see
-    // lshPairsFromSignatures): each (new, old) / (new, new) pair leaves
-    // its join exactly once, and the channels are disjoint by id spaces
-    // — so no `.distinct()`, whose pairs×bands multiset shuffle was the
-    // measured q85 scale bottleneck at sf1
-    // salted: the INDEX side (the big one at steady state) is salted,
-    // the batch side replicates g× — the q39 asymmetry
-    val vsCorpus = saltedExplodeJoin(
-        indexBands.select(col(idCol).as("id_o"), col("band"), col("bucket"),
-          col("buckets").as("bk_o")), "id_o",
-        nb.select(col(idCol).as("id_n"), col("band"), col("bucket"),
-          col("buckets").as("bk_n")),
-        Seq("band", "bucket"), replicateKnownSmall = Some(nbSmall))
-      .filter(col("id_n") =!= col("id_o"))
+    val nb = trackPersist(newBandsRaw)
+    val smallBatch = fitsBroadcastBandRows(nb)
+    def probeSide(df: DataFrame, isNew: Boolean): DataFrame =
+      df.select(col(idCol).as("pid"), col("band"), col("bucket"),
+        col("buckets").as("bk_p"), lit(isNew).as("__new"))
+    val idx = probeSide(indexBands, isNew = false)
+    val batch = probeSide(nb, isNew = true)
+    val replicate = nb.select(col(idCol).as("rid"), col("band"), col("bucket"),
+      col("buckets").as("bk_r"))
+    val keys = Seq("band", "bucket")
+    // the broadcast fast path widens the index BRANCH, not the union: the
+    // union's partition count is the SUM of its branches, so a 1-split
+    // slim index parquet would pass a width check on the batch side's
+    // partitions and still scan the whole index in one serial task (the
+    // q85 sf1 10 → 71 s shape) — and checking the union as well would
+    // run its exchanges once more at construction. On the censused path
+    // the shuffle restores parallelism and no repartition is paid.
+    val joined =
+      if (smallBatch) widenDegenerate(idx).unionByName(batch).join(broadcast(replicate), keys)
+      else saltedExplodeJoin(idx.unionByName(batch), "pid", replicate, keys,
+        fastPath = false)
+    val pairs = joined
+      .filter(col("pid") =!= col("rid"))
       .filter(graft.functions.BitmapFunctions
-        .noEarlierBandMatch(col("bk_n"), col("bk_o"), col("band")))
-      .select(least(col("id_n"), col("id_o")).as("id_a"),
-        greatest(col("id_n"), col("id_o")).as("id_b"))
-    val l = nb.select(col(idCol).as("id_a"), col("band"),
-      col("bucket"), col("buckets").as("bk_a"))
-    val r = nb.select(col(idCol).as("id_b"), col("band"),
-      col("bucket"), col("buckets").as("bk_b"))
-    val vsBatch = saltedExplodeJoin(l, "id_a", r, Seq("band", "bucket"),
-        replicateKnownSmall = Some(nbSmall))
-      .filter(col("id_a") < col("id_b"))
-      .filter(graft.functions.BitmapFunctions
-        .noEarlierBandMatch(col("bk_a"), col("bk_b"), col("band")))
-      .select("id_a", "id_b")
-    val cands = vsCorpus.union(vsBatch)
-    // persisted: joined on BOTH candidate ends (the q72 docs-persist
-    // rationale), and the persist gives the broadcast decision below a
-    // materialized frame to measure
-    val allSets = trackPersist(indexSets.unionByName(newSets))
-    val attach = verifySetsAttacher(allSets, idCol, candidatesPerDocHint)
-    jaccardVerify(attach(cands, Nil), threshold, hashed = true)
-  }
-
-  /** The increment verify-side plumbing, shared by [[dedupIncrement]]
-    * and [[assignIncrement]]: ONE sizing aggregation over the persisted
-    * union set frame (which also enforces the disjoint-id-space ingest
-    * precondition), the screen census gate, the memory-derived
-    * broadcast-vs-shuffle decision, and an `attach(cands, carry)`
-    * closure that joins bm/size (and, when screening pays, the
-    * packed-screen pk/pkc columns) onto the id_a/id_b ends of a
-    * candidate frame, carrying any extra grouping columns through.
-    */
-  private def verifySetsAttacher(allSets: DataFrame, idCol: String,
-      candidatesPerDocHint: Option[Double]): (DataFrame, Seq[String]) => DataFrame = {
-    // Verify-join strategy, MEASURED: hashed-set payloads are ~8 B per
-    // shingle, so a hashed index is often just past Spark's 10 MB
-    // autoBroadcast line even when it trivially fits memory — and then
-    // BOTH verify joins sort-merge, shuffling every candidate pair WITH
-    // its 2 set arrays (the sf1 sweep measured 58M pairs × ~4.6 KB
-    // riding two exchanges; q72's dense-bitmap sets sat under the line
-    // and AQE broadcast them — the whole 10× q72-vs-q85 gap). Under
-    // `graft.dedup.maxBroadcastSetBytes` (default: memory-derived, see
-    // defaultBroadcastSetBytes) the sets side broadcasts explicitly and
-    // the candidate stream never shuffles; past the dial (a truly
-    // corpus-sized index) the shuffled join is the correct plan and
-    // stands.
-    val est = allSets.agg(sum(col("set_size")), count(lit(1)),
-      count_distinct(col(idCol))).head()
-    // The disjoint-id-space precondition is ENFORCED, not just documented
-    // — it rides the sizing aggregation below for free. An overlapping id
-    // would let a (new, new) pair also surface through the (new, old)
-    // channel, and without the old `.distinct()` the union would emit
-    // duplicate verified rows.
-    require(est.isNullAt(0) || est.getLong(1) == est.getLong(2),
-      s"dedupIncrement requires disjoint id spaces (new ids are new — the " +
-        s"ingest precondition): the stored index and the batch share " +
-        s"${est.getLong(1) - est.getLong(2)} document id(s)")
-    // census gate: skip the screen columns entirely when the banding
-    // census says candidates/doc is below the pack+popcount break-even
-    // (output unchanged — the screen is a pre-filter; see screenPays)
-    val screen = screenPays(spark(allSets), candidatesPerDocHint)
-    // per-row payload: the sorted set (8 B/element) + (when screening)
-    // the packed-screen bitmap (screenWords longs) + sizes/id overhead
-    val estBytes =
-      if (est.isNullAt(0)) 0L
-      else est.getLong(0) * 8L +
-        est.getLong(1) *
-          (40L + (if (screen) 8L * screenWords(spark(allSets)) else 0L))
-    // The dial keeps its ORIGINAL semantics — an upper bound on the RAW
-    // payload estimate (so a value tuned under the old accounting keeps
-    // its cutover); unset, the bound derives from the deployed heap
-    // (defaultBroadcastSetBytes). The TRUE pinned footprint is ~4×: two
-    // copies of allSets ship (the two verify joins' broadcasts do not
-    // reuse one exchange — measured, see the canonical-child note below)
-    // and UnsafeRow + HashedRelation overhead roughly doubles the
-    // 8 B/element payload once built. Size the dial with that 4× in
-    // mind. Crossing the cutover the wrong way costs 3× — measured at
-    // the sf1 sweep: 164 s sort-merge vs 52 s broadcast on 58M pairs.
-    val maxBytes = spark(allSets).conf
-      .getOption("graft.dedup.maxBroadcastSetBytes").map(_.toLong)
-      .getOrElse(defaultBroadcastSetBytes(spark(allSets)))
-    val hint: DataFrame => DataFrame =
-      if (estBytes <= maxBytes) broadcast(_: DataFrame) else identity
-    // packed-screen columns derive from the STORED sorted sets (no index
-    // schema migration) and ride the same broadcast. The build side is
-    // the BARE frame — renames live in Projects ABOVE each join, keeping
-    // the two broadcast children canonically identical. MEASURED CAVEAT
-    // (round 12's final executed plans, SURVEY.md): under AQE the two
-    // joins materialize DISTINCT BroadcastQueryStages — two copies ship
-    // regardless of caching or child canonicalization; with AQE off the
-    // ReuseExchange rule collapses them to one. A planner property of
-    // this Spark, not a plan-shape bug: the single-copy reformulation
-    // (melt both pair sides through one join + regroup) shuffles every
-    // candidate with its set payload — the measured 3× regression. So
-    // the sizing estimate keeps the honest two-copies accounting; the
-    // pack/popcount compute is at least shared through persisted allSets.
-    val base =
-      if (screen) withPackedScreen(allSets)
-        .select(col(idCol), col("bm"), col("set_size"), col("pk"), col("pkc"))
-      else allSets.select(col(idCol), col("bm"), col("set_size"))
-    val extraA = if (screen)
-      Seq(col("pk").as("pk_a"), col("pkc").as("pkc_a")) else Nil
-    val extraB = if (screen)
-      Seq(col("pk").as("pk_b"), col("pkc").as("pkc_b")) else Nil
-    val carryA = if (screen) Seq(col("pk_a"), col("pkc_a")) else Nil
-    (cands: DataFrame, carry: Seq[String]) => {
-      val carryCols = carry.map(col)
-      val withA = cands.join(hint(base), cands("id_a") === base(idCol))
-        .select(Seq(col("id_a"), col("id_b")) ++ carryCols ++
-          Seq(col("bm").as("bm_a"), col("set_size").as("size_a")) ++ extraA: _*)
-      withA.join(hint(base), withA("id_b") === base(idCol))
-        .select(Seq(col("id_a"), col("id_b")) ++ carryCols ++
-          Seq(col("bm_a"), col("size_a")) ++ carryA ++
-          Seq(col("bm").as("bm_b"), col("set_size").as("size_b")) ++
-          extraB: _*)
-    }
+        .noEarlierBandMatch(col("bk_r"), col("bk_p"), col("band")))
+      .filter(!col("__new") || col("pid") < col("rid"))
+    IncrementCandidates(pairs, newSets, smallBatch)
   }
 
   /** Linear-output incremental dedup ASSIGNMENT — the curation-facing
@@ -1111,68 +1005,16 @@ object Dedup {
       k: Int, threshold: Double, numPerm: Int, bands: Int,
       candidatesPerDocHint: Option[Double] = None,
       contractedBatchOnly: Boolean = false): AssignEdges = {
-    require(indexBands.columns.contains("buckets"),
-      "this index predates the round-10 banded format (no 'buckets' band-array " +
-        "column) — rebuild it with nearDupIndex; the curate loop rewrites it " +
-        "every batch, so one batch migrates")
-    val (newBandsRaw, newSets) = nearDupIndex(newDocs, idCol, textCol, k, numPerm, bands)
-    val nb = trackPersist(newBandsRaw)
-    // ONE salted band join feeds BOTH candidate channels (r13 ran two —
-    // index×batch and batch×batch — and the double generation was the
-    // whole small-scale premium over the pair mode): the probe side is
-    // the index's banded rows UNIONED with the batch's, the replicate
-    // side is the batch's, and the channel tag (__new) splits the joined
-    // stream back into oriented batch→corpus candidates and ordered
-    // batch-internal candidates. Same salt census, same broadcast fast
-    // path, half the explode/join work.
-    val sess = newDocs.sparkSession
-    val bcastRows = conf(nb, "graft.dedup.maxBroadcastBandRows",
-      256L << 10, min = 0L)
-    // batch-sized? (bounded probe — mirrors saltedExplodeJoin's own fast
-    // path, which will take the broadcast plan under the same bound)
-    val smallBatch = bcastRows > 0 && {
-      val probeLimit = (math.min(bcastRows, Int.MaxValue - 1L) + 1L).toInt
-      nb.limit(probeLimit).count() <= bcastRows
-    }
-    val idxProbe0 = indexBands.select(col(idCol).as("pid"), col("band"),
-      col("bucket"), col("buckets").as("bk_p"), lit(false).as("__new"))
-    // per-BRANCH degenerate-scan guard: on the broadcast fast path the
-    // union's partition count is the SUM of its branches, so a 1-split
-    // slim index parquet would pass saltedExplodeJoin's width check on
-    // the batch side's partitions and still scan the whole index in one
-    // serial task (the q85 sf1 10 → 71 s shape). Widen the index branch
-    // itself when it is degenerate; on the censused path the shuffle
-    // restores parallelism and no repartition is paid.
-    val width = sess.conf.get("spark.sql.shuffle.partitions").toInt
-    val minParts = math.min(math.max(2, width / 2), 32)
-    val idxProbe =
-      if (smallBatch && indexBands.rdd.getNumPartitions < minParts)
-        idxProbe0.repartition(width)
-      else idxProbe0
-    val probe = idxProbe.unionByName(
-      nb.select(col(idCol).as("pid"), col("band"), col("bucket"),
-        col("buckets").as("bk_p"), lit(true).as("__new")))
-    val cands = saltedExplodeJoin(probe, "pid",
-        nb.select(col(idCol).as("rid"), col("band"), col("bucket"),
-          col("buckets").as("bk_r")),
-        Seq("band", "bucket"),
-        // nb was sized against the same bound three lines up; a slim
-        // select cannot grow it
-        replicateKnownSmall = Some(smallBatch))
-      .filter(col("pid") =!= col("rid"))
-      // first-agreeing-band filter (symmetric in its array arguments) so
-      // each pair surfaces exactly once across the whole union
-      .filter(graft.functions.BitmapFunctions
-        .noEarlierBandMatch(col("bk_r"), col("bk_p"), col("band")))
-      .filter(!col("__new") || col("pid") < col("rid"))
+    val c = incrementCandidates(indexBands, newDocs, idCol, textCol, k, numPerm, bands)
     // oriented batch→corpus (id_n = batch, id_o = index) and ordered
-    // batch-internal (id_a < id_b) channels, as in dedupIncrement
-    val vsCorpus = cands.filter(!col("__new"))
+    // batch-internal (id_a < id_b) channels
+    val vsCorpus = c.pairs.filter(!col("__new"))
       .select(col("rid").as("id_n"), col("pid").as("id_o"))
-    val vsBatch = cands.filter(col("__new"))
+    val vsBatch = c.pairs.filter(col("__new"))
       .select(col("pid").as("id_a"), col("rid").as("id_b"))
-    val allSets = trackPersist(indexSets.unionByName(newSets))
-    val attach = verifySetsAttacher(allSets, idCol, candidatesPerDocHint)
+    val allSets = trackPersist(indexSets.unionByName(c.newSets))
+    val attach = attachSets(allSets, idCol, hashed = true,
+      _ => candidatesPerDocHint, disjointIds = true)
     // codegen'd short-circuit any-match (AnyTrueAgg over PairMatchExpr):
     // the first verified edge of a group skips every later row's merge.
     // The row-wise screens stay a pre-aggregation FILTER on purpose —
@@ -1196,7 +1038,7 @@ object Dedup {
       .select(col("id_n").as("id_a"), col("id_o").as("id_b"),
         coalesce(col("__rep"), col("id_o")).as("grp_b"))
     val edgesA = trackPersist(
-      screenCandidates(attach(candsA, Seq("grp_b")), threshold, hashed = true)
+      jaccardScreen(attach(candsA), threshold)
         .groupBy(col("id_a"), col("grp_b"))
         .agg(anyMatch.as("m"))
         .filter(col("m"))
@@ -1214,7 +1056,7 @@ object Dedup {
     // increment broadcasts it (16 B/doc under the band-row bound) and
     // the vsBatch candidate stream never shuffles for the relabel.
     val hintL: DataFrame => DataFrame =
-      if (smallBatch) broadcast(_: DataFrame) else identity
+      if (c.smallBatch) broadcast(_: DataFrame) else identity
     val la = hintL(labelA.select(col("ea").as("id_a"), col("lbl").as("__la")))
     val lb = hintL(labelA.select(col("ea").as("id_b"), col("lbl").as("__lb")))
     val labeled = vsBatch
@@ -1238,8 +1080,7 @@ object Dedup {
     // salted-join + verify — measured 2 × ~3 s of the sf1 assignment's
     // premium over the pair mode. The frame itself is merge-graph-sized.
     val edgesB = trackPersist(
-      screenCandidates(attach(contracted, Seq("grp_a", "grp_b")),
-          threshold, hashed = true)
+      jaccardScreen(attach(contracted), threshold)
         .groupBy(col("grp_a"), col("grp_b"))
         .agg(anyMatch.as("m"))
         .filter(col("m"))
@@ -1248,14 +1089,12 @@ object Dedup {
     AssignEdges(edgesA, edgesB)
   }
 
-  private def spark(df: DataFrame) = df.sparkSession
-
-  /** Default raw-payload bound for the verify-join broadcast when the
-    * `graft.dedup.maxBroadcastSetBytes` dial is unset: sized from the
-    * DEPLOYED memory instead of a one-size guess (the adaptiveBanding
-    * posture — measure, don't hardcode). The true pinned footprint is
-    * ~4× the raw estimate (two shipped copies, measured non-reused
-    * under AQE, plus UnsafeRow/HashedRelation ≈2× build overhead);
+  /** Raw-payload bound for the verify-join broadcast ([[attachSets]]):
+    * sized from the DEPLOYED memory instead of a one-size guess (the
+    * adaptiveBanding posture — measure, don't hardcode). The true pinned
+    * footprint is ~4× the raw estimate (two shipped copies, measured
+    * non-reused under AQE, plus UnsafeRow/HashedRelation ≈2× build
+    * overhead);
     * budgeting that pinned footprint at ≤ heap/6 gives raw ≤ heap/24 —
     * a 64 g local heap allows ~2.7 GB raw (the sf10 125k-doc index's
     * ~340 MB estimate broadcasts, where the old flat 256 MB default
@@ -1268,10 +1107,9 @@ object Dedup {
     * (spark.executor.memory, Spark's own 1g default when unset — the
     * conservative answer for unknown executors): a 64 g-executor /
     * 2 g-driver skew must size to the driver or the collect itself
-    * OOMs. Local mode: the one JVM heap. The explicit dial always wins
-    * and keeps its raw-payload semantics.
+    * OOMs. Local mode: the one JVM heap.
     */
-  private[graft] def defaultBroadcastSetBytes(spark: org.apache.spark.sql.SparkSession): Long = {
+  private[graft] def defaultBroadcastSetBytes(spark: SparkSession): Long = {
     val heap =
       if (spark.sparkContext.isLocal) Runtime.getRuntime.maxMemory
       else math.min(
@@ -1393,6 +1231,51 @@ object Dedup {
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
       keys.map(col): _*)
 
+  /** The bounded band-row probe: does `replicate` hold at most
+    * `graft.dedup.maxBroadcastBandRows` rows (default 256k slim banded
+    * rows ≈ ~50 MB pinned — measured break-even: a ~200k-row broadcast
+    * still wins at sf1, a ~400k-row one loses ~25% to the censused
+    * shuffle; every measured at-scale corpus, sf1+ at ≥ 800k banded
+    * rows, keeps its censused salted-shuffle plan)? The probe is a
+    * BOUNDED count — limit(bound+1).count() — so it is NOT memoized: it
+    * costs at most bound+1 rows per call, and a frame that grows past
+    * the bound under an unchanged plan exits the fast path on its next
+    * call (a memoized full count would keep force-broadcasting a
+    * day-1-sized frame that has since grown 100× — an OOM, not the
+    * benign granularity drift the census memo tolerates). 0 disables
+    * the fast path.
+    */
+  private def fitsBroadcastBandRows(replicate: DataFrame): Boolean = {
+    val bound = conf(replicate.sparkSession, "graft.dedup.maxBroadcastBandRows",
+      256L << 10, min = 0L)
+    bound > 0 &&
+      replicate.limit((math.min(bound, Int.MaxValue - 1L) + 1L).toInt).count() <= bound
+  }
+
+  /** The degenerate-scan guard of the broadcast fast path: the probe
+    * side must still be WIDE. A slim banded parquet (a few MB of index
+    * files) scans as ONE split, and a serial probe re-creates the
+    * single-task explode [[spreadForExplode]] exists to prevent
+    * (measured: q85 sf1 10 → 71 s when the fast path probed the 1-split
+    * index directly). At the 100 TB operating mode the index has
+    * thousands of splits and probes shuffle-free. Only a DEGENERATE scan
+    * pays a round-robin repartition: fewer than min(width/2, 32)
+    * partitions. The 32 cap bounds the repartition regime by
+    * CONSTRUCTION — parquet splits are ≤ spark.sql.files.maxPartitionBytes
+    * (128 MB default), so fewer than 32 splits implies ≤ ~4 GB of slim
+    * banded rows and the one-pass exchange stays cheap regardless of how
+    * wide the session is; past 32 splits the parallelism is already
+    * adequate and the corpus-sized index is never reshuffled per batch.
+    * Reading the partition count plans the frame physically (under AQE
+    * it also runs the frame's pending shuffle stages) — this is the one
+    * construction-time planning site of the band joins.
+    */
+  private def widenDegenerate(probe: DataFrame): DataFrame = {
+    val width = probe.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    if (probe.rdd.getNumPartitions >= math.min(math.max(2, width / 2), 32)) probe
+    else probe.repartition(width)
+  }
+
   /** SALTED band/bucket candidate join — the skew half of the explode
     * problem [[spreadForExplode]]'s width pin alone can't fix: hash
     * clustering puts an entire bucket in ONE task, and a near-dup
@@ -1407,12 +1290,13 @@ object Dedup {
     * tasks (max task work m²/g).
     *
     * UNSET dial (the default): first a BROADCAST fast path — when the
-    * replicate side is batch-sized (`graft.dedup.maxBroadcastBandRows`,
-    * bounded limit(bound+1) probe count — never a memoized or full
-    * count), it broadcasts and no census, salt, or
-    * probe-side repartition happens at all (a broadcast join has no
-    * post-shuffle exchange to coalesce and spreads a hot bucket across
-    * the probe side's partitions by construction); past the bound, a
+    * replicate side is batch-sized ([[fitsBroadcastBandRows]]), it
+    * broadcasts and no census, salt, or width pin happens at all (a
+    * broadcast join has no post-shuffle exchange for AQE to coalesce,
+    * spreads a hot bucket across the probe side's partitions by
+    * construction, and keeps dedupIncrement's contract that the
+    * corpus-sized index is never shuffled per batch; only a degenerate
+    * probe scan is widened, [[widenDegenerate]]); past the bound, a
     * HOT/COLD SPLIT — [[hotCensus]] finds
     * the buckets whose exact pair product exceeds the per-task target,
     * and ONLY rows in those buckets pay the g× replication; the cold
@@ -1421,18 +1305,19 @@ object Dedup {
     * × g, not corpus × g — full-frame replication at a census-scale g
     * is the sf10 failure mode (290 GB of spill) the split prevents.
     * Explicit `graft.dedup.bucketSalt` keeps the original FULL-FRAME
-    * semantics as the caller's informed escape hatch. Pass the SMALLER
+    * semantics as the caller's informed escape hatch (e.g. an index that
+    * grows under an unchanged plan where the memoized census
+    * under-salts). Pass the SMALLER
     * frame as `replicate` so the g× inflation lands on the cheaper
     * side (the q39 salted-join asymmetry). g = 1 short-circuits to the
     * unsalted width-pinned join — no replication, no salt column.
     */
   private def saltedExplodeJoin(salted: DataFrame, saltedIdCol: String,
       replicate: DataFrame, keys: Seq[String],
-      // a caller that has ALREADY sized `replicate` against the same
-      // maxBroadcastBandRows bound passes its verdict here, skipping the
-      // duplicate limit(bound+1).count() probe job + plan analysis
-      // (assignIncrementEdges probed the identical frame one line up)
-      replicateKnownSmall: Option[Boolean] = None): DataFrame = {
+      // false when the caller already found `replicate` (or the frame
+      // it is a slim select of) past fitsBroadcastBandRows' bound,
+      // skipping a duplicate probe job + plan analysis
+      fastPath: Boolean = true): DataFrame = {
     def plain = spreadForExplode(salted, keys)
       .join(spreadForExplode(replicate, keys), keys)
     def saltJoin(l: DataFrame, r: DataFrame, g: Int): DataFrame = {
@@ -1444,70 +1329,15 @@ object Dedup {
         .join(spreadForExplode(rs, keys :+ "__salt"), keys :+ "__salt")
         .drop("__salt")
     }
-    val explicit = salted.sparkSession.conf
-      .getOption("graft.dedup.bucketSalt").map(_.toInt)
-    explicit.foreach(g => require(g >= 1 && g <= 1024,
+    val explicit = conf(salted.sparkSession, "graft.dedup.bucketSalt", min = 1L)
+    explicit.foreach(g => require(g <= 1024,
       s"graft.dedup.bucketSalt must be in [1, 1024], got $g"))
-    explicit match {
-      // the explicit dial keeps its original full-frame semantics — the
-      // caller's informed escape hatch (e.g. an index that grows under
-      // an unchanged plan where the memoized census under-salts)
+    explicit.map(_.toInt) match {
       case Some(1) => plain
       case Some(g) => saltJoin(salted, replicate, g)
+      case None if fastPath && fitsBroadcastBandRows(replicate) =>
+        widenDegenerate(salted).join(broadcast(replicate), keys)
       case None =>
-        // STEADY-STATE fast path BEFORE any census: when the replicate
-        // side is batch-sized (a daily increment's banded rows, or a
-        // gate-scale corpus), BROADCAST it instead of censusing and
-        // repartitioning. A broadcast join needs neither the width pin
-        // (no post-shuffle exchange for AQE to coalesce — parallelism
-        // is the probe side's scan/cache partitioning) nor the salt (a
-        // hot bucket's probe rows are already spread across the probe
-        // side's partitions), and it keeps dedupIncrement's contract
-        // that the corpus-sized index is never shuffled per batch. The
-        // row bound is a dial (`graft.dedup.maxBroadcastBandRows`,
-        // default 256k slim banded rows ≈ ~50 MB pinned — measured
-        // break-even: a ~200k-row broadcast still wins at sf1, a
-        // ~400k-row one loses ~25% to the censused shuffle)
-        // chosen so every measured at-scale corpus (sf1+: ≥ 800k
-        // banded rows) keeps its censused salted-shuffle plan. The
-        // sizing probe is a BOUNDED count — limit(bound+1).count() —
-        // so it is NOT memoized: it costs at most bound+1 rows per
-        // call, and a frame that grows past the bound under an
-        // unchanged plan exits the fast path on its next call (a
-        // memoized full count would keep force-broadcasting a
-        // day-1-sized frame that has since grown 100× — an OOM, not
-        // the benign granularity drift the census memo tolerates).
-        val bcastRows = conf(salted, "graft.dedup.maxBroadcastBandRows",
-          256L << 10, min = 0L)
-        val fastPath = bcastRows > 0 && replicateKnownSmall.getOrElse {
-          val probeLimit = (math.min(bcastRows, Int.MaxValue - 1L) + 1L).toInt
-          replicate.limit(probeLimit).count() <= bcastRows
-        }
-        if (fastPath) {
-          // The probe side must still be WIDE: a slim banded parquet
-          // (a few MB of index files) scans as ONE split, and a serial
-          // probe re-creates the single-task explode this whole
-          // apparatus exists to prevent (measured: q85 sf1 10 → 71 s
-          // when the fast path probed the 1-split index directly). At
-          // the 100 TB operating mode the index has thousands of
-          // splits and probes shuffle-free. Only a DEGENERATE scan
-          // pays a round-robin repartition: fewer than
-          // min(width/2, 32) partitions. The 32 cap bounds the
-          // repartition regime by CONSTRUCTION — parquet splits are
-          // ≤ spark.sql.files.maxPartitionBytes (128 MB default), so
-          // fewer than 32 splits implies ≤ ~4 GB of slim banded rows
-          // and the one-pass exchange stays cheap regardless of how
-          // wide the session is; past 32 splits the parallelism is
-          // already adequate and the corpus-sized index is never
-          // reshuffled per batch (the steady-state contract).
-          val width = salted.sparkSession.conf
-            .get("spark.sql.shuffle.partitions").toInt
-          val minParts = math.min(math.max(2, width / 2), 32)
-          val probe =
-            if (salted.rdd.getNumPartitions >= minParts) salted
-            else salted.repartition(width)
-          probe.join(broadcast(replicate), keys)
-        } else {
         val (g, hotHashes) = hotCensus(salted, replicate, keys)
         if (g == 1 || hotHashes.isEmpty) plain
         else {
@@ -1526,17 +1356,26 @@ object Dedup {
           cold.unionByName(
             saltJoin(salted.filter(isHot), replicate.filter(isHot), g))
         }
-        }
     }
   }
 
-  /** Read a long-valued graft dial with a default; validated ≥ min. */
-  private def conf(df: DataFrame, key: String, dflt: Long,
-                   min: Long): Long = {
-    val v = df.sparkSession.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-    require(v >= min, s"$key must be >= $min, got $v")
-    v
-  }
+  /** Read a graft dial: the set value, if any. Every `graft.dedup.*` key
+    * is read through this reader or its two long-valued overloads.
+    */
+  private def conf(spark: SparkSession, key: String): Option[String] =
+    spark.conf.getOption(key)
+
+  /** A long-valued graft dial when set, validated ≥ min. */
+  private def conf(spark: SparkSession, key: String, min: Long): Option[Long] =
+    conf(spark, key).map { raw =>
+      val v = raw.toLong
+      require(v >= min, s"$key must be >= $min, got $v")
+      v
+    }
+
+  /** A long-valued graft dial with a default; validated ≥ min. */
+  private def conf(spark: SparkSession, key: String, dflt: Long, min: Long): Long =
+    conf(spark, key, min).getOrElse(dflt)
 
   /** Default pairs-per-task target when `graft.dedup.targetPairsPerTask`
     * is unset: a per-task WALL budget divided by the MEASURED per-pair
@@ -1555,28 +1394,18 @@ object Dedup {
     * measured cost and every pairs-per-task consumer (hot-bucket salt,
     * containment budget, SemDeDup cell width) re-sizes coherently.
     */
-  private[graft] def defaultTargetPairsPerTask(
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    def dial(key: String, dflt: Long): Long = {
-      val v = spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-      require(v >= 1, s"$key must be >= 1, got $v")
-      v
-    }
-    val ms = dial("graft.dedup.targetTaskMillis", 2000L)
-    val ns = dial("graft.dedup.measuredNanosPerPair", 500L)
+  private[graft] def defaultTargetPairsPerTask(spark: SparkSession): Long = {
+    val ms = conf(spark, "graft.dedup.targetTaskMillis", 2000L, min = 1L)
+    val ns = conf(spark, "graft.dedup.measuredNanosPerPair", 500L, min = 1L)
     math.max(1L, ms * 1000000L / ns)
   }
 
   /** `graft.dedup.targetPairsPerTask`, explicit or derived (see
     * [[defaultTargetPairsPerTask]]).
     */
-  private[graft] def targetPairsPerTask(
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    val v = spark.conf.getOption("graft.dedup.targetPairsPerTask")
-      .map(_.toLong).getOrElse(defaultTargetPairsPerTask(spark))
-    require(v >= 1, s"graft.dedup.targetPairsPerTask must be >= 1, got $v")
-    v
-  }
+  private[graft] def targetPairsPerTask(spark: SparkSession): Long =
+    conf(spark, "graft.dedup.targetPairsPerTask", min = 1L)
+      .getOrElse(defaultTargetPairsPerTask(spark))
 
   /** Census-derived salt for [[saltedExplodeJoin]]: ONE census join of
     * the two per-key count frames finds every HOT bucket — a key whose
@@ -1623,12 +1452,12 @@ object Dedup {
   private[graft] def hotCensus(l: DataFrame, r: DataFrame,
       keys: Seq[String]): (Int, Seq[Long]) = {
     val target = targetPairsPerTask(l.sparkSession)
-    val volumeCap = conf(l, "graft.dedup.maxSaltVolumeRows", 64L << 20,
+    val volumeCap = conf(l.sparkSession, "graft.dedup.maxSaltVolumeRows", 64L << 20,
       min = 1L)
     // maxHot = 0 is legal (an engagement probe: ANY hot bucket
     // refuses); negative would silently disarm both the refusal rail
     // and the salting (limit(0) collects nothing), so min = 0
-    val maxHot = conf(l, "graft.dedup.maxHotBuckets", 1L << 17,
+    val maxHot = conf(l.sparkSession, "graft.dedup.maxHotBuckets", 1L << 17,
       min = 0L).toInt
     def hash(df: DataFrame): Long =
       df.queryExecution.analyzed.semanticHash().toLong
@@ -1744,13 +1573,84 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** The bounded edge collect shared by [[dedupClusters]] and
+    * [[updateClusters]]. Near-dup pair lists are orders of magnitude
+    * smaller than the corpus (they are the output of LSH/Jaccard
+    * candidate generation, not the data), so below
+    * `graft.dedup.maxDriverEdges` (default 4M) — the broadcast-threshold
+    * philosophy — the caller works on the driver (`Left`: the edges as
+    * flat (a, b) id pairs; integral, non-null ids only). The slim
+    * frame's rows are persisted through this object's tracker, and ONE
+    * job computes them into the cache and returns each partition's
+    * count plus its ids when it holds at most an even share of the
+    * bound, so the driver receives about maxEdges edges at most. Past
+    * the bound (`Right`: a frame over the persisted rows, and the rows
+    * to release) the caller's distributed or lazy path reads what that
+    * job computed instead of running the pair DAG a second time. The
+    * small path pays the one job the bounded limit(max+1).collect() it
+    * replaces paid: a persisted frame would pay two (under AQE its
+    * cache is materialized by a job of its own), and shipping Rows
+    * instead of longs measured ~90 ms more per 55k edges.
+    */
+  private def boundedEdges(slim: DataFrame): Either[Array[Long], (DataFrame, RDD[InternalRow])] = {
+    val maxEdges = conf(slim.sparkSession, "graft.dedup.maxDriverEdges", 4000000L, min = 0L)
+    require(maxEdges <= Int.MaxValue - 1L,
+      s"graft.dedup.maxDriverEdges $maxEdges exceeds the bounded-collect range")
+    val rows = caches.trackPersist(slim.queryExecution.toRdd.map(_.copy()))
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(slim.schema)
+    val persisted = Right((slim.sparkSession.createDataFrame(
+      rows.map(r => toRow(r).asInstanceOf[Row]), slim.schema), rows))
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    val ids = slim.schema.fields.map(_.dataType).collect {
+      case LongType => (r: InternalRow, i: Int) => r.getLong(i)
+      case IntegerType => (r: InternalRow, i: Int) => r.getInt(i).toLong
+      case ShortType => (r: InternalRow, i: Int) => r.getShort(i).toLong
+      case ByteType => (r: InternalRow, i: Int) => r.getByte(i).toLong
+    }
+    if (ids.length != 2) return persisted
+    val (idA, idB) = (ids(0), ids(1))
+    // per partition: (rows, any null id, the ids when within `cap` rows)
+    def edgeIds(it: Iterator[InternalRow], cap: Long): (Long, Boolean, Option[Array[Long]]) = {
+      val kept = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0L
+      var nulls = false
+      it.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) nulls = true
+        else if (n < cap) { kept += idA(r, 0); kept += idB(r, 1) }
+        n += 1
+      }
+      (n, nulls, if (n <= cap) Some(kept.result()) else None)
+    }
+    val share = maxEdges / math.max(1, rows.getNumPartitions) + 1
+    // an empty local frame has no partitions, and a job over none still
+    // posts job events
+    val parts =
+      if (rows.getNumPartitions == 0) Array.empty[(Long, Boolean, Option[Array[Long]])]
+      else rows.mapPartitions(it => Iterator(edgeIds(it, share))).collect()
+    if (parts.exists(_._2) || parts.iterator.map(_._1).sum > maxEdges) return persisted
+    // a partition past its share (a skewed small graph) is read back
+    // from the cache
+    val skewed = parts.indices.filter(parts(_)._3.isEmpty)
+    val late =
+      if (skewed.isEmpty) Nil
+      else slim.sparkSession.sparkContext.runJob(rows,
+        (it: Iterator[InternalRow]) => edgeIds(it, Long.MaxValue)._3.get, skewed).toSeq
+    caches.releaseOne(rows)
+    Left((parts.flatMap(_._3) ++ late).flatten)
+  }
+
   /** Connected components over a near-duplicate pair list: every
     * document gets the smallest doc id reachable through pair edges as
     * its cluster id — the canonical "collapse near-dup candidates into
     * groups, keep one representative" step after [[minhashLshPairs]] /
     * [[ngramJaccardPairs]].
     *
-    * Each round takes, per node, the min over: its own label, its
+    * A graph within [[boundedEdges]]' bound runs union-find on the
+    * driver in one pass, which beats 5+ rounds of driver-synchronized
+    * distributed joins whose per-round scheduling cost exceeds the whole
+    * graph (measured: 3.3s for a 16-edge graph). Above it, each round
+    * takes, per node, the min over: its own label, its
     * neighbors' labels (edge join), and its label's label (pointer
     * doubling — the path-halving step of distributed union-find). The
     * doubling step makes convergence O(log diameter) driver-synchronized
@@ -1762,67 +1662,35 @@ object Dedup {
     */
   def dedupClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
     val spark = pairs.sparkSession
-    // Near-dup pair lists are orders of magnitude smaller than the corpus
-    // (they're the output of LSH/Jaccard candidate generation, not the
-    // data). Below this bound — same philosophy as the broadcast-join
-    // threshold — union-find on the driver in one pass beats 5+ rounds of
-    // driver-synchronized distributed joins whose per-round scheduling
-    // cost exceeds the whole graph (measured: 3.3s for a 16-edge graph).
-    // Above it, distributed pointer doubling below scales arbitrarily.
-    val maxDriverEdges = spark.conf.getOption("graft.dedup.maxDriverEdges")
-      .map(_.toLong).getOrElse(4000000L)
-    require(maxDriverEdges <= Int.MaxValue - 1L,
-      s"graft.dedup.maxDriverEdges $maxDriverEdges exceeds the bounded-collect range")
     val fwdRaw = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
     val srcType = fwdRaw.schema("src").dataType
-    val integralIds = srcType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
+    val (fwd, fwdRows) = boundedEdges(fwdRaw) match {
+      case Right(persisted) => persisted
+      case Left(edgeIds) =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          // path compression
+          var c = x
+          while (parent.getOrElse(c, c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+          r
+        }
+        // union with min-id root: the smaller root adopts the larger, so
+        // every component's root IS its minimum id — the same fixpoint the
+        // distributed label propagation reaches.
+        val nodes = scala.collection.mutable.LongMap.empty[Unit]
+        edgeIds.grouped(2).foreach { case Array(a, b) =>
+          nodes(a) = (); nodes(b) = ()
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+        }
+        val rows = nodes.keysIterator.map(n => (n, find(n))).toSeq
+        import spark.implicits._
+        return rows.toDF("node", "cluster")
+          .select(col("node").cast(srcType).as("node"),
+            col("cluster").cast(srcType).as("cluster"))
     }
-    // ONE bounded probe decides the path AND delivers the small case's
-    // edges: limit(max+1).collect() — the r14 shape (cache + full count
-    // + collect) ran two passes and three driver-side plan analyses over
-    // the pair frame per call, pure constructor latency for the common
-    // small graph (dedupClusters is EAGER — every assignment/update call
-    // pays it). Past the bound the extra collected rows are discarded
-    // and the distributed path re-plans from fwdRaw; the full count is
-    // never needed (the old code only compared it to the bound).
-    val boundedEdges: Array[org.apache.spark.sql.Row] =
-      if (integralIds) fwdRaw.limit((maxDriverEdges + 1L).toInt).collect()
-      else Array.empty
-    if (integralIds && boundedEdges.length <= maxDriverEdges) {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        // path compression
-        var c = x
-        while (parent.getOrElse(c, c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
-        r
-      }
-      // union with min-id root: the smaller root adopts the larger, so
-      // every component's root IS its minimum id — the same fixpoint the
-      // distributed label propagation reaches.
-      def asLong(v: Any): Long = v match {
-        case n: java.lang.Number => n.longValue()
-        case other => throw new IllegalArgumentException(
-          s"dedupClusters needs numeric node ids, got $other")
-      }
-      val nodes = scala.collection.mutable.LongMap.empty[Unit]
-      boundedEdges.foreach { r =>
-        val a = asLong(r.get(0)); val b = asLong(r.get(1))
-        nodes(a) = (); nodes(b) = ()
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val rows = nodes.keysIterator.map(n => (n, find(n))).toSeq
-      import spark.implicits._
-      return rows.toDF("node", "cluster")
-        .select(col("node").cast(srcType).as("node"),
-          col("cluster").cast(srcType).as("cluster"))
-    }
-    val fwd = fwdRaw.cache()
     val edges = fwd.unionByName(
       fwd.select(col("dst").as("src"), col("src").as("dst"))).cache()
     val nodes = edges.select(col("src").as("node")).distinct()
@@ -1848,7 +1716,7 @@ object Dedup {
       rounds += 1
     }
     edges.unpersist(blocking = false)
-    fwd.unpersist(blocking = false)
+    caches.releaseOne(fwdRows)
     // Pointer doubling converges in O(log diameter) rounds, so hitting
     // the cap means something is deeply wrong — fail loud rather than
     // silently returning non-fixpoint (wrong) cluster labels.
@@ -1893,25 +1761,24 @@ object Dedup {
     // sized — the SAME bound dedupClusters' driver union-find already
     // collects — so localize it once: downstream references analyze a
     // LocalRelation, and the relabel's own bounded collect becomes
-    // driver-local. Past the bound (or non-integral ids) the lazy frame
-    // passes through unchanged — the 100 TB path is untouched.
-    val maxDriverEdges = sess.conf.getOption("graft.dedup.maxDriverEdges")
-      .map(_.toLong).getOrElse(4000000L)
-    require(maxDriverEdges <= Int.MaxValue - 1L,
-      s"graft.dedup.maxDriverEdges $maxDriverEdges exceeds the bounded-collect range")
+    // driver-local. Past the bound (or non-integral ids) the persisted
+    // slim frame passes through, so the probe's work is not run again.
     val slim = pairs.select(col(aCol), col(bCol))
-    val integralIds = slim.schema.fields.forall(_.dataType match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-      case _ => false
-    })
-    val pairsLocal =
-      if (integralIds) {
-        val rows = slim.limit((maxDriverEdges + 1L).toInt).collect()
-        if (rows.length <= maxDriverEdges)
-          sess.createDataFrame(java.util.Arrays.asList(rows: _*), slim.schema)
-        else slim
-      } else slim
+    val pairsLocal = boundedEdges(slim) match {
+      case Left(edgeIds) =>
+        // back to each column's own integral type, so the local frame
+        // keeps the pair frame's schema (nullability included)
+        val types = slim.schema.fields.map(_.dataType)
+        def typed(v: Long, i: Int): Any = types(i) match {
+          case org.apache.spark.sql.types.IntegerType => v.toInt
+          case org.apache.spark.sql.types.ShortType => v.toShort
+          case org.apache.spark.sql.types.ByteType => v.toByte
+          case _ => v
+        }
+        val rows = edgeIds.grouped(2).map { case Array(a, b) => Row(typed(a, 0), typed(b, 1)) }
+        sess.createDataFrame(java.util.Arrays.asList(rows.toSeq: _*), slim.schema)
+      case Right((persisted, _)) => persisted
+    }
     val sa = stored.select(col("node").as(aCol), col("cluster").as("__ra"))
     val sb = stored.select(col("node").as(bCol), col("cluster").as("__rb"))
     val reps = pairsLocal.select(col(aCol), col(bCol))

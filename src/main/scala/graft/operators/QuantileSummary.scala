@@ -58,8 +58,8 @@ object QuantileSummary {
     math.max(floor.toLong, math.min(maxGroupSize, maxExactCapacity.toLong)).toInt
   }
 
-  /** Default exactness ceiling when the `graft.quantile.maxExactCapacity`
-    * dial is unset: derived from the DEPLOYED memory and the MEASURED
+  /** The exactness ceiling q107 sizes its summary under: derived from
+    * the DEPLOYED memory and the MEASURED
     * group count instead of a flat 2²⁰ (the defaultBroadcastSetBytes
     * posture — the old flat ceiling forced the approximate regime at the
     * 100× rung's 2.03M max group on a heap that could trivially afford

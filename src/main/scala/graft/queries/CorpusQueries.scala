@@ -368,8 +368,7 @@ object CorpusQueries extends QuerySet {
   // compaction). Capacity is CENSUS-DRIVEN, not guessed: one map-side-
   // combined count census measures the max group size and
   // QuantileSummary.capacityFor sizes the summary to it (floor 4096 —
-  // the historical gate capacity — ceiling `graft.quantile.
-  // maxExactCapacity`; unset, the ceiling derives from the deployed
+  // the historical gate capacity — ceiling derived from the deployed
   // executor heap and the measured group count, clamped to
   // [2²⁰, 2²⁴] — see QuantileSummary.defaultMaxExactCapacity), so
   // the n ≤ capacity EXACT contract holds at whatever scale the query
@@ -378,8 +377,8 @@ object CorpusQueries extends QuerySet {
   // ceil(p·n/100), integer ceil-division both sides — no float
   // boundary) hash-matching the exact window oracle. Groups beyond the
   // memory ceiling get the documented rank-error regime
-  // (≈ n·log₂(n/c)/c) instead of silent OOM — raise the dial to buy
-  // exactness with memory. The scale contrast with exact q43: that
+  // (≈ n·log₂(n/c)/c) instead of silent OOM — a bigger heap buys
+  // exactness. The scale contrast with exact q43: that
   // plan sorts every group's full row set; this one ships
   // O(c·log n) state per group with map-side combine — the only viable
   // shape when groups have billions of rows.
@@ -389,12 +388,9 @@ object CorpusQueries extends QuerySet {
       .agg(max("count").as("mx"), count(lit(1)).as("groups")).head()
     val maxGroup = if (censusRow.isNullAt(0)) 0L else censusRow.getLong(0)
     val nGroups = censusRow.getLong(1)
-    // unset ceiling derives from deployed heap + the measured group
-    // count (defaultMaxExactCapacity — see its scaladoc for the memory
-    // model); the explicit dial always wins
-    val ceiling = s.conf.getOption("graft.quantile.maxExactCapacity")
-      .map(_.toInt).getOrElse(
-        graft.operators.QuantileSummary.defaultMaxExactCapacity(s, nGroups))
+    // the ceiling derives from deployed heap + the measured group count
+    // (defaultMaxExactCapacity — see its scaladoc for the memory model)
+    val ceiling = graft.operators.QuantileSummary.defaultMaxExactCapacity(s, nGroups)
     val capacity = graft.operators.QuantileSummary.capacityFor(
       maxGroup, maxExactCapacity = ceiling)
     val qagg = udaf(

@@ -2,6 +2,7 @@ package graft.util
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -16,6 +17,7 @@ import org.apache.spark.storage.StorageLevel
   */
 final class CacheTracker {
   private val tracked = ArrayBuffer.empty[DataFrame]
+  private val trackedRdds = ArrayBuffer.empty[RDD[_]]
   private val memos = ArrayBuffer.empty[SessionMemo[_, _]]
   CacheTracker.register(this)
 
@@ -23,6 +25,16 @@ final class CacheTracker {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     tracked += p
     p
+  }
+
+  /** An RDD persisted under the same release: for rows a job both
+    * computes into the cache and consumes, where a persisted frame
+    * would cost a second job (under AQE a frame's first read
+    * materializes its cache as a job of its own).
+    */
+  def trackPersist[T](rdd: RDD[T]): RDD[T] = tracked.synchronized {
+    trackedRdds += rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    rdd
   }
 
   /** A new memo owned by this tracker. `frames` names the persisted
@@ -46,6 +58,8 @@ final class CacheTracker {
     tracked.synchronized {
       tracked.foreach(_.unpersist(blocking = false))
       tracked.clear()
+      trackedRdds.foreach(_.unpersist(blocking = false))
+      trackedRdds.clear()
     }
   }
 
@@ -57,6 +71,12 @@ final class CacheTracker {
     df.unpersist(blocking = false)
     val i = tracked.indexWhere(_ eq df)
     if (i >= 0) tracked.remove(i)
+  }
+
+  def releaseOne(rdd: RDD[_]): Unit = tracked.synchronized {
+    rdd.unpersist(blocking = false)
+    val i = trackedRdds.indexWhere(_ eq rdd)
+    if (i >= 0) trackedRdds.remove(i)
   }
 }
 

@@ -468,6 +468,31 @@ class DedupSpec extends SparkSpec {
     assert(fromScratch === Map(3L -> 3L, 4L -> 3L, 7L -> 3L))
   }
 
+  test("an edge frame past maxDriverEdges runs its pair source once") {
+    val s = spark
+    import s.implicits._
+    // a chain 0-1-...-12 whose source counts the rows it computes; the
+    // bound of 1 edge forces the distributed (dedupClusters) and lazy
+    // (updateClusters) paths, which must read the probe's persisted rows
+    val runs = s.sparkContext.longAccumulator("pair source rows")
+    val bump = udf { (id: Long) => runs.add(1L); id }
+    def pairs = s.range(0, 12, 1, 3)
+      .select(bump(col("id")).as("id_a"), (col("id") + 1).as("id_b"))
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    withConf("graft.dedup.maxDriverEdges" -> "1") {
+      assert(labels(Dedup.dedupClusters(pairs, "id_a", "id_b")) ===
+        (0L to 12L).map(_ -> 0L).toMap)
+      assert(runs.value === 12L, "dedupClusters ran the pair source more than once")
+      runs.reset()
+      val stored = Seq((0L, 0L), (1L, 0L), (20L, 20L)).toDF("node", "cluster")
+      assert(labels(Dedup.updateClusters(stored, pairs, "id_a", "id_b")) ===
+        (0L to 12L).map(_ -> 0L).toMap + (20L -> 20L))
+      assert(runs.value === 12L, "updateClusters ran the pair source more than once")
+    }
+    Dedup.releaseCaches()
+  }
+
   test("span dedup flags exactly the later occurrences of repeated spans") {
     val s = spark
     import s.implicits._

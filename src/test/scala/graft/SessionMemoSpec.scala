@@ -69,6 +69,43 @@ class SessionMemoSpec extends SparkSpec {
     assert(DedupQueries.bandingFor(spark, dir, JaccardT) === fresh)
   }
 
+  test("a rewritten corpus rebuilds every memo family after a release") {
+    val dir = memoDir()
+    // salt_census fills only on the censused band join, which the
+    // broadcast fast path skips at this scale
+    val families = Families + "salt_census"
+    val fillQueries = Seq("q69", "q72", "q192", "q49", "q189", "q149", "q78")
+    def held(s: SparkSession): Map[String, Seq[Any]] =
+      CacheTracker.memos.filter(m => families(m.name)).map(m => m.name -> m.valuesFor(s)).toMap
+    def counts(s: SparkSession): Seq[Long] = fillQueries.map(name => q(name)(s, dir).count())
+    def fill(): Unit =
+      try {
+        spark.conf.set("graft.dedup.maxBroadcastBandRows", "0")
+        fillAll(spark, dir)
+      } finally spark.conf.unset("graft.dedup.maxBroadcastBandRows")
+    val full = Seq("documents", "embeddings", "events").map(t => t -> Tables.table(spark, sf, t))
+    rewrite(dir, "documents", full.head._2.filter(col("doc_id") % 4 =!= 1))
+    rewrite(dir, "embeddings", full(1)._2.filter(col("vec_id") % 4 =!= 1))
+    rewrite(dir, "events", full(2)._2.filter(col("event_id") % 4 =!= 1))
+    fill()
+    val before = held(spark)
+    val reshaped = counts(spark)
+    SparkEntry.releaseAllCaches()
+    full.foreach { case (t, df) => rewrite(dir, t, df) }
+    fill()
+    val after = held(spark)
+    val unfilled = families.filter(f => after.getOrElse(f, Nil).isEmpty)
+    assert(unfilled.isEmpty, s"no entry after the refill: ${unfilled.mkString(", ")}")
+    val stale = families.filter(f => after(f).exists(v =>
+      before.getOrElse(f, Nil).exists(_.asInstanceOf[AnyRef] eq v.asInstanceOf[AnyRef])))
+    assert(stale.isEmpty, s"pre-rewrite values served after the release: ${stale.mkString(", ")}")
+    // every fill query now answers for the full corpus, as a fresh
+    // session reading the same files does
+    val got = counts(spark)
+    assert(got === counts(spark.newSession()))
+    assert(got !== reshaped, "the reshaped corpus must answer differently")
+  }
+
   test("rewritten events and a clearCache refit the scoring model") {
     val dir = copyOf("events", "customer")
     def probs(m: LogisticRegressionModel): Array[Double] =
