@@ -5,8 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, Spar
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StructField, StructType, TimestampType}
 
-import graft.operators.{Incremental, Scd}
+import graft.operators.Scd
 import graft.sources.{DelimitedSource, FileIngest, JsonlSource, XlsxSource}
+import graft.sources.Compaction.{requireNoOrphanStage, writeSwap}
 
 /** Metadata-driven staging→DWH orchestration — the reference's ETL core
   * (etl.py:132-284) re-expressed as a library of lazy plans.
@@ -20,6 +21,15 @@ import graft.sources.{DelimitedSource, FileIngest, JsonlSource, XlsxSource}
   */
 object EtlPipeline {
 
+  /** The warehouse's meta tables, stored beside the data tables: the
+    * per-target watermarks of the file loop (business dates) and of the
+    * database loop (timestamps) — the reference's trsh_meta_etl_update —
+    * and the run log, trsh_meta_etl_run_log.
+    */
+  val WatermarkTable = "etl_watermark"
+  val TsWatermarkTable = "etl_watermark_ts"
+  val RunLogTable = "etl_run_log"
+
   /** Reference main.ddl:271-347 row, minus the Postgres-isms. */
   case class TableMapping(
       sourceName: String,
@@ -27,34 +37,6 @@ object EtlPipeline {
       key: String,
       payload: Seq[String],
       scd: Int)
-
-  case class RunResult(target: String, merged: DataFrame, log: DataFrame)
-
-  /** Merge one staged source into its DWH target.
-    *
-    * scd=1 → [[Scd.scd1Merge]] (upsert, action-tagged)
-    * scd=2 → [[Scd.scd2Merge]] against the provided history
-    */
-  def mergeTable(runId: Long, mapping: TableMapping, stg: DataFrame,
-                 dwh: DataFrame, deleteTs: String): RunResult = {
-    val merged = mapping.scd match {
-      case 1 => Scd.scd1Merge(dwh, stg, mapping.key, mapping.payload)
-      case 2 => Scd.scd2Merge(dwh, stg, mapping.key, mapping.payload, deleteTs)
-      case other => throw new IllegalArgumentException(s"unsupported scd=$other")
-    }
-    val log = runLog(runId, mapping.targetName, merged, mapping.scd)
-    RunResult(mapping.targetName, merged, log)
-  }
-
-  /** Run-log row (reference trsh_meta_etl_run_log): inserted/updated
-    * counts derived from the merge output itself.
-    */
-  private def runLog(runId: Long, table: String, merged: DataFrame, scd: Int): DataFrame = {
-    val cols = mergeCounts(scd)
-    merged.agg(cols.head, cols.tail: _*)
-      .select(lit(runId).as("run_id"), lit(table).as("table_name"),
-        col("rows_inserted"), col("rows_updated"), col("rows_deleted"))
-  }
 
   /** The run-log counts as aggregates over a merge output: scd1 counts
     * its `action` tags, scd2 its live versions and tombstones.
@@ -68,16 +50,6 @@ object EtlPipeline {
       count(when(!col("deleted_flg"), 1)).as("rows_inserted"),
       lit(0L).as("rows_updated"),
       count(when(col("deleted_flg"), 1)).as("rows_deleted"))
-
-  /** Incremental staging pull (reference etl.py:190-199): only rows whose
-    * change timestamp is past the stored watermark.
-    */
-  def stage(source: DataFrame, createCol: String, updateCol: Option[String],
-            watermark: String): DataFrame =
-    updateCol match {
-      case Some(u) => Incremental.changedSince(source, createCol, u, watermark)
-      case None    => Incremental.newerThan(source, createCol, watermark)
-    }
 
   // ------------------------------------------------------------------
   // End-to-end file-driven run (reference etl.py:132-189 from_file +
@@ -110,7 +82,7 @@ object EtlPipeline {
         c, org.apache.spark.sql.types.StringType)))
 
   /** What one `run` did: the run-log rows it appended (also persisted to
-    * `<warehouseDir>/etl_run_log` with run start/end timestamps), and
+    * the [[RunLogTable]] with run start/end timestamps), and
     * which inbox files it consumed.
     */
   case class RunReport(runId: Long, log: DataFrame,
@@ -127,7 +99,7 @@ object EtlPipeline {
     * doesn't have this gap).
     */
   def nextRunId(spark: SparkSession, warehouseDir: String): Long = {
-    val path = s"$warehouseDir/etl_run_log"
+    val path = s"$warehouseDir/$RunLogTable"
     if (!hadoopFs(spark, path).exists(new Path(path))) 1L
     else {
       val mx = spark.read.parquet(path).agg(max(col("run_id"))).collect()(0)
@@ -159,17 +131,14 @@ object EtlPipeline {
       increment: (SparkSession, String, String) => DataFrame,
       watermarkCol: String) extends MartRefresh
 
-  /** Refresh a set of marts once, explicitly and IN THE GIVEN ORDER —
-    * the reference's orchestration runs BOTH loops (`from_file`,
-    * `from_database`) and then ONE `mart_update()` over the combined
-    * warehouse state (main.py:16-18); express that as
-    * `run(..., marts = empty)` + `runFromTables(...)` + this call.
-    * The parameter is a Seq, not a Map, because a mart may read
-    * another mart's output: Scala Maps iterate in hash order past 4
-    * entries, which would refresh a dependent mart before its
-    * upstream. (`run`/`replayQuarantine` keep their Map hooks for
-    * single-loop deployments of INDEPENDENT marts — chained marts
-    * belong here.)
+  /** Refresh a set of marts once, IN THE GIVEN ORDER — the only mart
+    * refresh: the reference's orchestration runs BOTH loops
+    * (`from_file`, `from_database`) and then ONE `mart_update()` over
+    * the combined warehouse state (main.py:16-18); express that as
+    * `run(...)` + `runFromTables(...)` + this call. Order is binding
+    * because a mart may read another mart's output. A mart whose
+    * directory is missing rebuilds through the swap's stage directory,
+    * so one left there by an interrupted swap is cleared, not orphaned.
     */
   def refreshMarts(spark: SparkSession, warehouseDir: String,
                    marts: Seq[(String, MartRefresh)]): Unit =
@@ -248,18 +217,17 @@ object EtlPipeline {
     *     [[XlsxSource]] (file.py's `__HANDLER` dispatch on extension) —
     *     and normalize decimal-comma columns,
     *  2. merge into the parquet DWH table at
-    *     `<warehouseDir>/<targetName>` via [[mergeTable]] (scd1 upsert or
-    *     scd2 versioning; absent keys tombstone at the file's business
-    *     date),
+    *     `<warehouseDir>/<targetName>` (scd1 upsert or scd2 versioning;
+    *     absent keys tombstone at the file's business date),
     *  3. log staging + merge counts (trsh_meta_etl_run_log),
     *  4. archive the file to `<inbox>/archive/<name>.backup`
     *     (file.py:46-51).
     *
-    * After all mappings, marts rebuild from the warehouse (main.py's
-    * `etl.mart_update()`), each written to `<warehouseDir>/<martName>`.
+    * Marts refresh afterwards through [[refreshMarts]] (main.py's
+    * `etl.mart_update()`), once both loops have run.
     *
     * State lives entirely in the warehouse directory (parquet tables +
-    * `etl_watermark` + appended `etl_run_log`), so re-running is
+    * [[WatermarkTable]] + appended [[RunLogTable]]), so re-running is
     * idempotent: already-consumed business dates are skipped by the
     * watermark, exactly like the reference's meta-table check. Per-table
     * state is snapshot-swapped (write new, rename over old), never
@@ -288,8 +256,8 @@ object EtlPipeline {
     *    first failure in mapping order as it was thrown, and writes no
     *    run log.
     * Daily dimension files are small by construction — the 100 TB side
-    * (facts) flows through [[stage]]/Incremental against partitioned
-    * sources, not through this inbox loop.
+    * (facts) flows through [[runFromTables]]' incremental pull against
+    * partitioned sources, not through this inbox loop.
     *
     * `quarantineDir`: when set, delimited files read through
     * [[DelimitedSource.readWithQuarantine]] — rows missing the mapping
@@ -302,17 +270,16 @@ object EtlPipeline {
     */
   def run(spark: SparkSession, inboxDir: String, warehouseDir: String,
           mappings: Seq[FileMapping], runId: Long,
-          marts: Map[String, MartRefresh] = Map.empty,
           archiveFiles: Boolean = true,
           quarantineDir: Option[String] = None): RunReport = {
     val runStart = new java.sql.Timestamp(System.currentTimeMillis())
     mappings.foreach(m => requireValidTarget(m.targetName))
-    var wm = loadWatermarks(spark, warehouseDir)
+    var wm = loadWatermarks(spark, warehouseDir, WatermarkTable)
     val wmLock = new Object
     val outs = mappings.map(_ => new MappingOutput)
 
     def runMapping(m: FileMapping, out: MappingOutput): Unit = {
-      val last = wmLock.synchronized(wm.get(m.targetName))
+      val last = wmLock.synchronized(wm.get(m.targetName)).map(java.time.LocalDate.parse)
       val fresh = FileIngest.find(spark, inboxDir, Seq(m.template))
         .map(p => (p, businessDate(p)))
         .filter { case (_, d) => last.forall(d.isAfter) }
@@ -358,7 +325,7 @@ object EtlPipeline {
             val nBad = q.bad.count()
             if (nBad > 0) {
               // appending must not recreate a quarantine whose only
-              // copy sits at __stage after an interrupted replay swap —
+              // copy sits at the stage after an interrupted replay swap —
               // that would hide the orphan from replay's guard forever
               requireNoOrphanStage(spark, s"$qdir/${m.targetName}")
               q.bad.withColumn("run_id", lit(runId))
@@ -404,8 +371,8 @@ object EtlPipeline {
         // snapshot (which would tombstone newer keys and invert
         // version intervals)
         wmLock.synchronized {
-          wm += (m.targetName -> dt)
-          saveWatermarks(spark, warehouseDir, wm)
+          wm += (m.targetName -> dt.toString)
+          saveWatermarks(spark, warehouseDir, WatermarkTable, "last_dt", wm)
         }
         out.processed += path
         if (archiveFiles) out.archived += FileIngest.archive(spark, path)
@@ -434,8 +401,6 @@ object EtlPipeline {
     failures.flatten.minByOption(_._1).foreach { case (_, e) => throw e }
 
     val log = writeRunLog(spark, warehouseDir, outs.flatMap(_.log.result()), runStart)
-
-    refreshMarts(spark, warehouseDir, marts.toSeq)
     RunReport(runId, log, outs.flatMap(_.processed.result()),
       outs.flatMap(_.archived.result()))
   }
@@ -470,7 +435,7 @@ object EtlPipeline {
     // marker directory that would break later schema inference (and
     // nextRunId) on a warehouse whose first run staged zero rows
     if (rows.nonEmpty)
-      log.write.mode(SaveMode.Append).parquet(s"$warehouseDir/etl_run_log")
+      log.write.mode(SaveMode.Append).parquet(s"$warehouseDir/$RunLogTable")
     log.drop("run_start_dt", "run_end_dt")
   }
 
@@ -499,7 +464,7 @@ object EtlPipeline {
                     feeds: Seq[TableFeed], runId: Long,
                     deleteTs: String): RunReport = {
     val runStart = new java.sql.Timestamp(System.currentTimeMillis())
-    var wm = loadTsWatermarks(spark, warehouseDir)
+    var wm = loadWatermarks(spark, warehouseDir, TsWatermarkTable)
     val logRows = Seq.newBuilder[LogRow]
 
     feeds.foreach { f =>
@@ -510,9 +475,10 @@ object EtlPipeline {
         case Some(u) => coalesce(col(u), col(f.createCol))
         case None    => col(f.createCol)
       }
-      // the staged count and the next watermark (etl.py:100-106, the
-      // newest staged change) are observed in the merge write itself
-      val stg = stage(f.source, f.createCol, f.updateCol, watermark)
+      // incremental pull (etl.py:190-199): only rows changed past the
+      // watermark. The staged count and the next watermark (etl.py:100-106,
+      // the newest staged change) are observed in the merge write itself
+      val stg = f.source.filter(changeTs > lit(watermark).cast("timestamp"))
         .select((m.key +: m.payload).map(col) :+
           changeTs.cast("timestamp").as("create_dt"): _*)
       val staged = new Staged(stg, "next_wm" -> max(col("create_dt")))
@@ -534,7 +500,7 @@ object EtlPipeline {
       staged.observedRow.flatMap(r => Option(r.getAs[java.sql.Timestamp]("next_wm")))
         .foreach(ts => wm += (m.targetName -> utcString(ts)))
       // persist per feed, same reasoning as the file loop
-      saveTsWatermarks(spark, warehouseDir, wm)
+      saveWatermarks(spark, warehouseDir, TsWatermarkTable, "last_ts", wm)
     }
 
     val log = writeRunLog(spark, warehouseDir, logRows.result(), runStart)
@@ -571,7 +537,7 @@ object EtlPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val logPath = s"$warehouseDir/etl_run_log"
+          val logPath = s"$warehouseDir/$RunLogTable"
           val marker = s"stream_${m.targetName}"
           val alreadyDone = hadoopFs(spark, logPath).exists(new Path(logPath)) &&
             !spark.read.parquet(logPath)
@@ -614,15 +580,14 @@ object EtlPipeline {
     * carries no parseable `_DDMMYYYY` business date cannot be stamped
     * for replay: it stays quarantined with `reject_reason =
     * 'dateless_src_file'` (rename the file to release it) rather than
-    * aborting the batch — the other repairable rows still merge. Pass the same `marts` map as
-    * `run` to refresh marts afterwards — note a `MartAccumulate`
+    * aborting the batch — the other repairable rows still merge. Refresh
+    * marts afterwards with [[refreshMarts]] — note a `MartAccumulate`
     * whose stored watermark already covers the replayed rows' dates
     * will not re-derive them (strictly-greater contract); pair
     * replay-heavy feeds with `MartRebuild` or a lookback increment.
     */
   def replayQuarantine(spark: SparkSession, quarantineDir: String,
-                       warehouseDir: String, m: FileMapping, runId: Long,
-                       marts: Map[String, MartRefresh] = Map.empty): RunReport = {
+                       warehouseDir: String, m: FileMapping, runId: Long): RunReport = {
     requireValidTarget(m.targetName)
     val runStart = new java.sql.Timestamp(System.currentTimeMillis())
     val path = s"$quarantineDir/${m.targetName}"
@@ -671,8 +636,8 @@ object EtlPipeline {
             bad = s0.bad.unionByName(dateless))
         } else DelimitedSource.validitySplit(
           qtn.drop("reject_reason"), Seq(m.key), m.decimalCols)
-      val current = loadWatermarks(spark, warehouseDir).get(m.targetName) match {
-        case Some(d) => sp.good.filter(col("create_dt").cast("date") >= lit(d.toString).cast("date"))
+      val current = loadWatermarks(spark, warehouseDir, WatermarkTable).get(m.targetName) match {
+        case Some(d) => sp.good.filter(col("create_dt").cast("date") >= lit(d).cast("date"))
         case None    => sp.good
       }
       val nGood = current.count()
@@ -694,7 +659,6 @@ object EtlPipeline {
       }
     }
     val log = writeRunLog(spark, warehouseDir, logRows.result(), runStart)
-    refreshMarts(spark, warehouseDir, marts.toSeq)
     RunReport(runId, log, Seq.empty, Seq.empty)
   }
 
@@ -810,74 +774,26 @@ object EtlPipeline {
     if (fs.exists(new Path(path))) spark.read.parquet(path) else empty
   }
 
-  /** Snapshot-swap write: parquet to `<path>__stage`, then rename over
-    * the old table. The write materializes the plan (which may read the
-    * OLD table) before the old table is touched — Spark cannot overwrite
-    * a path a lazy plan is still reading.
+  /** A watermark store: one (table_name, `valueCol`) string row per
+    * target, collected driver-side and snapshot-swapped whole on every
+    * save — the reference's meta `last_update_dt`/`max_update_dt`
+    * (etl.py:75-106). The file loop keeps business dates in
+    * [[WatermarkTable]] (`last_dt`), the database loop timestamps in
+    * [[TsWatermarkTable]] (`last_ts`).
     */
-  private def writeSwap(df: DataFrame, path: String): Unit = {
-    val fs = hadoopFs(df.sparkSession, path)
-    val stage = new Path(path + "__stage")
-    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    val p = new Path(path)
-    if (fs.exists(p)) fs.delete(p, true)
-    if (!fs.rename(stage, p))
-      throw new java.io.IOException(s"rename $stage -> $p failed")
-  }
-
-  /** Per-target business-date watermark (reference meta `last_update_dt`,
-    * etl.py:75-106) — a tiny parquet table, collected driver-side.
-    */
-  // A crash between writeSwap's delete and rename leaves the ONLY copy
-  // of a table at the __stage path. Every reader AND every writer that
-  // could recreate the target must refuse loudly then: silently reading
-  // "empty" discards history (warehouse tables), resets watermarks
-  // (backwards scd2 merges), or drops parked rejects (quarantine) —
-  // and a writer recreating the target would HIDE the orphan from the
-  // readers' checks forever.
-  private def requireNoOrphanStage(spark: SparkSession, path: String): Unit = {
-    val fs = hadoopFs(spark, path)
-    if (!fs.exists(new Path(path)) && fs.exists(new Path(path + "__stage")))
-      throw new IllegalStateException(
-        s"$path is missing but ${path}__stage exists — an interrupted " +
-          "snapshot swap. Recover by renaming the stage directory to the " +
-          "target path before re-running.")
-  }
-
-  private def loadWatermarks(spark: SparkSession,
-                             warehouseDir: String): Map[String, java.time.LocalDate] = {
-    val path = s"$warehouseDir/etl_watermark"
-    requireNoOrphanStage(spark, path)
-    if (!hadoopFs(spark, path).exists(new Path(path))) Map.empty
-    else spark.read.parquet(path).collect()
-      .map(r => r.getString(0) -> java.time.LocalDate.parse(r.getString(1))).toMap
-  }
-
-  private def saveWatermarks(spark: SparkSession, warehouseDir: String,
-                             wm: Map[String, java.time.LocalDate]): Unit = {
-    import spark.implicits._
-    if (wm.nonEmpty)
-      writeSwap(wm.toSeq.map { case (t, d) => (t, d.toString) }
-        .toDF("table_name", "last_dt"), s"$warehouseDir/etl_watermark")
-  }
-
-  /** Timestamp watermarks for the database loop (`max_update_dt`,
-    * etl.py:75-106) — separate from the file loop's business-date store.
-    */
-  private def loadTsWatermarks(spark: SparkSession,
-                               warehouseDir: String): Map[String, String] = {
-    val path = s"$warehouseDir/etl_watermark_ts"
+  private def loadWatermarks(spark: SparkSession, warehouseDir: String,
+                             store: String): Map[String, String] = {
+    val path = s"$warehouseDir/$store"
     requireNoOrphanStage(spark, path)
     if (!hadoopFs(spark, path).exists(new Path(path))) Map.empty
     else spark.read.parquet(path).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
   }
 
-  private def saveTsWatermarks(spark: SparkSession, warehouseDir: String,
-                               wm: Map[String, String]): Unit = {
+  private def saveWatermarks(spark: SparkSession, warehouseDir: String, store: String,
+                             valueCol: String, wm: Map[String, String]): Unit = {
     import spark.implicits._
     if (wm.nonEmpty)
-      writeSwap(wm.toSeq.toDF("table_name", "last_ts"),
-        s"$warehouseDir/etl_watermark_ts")
+      writeSwap(wm.toSeq.toDF("table_name", valueCol), s"$warehouseDir/$store")
   }
 }

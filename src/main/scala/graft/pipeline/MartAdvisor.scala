@@ -111,9 +111,7 @@ object MartAdvisor {
   def measuredWriteAmp(spark: SparkSession, warehouseDir: String,
                        fallbackAmp: Long = 3L): DataFrame = {
     require(fallbackAmp >= 1L, s"fallbackAmp must be >= 1, got $fallbackAmp")
-    val perRun = spark.read.parquet(s"$warehouseDir/etl_run_log")
-      .groupBy("table_name", "run_id")
-      .agg((sum("rows_inserted") + sum("rows_updated")).cast("long").as("n_new"))
+    val perRun = ingestedPerRun(spark, warehouseDir)
     val w = Window.partitionBy("table_name").orderBy("run_id")
       .rowsBetween(Window.unboundedPreceding, 0)
     val perTable = perRun
@@ -136,6 +134,14 @@ object MartAdvisor {
       .select("table_name", "write_amp", "amp_source")
   }
 
+  /** Per (table, run) ingested volume from the warehouse's run log:
+    * (table_name, run_id, n_new = rows_inserted + rows_updated).
+    */
+  private def ingestedPerRun(spark: SparkSession, warehouseDir: String): DataFrame =
+    spark.read.parquet(s"$warehouseDir/${EtlPipeline.RunLogTable}")
+      .groupBy("table_name", "run_id")
+      .agg((sum("rows_inserted") + sum("rows_updated")).cast("long").as("n_new"))
+
   /** Advise from a warehouse's own run log (`<warehouseDir>/etl_run_log`,
     * the reference's trsh_meta_etl_run_log): per (table, run) the
     * ingested volume is rows_inserted + rows_updated (deletes don't
@@ -152,9 +158,7 @@ object MartAdvisor {
   def adviseFromRunLog(spark: SparkSession, warehouseDir: String,
                        writeAmp: Option[Long] = None,
                        lookbackRuns: Int = 1): DataFrame = {
-    val perRun = spark.read.parquet(s"$warehouseDir/etl_run_log")
-      .groupBy("table_name", "run_id")
-      .agg((sum("rows_inserted") + sum("rows_updated")).cast("long").as("n_new"))
+    val perRun = ingestedPerRun(spark, warehouseDir)
     // a forced amp below 1 would zero/invert every rebuild cost and
     // deterministically answer "accumulate" — the validation the old
     // scalar signature enforced

@@ -4,6 +4,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.pipeline.EtlPipeline.{RunLogTable, TsWatermarkTable, WatermarkTable}
+import graft.sources.Compaction
+
 /** Operational inventory of a graft parquet warehouse — the
   * observability the reference keeps in its meta tables
   * (trsh_meta_etl_update, trsh_meta_etl_run_log) surfaced as one frame
@@ -18,7 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object WarehouseOps {
 
-  private val MetaTables = Set("etl_watermark", "etl_watermark_ts", "etl_run_log")
+  private val MetaTables = Set(WatermarkTable, TsWatermarkTable, RunLogTable)
 
   /** One row per warehouse table: file/byte footprint, last file
     * modification, stored watermark — the file loop's business date or
@@ -26,8 +29,8 @@ object WarehouseOps {
     * (null when neither does) — and the id/time of the LAST run that
     * wrote it, taken from one run-log row (struct-max on
     * (run_end_dt, run_id), so the pair is internally consistent even
-    * when caller-supplied run ids aren't time-ordered). Meta tables
-    * themselves are excluded.
+    * when caller-supplied run ids aren't time-ordered). Meta tables and
+    * snapshot-swap stage directories are excluded.
     */
   /** The file-footprint half of [[inventory]]: one row per table —
     * (table_name, n_files, total_bytes, last_modified) from a
@@ -42,8 +45,10 @@ object WarehouseOps {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tables =
       if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(root).filter(s =>
-        s.isDirectory && !MetaTables(s.getPath.getName))
+      else fs.listStatus(root).filter { s =>
+        val name = s.getPath.getName
+        s.isDirectory && !MetaTables(name) && !Compaction.isStage(name)
+      }
     tables.map { t =>
       val it = fs.listFiles(t.getPath, true)
       var nFiles = 0L; var bytes = 0L; var lastMod = 0L
@@ -71,9 +76,9 @@ object WarehouseOps {
         spark.read.parquet(p).toDF("table_name", "watermark")
       else Seq.empty[(String, String)].toDF("table_name", "watermark")
     }
-    val wm = wmStore("etl_watermark").unionByName(wmStore("etl_watermark_ts"))
+    val wm = wmStore(WatermarkTable).unionByName(wmStore(TsWatermarkTable))
 
-    val logPath = s"$warehouseDir/etl_run_log"
+    val logPath = s"$warehouseDir/$RunLogTable"
     val lastRun =
       if (fs.exists(new Path(logPath)))
         spark.read.parquet(logPath)

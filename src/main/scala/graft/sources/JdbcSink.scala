@@ -97,7 +97,7 @@ object JdbcSink {
   def publishRunLog(spark: SparkSession, warehouseDir: String,
                     t: Target): Long = {
     import org.apache.spark.sql.functions.{col, max}
-    val local = spark.read.parquet(s"$warehouseDir/etl_run_log")
+    val local = spark.read.parquet(s"$warehouseDir/${graft.pipeline.EtlPipeline.RunLogTable}")
     val fresh =
       if (!tableExists(spark, t)) local
       else {

@@ -24,9 +24,14 @@ class EtlPipelineSpec extends SparkSpec {
         decimalCols = Seq("rate")),
       FileMapping("terminals_*.csv", "dwh_terminals", "term_id", Seq("city"), scd = 2),
       FileMapping("blacklist_*.xlsx", "dwh_blacklist", "passport", Seq("entry_dt"), scd = 1))
-    val marts = Map[String, EtlPipeline.MartRefresh](
+    val marts = Seq[(String, EtlPipeline.MartRefresh)](
       "mart_rate_count" -> EtlPipeline.MartRebuild((s, whDir) =>
         s.read.parquet(s"$whDir/dwh_rates").agg(count(lit(1)).as("n"))))
+    def runDay(runId: Long): EtlPipeline.RunReport = {
+      val r = EtlPipeline.run(spark, inbox, wh, mappings, runId)
+      EtlPipeline.refreshMarts(spark, wh, marts)
+      r
+    }
 
     // --- day 1 ---
     mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\nEUR;99,1\n")
@@ -34,7 +39,7 @@ class EtlPipelineSpec extends SparkSpec {
     TestXlsx.write(s"$inbox/blacklist_01012024.xlsx",
       Seq("passport", "entry_dt"), Seq(Seq("P1", "2024-01-01"), Seq("P2", "2024-01-01")))
 
-    val r1 = EtlPipeline.run(spark, inbox, wh, mappings, runId = 1, marts = marts)
+    val r1 = runDay(1)
     assert(r1.processedFiles.size == 3 && r1.archivedFiles.size == 3)
     assert(r1.archivedFiles.forall(_.contains("/archive/")))
     assert(logRow(r1, "stg_dwh_rates").getAs[Long]("rows_inserted") == 2)
@@ -51,7 +56,7 @@ class EtlPipelineSpec extends SparkSpec {
     mkFile(inbox, "rates_02012024.csv", "cur;rate\nUSD;92,0\nEUR;99,1\nGBP;115,3\n")
     mkFile(inbox, "terminals_02012024.csv", "term_id;city\nT1;Moscow\nT2;Samara\n")
 
-    val r2 = EtlPipeline.run(spark, inbox, wh, mappings, runId = 2, marts = marts)
+    val r2 = runDay(2)
     assert(r2.processedFiles.size == 2)
     val ratesLog = logRow(r2, "dwh_rates")
     assert(ratesLog.getAs[Long]("rows_inserted") == 1)  // GBP
@@ -77,7 +82,7 @@ class EtlPipelineSpec extends SparkSpec {
     // must close the tombstone and revive the key (identical-state
     // revival, mirroring the reference's INTERSECT-with-deleted_flg)
     mkFile(inbox, "terminals_03012024.csv", "term_id;city\nT1;Moscow\nT2;Samara\nT3;Perm\n")
-    EtlPipeline.run(spark, inbox, wh, mappings, runId = 3, marts = marts)
+    runDay(3)
     val terms3 = spark.read.parquet(s"$wh/dwh_terminals")
     val t3open = terms3.filter(col("term_id") === "T3" &&
       col("effective_to") === lit(Scd.OpenEnd).cast("timestamp"))
@@ -86,7 +91,7 @@ class EtlPipelineSpec extends SparkSpec {
     assert(terms3.filter(col("term_id") === "T3").count() == 3) // closed, closed tombstone, open
 
     // --- run 4: nothing new — watermark skips everything ---
-    val r3 = EtlPipeline.run(spark, inbox, wh, mappings, runId = 4, marts = marts)
+    val r3 = runDay(4)
     assert(r3.processedFiles.isEmpty && r3.log.count() == 0)
 
     // persistent combined run log accumulated all runs
@@ -511,10 +516,13 @@ class EtlPipelineSpec extends SparkSpec {
         decimalCols = Seq("rate")))
     mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\nEUR;99,1\n")
     EtlPipeline.run(spark, inbox, wh, mappings, runId = 21)
+    // stage directories of an in-flight or interrupted swap
+    Seq("dwh_rates", "etl_watermark", "dwh_gone").foreach(t =>
+      Files.createDirectories(Paths.get(s"$wh/${t}__stage")))
 
     val inv = WarehouseOps.inventory(spark, wh).collect()
     assert(inv.map(_.getString(0)).toSeq === Seq("dwh_rates"),
-      "meta tables are excluded, data tables listed")
+      "meta tables and stage directories are excluded, data tables listed")
     val r = inv(0)
     assert(r.getAs[Long]("n_files") > 0 && r.getAs[Long]("total_bytes") > 0)
     assert(r.getAs[java.sql.Timestamp]("last_modified") != null)
@@ -899,7 +907,7 @@ class EtlPipelineSpec extends SparkSpec {
     val inbox = Files.createTempDirectory("graft_mart_inbox").toString
     val wh = Files.createTempDirectory("graft_mart_wh").toString
     val cutoff = "2024-01-20 00:00:00"
-    val marts = Map[String, EtlPipeline.MartRefresh](
+    val marts = Seq[(String, EtlPipeline.MartRefresh)](
       "mart_fraud" -> EtlPipeline.MartAccumulate(
         (s, d) => graft.pipeline.FraudMart.report(s, d),
         (s, d, since) => graft.pipeline.FraudMart.incrementalReport(s, d, since),
@@ -908,13 +916,15 @@ class EtlPipelineSpec extends SparkSpec {
     Tables.customer(spark, sf).write.parquet(s"$wh/customer.parquet")
     Tables.events(spark, sf).filter(col("ts") <= lit(cutoff).cast("timestamp"))
       .write.parquet(s"$wh/events.parquet")
-    EtlPipeline.run(spark, inbox, wh, Seq.empty, runId = 1, marts = marts)
+    EtlPipeline.run(spark, inbox, wh, Seq.empty, runId = 1)
+    EtlPipeline.refreshMarts(spark, wh, marts)
     val afterRun1 = spark.read.parquet(s"$wh/mart_fraud").count()
     assert(afterRun1 > 0, "bootstrap build must flag events in the first slice")
 
     // second slice lands: the refresh must APPEND only the new rows
     Tables.events(spark, sf).write.mode("overwrite").parquet(s"$wh/events.parquet")
-    EtlPipeline.run(spark, inbox, wh, Seq.empty, runId = 2, marts = marts)
+    EtlPipeline.run(spark, inbox, wh, Seq.empty, runId = 2)
+    EtlPipeline.refreshMarts(spark, wh, marts)
     val accumulated = spark.read.parquet(s"$wh/mart_fraud")
     assert(accumulated.count() > afterRun1, "second run must append new flags")
     val full = graft.pipeline.FraudMart.report(spark, wh)
@@ -924,8 +934,96 @@ class EtlPipelineSpec extends SparkSpec {
       "accumulated mart is missing rows of the full rebuild")
 
     // statement-level idempotence: an immediate re-refresh appends nothing
-    EtlPipeline.run(spark, inbox, wh, Seq.empty, runId = 3, marts = marts)
+    EtlPipeline.run(spark, inbox, wh, Seq.empty, runId = 3)
+    EtlPipeline.refreshMarts(spark, wh, marts)
     assert(spark.read.parquet(s"$wh/mart_fraud").count() == accumulated.count())
+  }
+
+  test("a mart left at its stage directory by an interrupted swap rebuilds and clears it") {
+    val wh = Files.createTempDirectory("graft_mart_orphan").toString
+    val marts = Seq[(String, EtlPipeline.MartRefresh)](
+      "mart_fraud" -> EtlPipeline.MartAccumulate(
+        (s, d) => graft.pipeline.FraudMart.report(s, d),
+        (s, d, since) => graft.pipeline.FraudMart.incrementalReport(s, d, since),
+        watermarkCol = "event_dt"))
+    Tables.customer(spark, sf).write.parquet(s"$wh/customer.parquet")
+    Tables.events(spark, sf).write.parquet(s"$wh/events.parquet")
+    EtlPipeline.refreshMarts(spark, wh, marts)
+    // a compaction interrupted between its delete and its rename
+    val mart = Paths.get(s"$wh/mart_fraud")
+    val stage = Paths.get(s"$wh/mart_fraud__stage")
+    Files.move(mart, stage)
+
+    EtlPipeline.refreshMarts(spark, wh, marts)
+    val rebuilt = spark.read.parquet(s"$wh/mart_fraud")
+    val full = graft.pipeline.FraudMart.report(spark, wh)
+    assert(rebuilt.exceptAll(full).count() == 0 && full.exceptAll(rebuilt).count() == 0,
+      "the rebuilt mart equals the full report")
+    assert(!Files.exists(stage), "the rebuild reuses and clears the stage directory")
+  }
+
+  test("a warehouse in the stored layout continues: same rows merged, same watermarks") {
+    val s = spark
+    import s.implicits._
+    val inbox = Files.createTempDirectory("graft_compat_in").toString
+    val wh = Files.createTempDirectory("graft_compat_wh").toString
+    def ts(x: String) = java.sql.Timestamp.valueOf(x)
+    val cutoff = "2024-01-20 00:00:00"
+    // the on-disk state an earlier release leaves, written by hand: both
+    // watermark stores, the run log, two targets and an accumulated mart
+    Seq(("USD", 90.5), ("EUR", 99.1)).toDF("cur", "rate").write.parquet(s"$wh/dwh_rates")
+    Seq(("dwh_rates", "2024-01-01")).toDF("table_name", "last_dt")
+      .write.parquet(s"$wh/etl_watermark")
+    Seq((1L, "Ann")).toDF("client_id", "name").write.parquet(s"$wh/dwh_clients")
+    Seq(("dwh_clients", "2024-01-01 08:00:00.000000")).toDF("table_name", "last_ts")
+      .write.parquet(s"$wh/etl_watermark_ts")
+    Seq((1L, "dwh_rates", 2L, 0L, 0L), (1L, "dwh_clients", 1L, 0L, 0L))
+      .toDF("run_id", "table_name", "rows_inserted", "rows_updated", "rows_deleted")
+      .withColumn("run_start_dt", lit(ts("2024-01-01 09:00:00")))
+      .withColumn("run_end_dt", lit(ts("2024-01-01 09:05:00")))
+      .write.parquet(s"$wh/etl_run_log")
+    Tables.customer(spark, sf).write.parquet(s"$wh/customer.parquet")
+    Tables.events(spark, sf).filter(col("ts") <= lit(cutoff).cast("timestamp"))
+      .write.parquet(s"$wh/events.parquet")
+    graft.pipeline.FraudMart.report(spark, wh).write.parquet(s"$wh/mart_fraud")
+    Tables.events(spark, sf).write.mode("overwrite").parquet(s"$wh/events.parquet")
+
+    // day 1 is behind the stored watermark; day 2 merges
+    mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;1,0\n")
+    mkFile(inbox, "rates_02012024.csv", "cur;rate\nUSD;92,0\nEUR;99,1\nGBP;115,3\n")
+    val runId = EtlPipeline.nextRunId(spark, wh)
+    assert(runId === 2L, "run ids continue from the stored run log")
+    val r = EtlPipeline.run(spark, inbox, wh, Seq(FileMapping("rates_*.csv", "dwh_rates",
+      "cur", Seq("rate"), scd = 1, decimalCols = Seq("rate"))), runId, archiveFiles = false)
+    assert(r.processedFiles.map(Paths.get(_).getFileName.toString) === Seq("rates_02012024.csv"))
+    val rates = logRow(r, "dwh_rates")
+    assert((rates.getAs[Long]("rows_inserted"), rates.getAs[Long]("rows_updated")) === (1L, 1L))
+    val src = Seq((1L, "Ann", ts("2024-01-01 08:00:00")), (2L, "Bob", ts("2024-01-02 09:00:00")))
+      .toDF("client_id", "name", "create_dt")
+    val db = EtlPipeline.runFromTables(spark, wh, Seq(EtlPipeline.TableFeed(
+      TableMapping("clients", "dwh_clients", "client_id", Seq("name"), 1), src,
+      updateCol = None)), runId + 1, "2024-01-03 00:00:00")
+    assert(logRow(db, "stg_dwh_clients").getAs[Long]("rows_inserted") === 1L,
+      "only the row past the stored timestamp watermark stages")
+    EtlPipeline.refreshMarts(spark, wh, Seq("mart_fraud" -> EtlPipeline.MartAccumulate(
+      (s, d) => graft.pipeline.FraudMart.report(s, d),
+      (s, d, since) => graft.pipeline.FraudMart.incrementalReport(s, d, since),
+      watermarkCol = "event_dt")))
+
+    def store(name: String) = {
+      val t = spark.read.parquet(s"$wh/$name")
+      (t.columns.toSeq, t.collect().map(x => x.getString(0) -> x.getString(1)).toMap)
+    }
+    assert(store("etl_watermark") === (Seq("table_name", "last_dt"),
+      Map("dwh_rates" -> "2024-01-02")))
+    assert(store("etl_watermark_ts") === (Seq("table_name", "last_ts"),
+      Map("dwh_clients" -> "2024-01-02 09:00:00.000000")))
+    assert(spark.read.parquet(s"$wh/etl_run_log").select("run_id").distinct()
+      .as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    val mart = spark.read.parquet(s"$wh/mart_fraud")
+    val full = graft.pipeline.FraudMart.report(spark, wh)
+    assert(mart.exceptAll(full).count() == 0 && full.exceptAll(mart).count() == 0,
+      "the stored mart accumulates to the full report")
   }
 
   test("nextRunId allocates monotone ids and runs log start/end timestamps") {
@@ -956,13 +1054,17 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   test("scd1 pipeline merge produces a consistent run log") {
-    val dwh = Tables.customer(spark, sf).filter(col("c_custkey") < 100)
+    val wh = Files.createTempDirectory("graft_scd1log").toString
+    Tables.customer(spark, sf).filter(col("c_custkey") < 100)
       .select(col("c_custkey").as("id"), col("c_acctbal").as("bal"))
+      .write.parquet(s"$wh/dwh_cust")
     val stg = Tables.customer(spark, sf).filter(col("c_custkey") < 120)
-      .select(col("c_custkey").as("id"), (col("c_acctbal") + 10).as("bal"))
-    val res = EtlPipeline.mergeTable(7, TableMapping("stg_cust", "dwh_cust", "id", Seq("bal"), 1),
-      stg, dwh, "2024-02-01 00:00:00")
-    val log = res.log.collect()(0)
+      .select(col("c_custkey").as("id"), (col("c_acctbal") + 10).as("bal"),
+        lit("2024-01-31 00:00:00").cast("timestamp").as("create_dt"))
+    val res = EtlPipeline.runFromTables(spark, wh, Seq(EtlPipeline.TableFeed(
+      TableMapping("stg_cust", "dwh_cust", "id", Seq("bal"), 1), stg, updateCol = None)),
+      runId = 7, deleteTs = "2024-02-01 00:00:00")
+    val log = logRow(res, "dwh_cust")
     assert(log.getAs[Long]("run_id") == 7L)
     assert(log.getAs[Long]("rows_inserted") == 20)   // keys 100..119
     assert(log.getAs[Long]("rows_updated") == 100)   // all overlapping bals shifted
@@ -975,11 +1077,14 @@ class EtlPipelineSpec extends SparkSpec {
     val stg = ev.filter(col("user_id") < 5)  // users 5..9 disappear
       .groupBy("user_id").agg(max(col("ts")).as("create_dt"))
       .withColumn("state", lit("inactive"))
-    val res = EtlPipeline.mergeTable(8, TableMapping("stg_u", "dwh_u", "user_id", Seq("state"), 2),
-      stg, hist, "2024-02-01 00:00:00")
-    val log = res.log.collect()(0)
+    val wh = Files.createTempDirectory("graft_scd2log").toString
+    hist.write.parquet(s"$wh/dwh_u")
+    val res = EtlPipeline.runFromTables(spark, wh, Seq(EtlPipeline.TableFeed(
+      TableMapping("stg_u", "dwh_u", "user_id", Seq("state"), 2), stg, updateCol = None)),
+      runId = 8, deleteTs = "2024-02-01 00:00:00")
+    val log = logRow(res, "dwh_u")
     assert(log.getAs[Long]("rows_deleted") == 5)
-    assert(res.merged.filter(col("deleted_flg")).count() == 5)
+    assert(spark.read.parquet(s"$wh/dwh_u").filter(col("deleted_flg")).count() == 5)
   }
 }
 

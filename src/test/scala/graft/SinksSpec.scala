@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.sources.{Compaction, Sinks, Tables, XlsxSource}
 
@@ -25,15 +28,24 @@ class SinksSpec extends SparkSpec {
     assert(back.agg(sum(col("event_id"))).head().getLong(0) ==
       ev.agg(sum(col("event_id"))).head().getLong(0), "content checksum must survive")
     // no stage directory left behind
-    assert(!new java.io.File(path + "__compact").exists())
+    assert(!new java.io.File(path + "__stage").exists())
 
     // interrupted-swap guard: table gone, only the stage dir remains
-    assert(new java.io.File(path).renameTo(new java.io.File(path + "__compact")))
+    assert(new java.io.File(path).renameTo(new java.io.File(path + "__stage")))
     val e = intercept[IllegalStateException] { Compaction.census(spark, path) }
     assert(e.getMessage.contains("interrupted"), "must name the failure mode")
     // recovery: rename back, census works again
-    assert(new java.io.File(path + "__compact").renameTo(new java.io.File(path)))
+    assert(new java.io.File(path + "__stage").renameTo(new java.io.File(path)))
     assert(Compaction.census(spark, path).nFiles == 1)
+  }
+
+  test("the stage suffix is spelled only in the swap owner") {
+    val owner = Paths.get("src/main/scala/graft/sources/Compaction.scala")
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p != owner)
+      .filter(p => Files.readString(p).contains("__stage"))
+      .toSeq
+    assert(offenders.isEmpty, s"stage suffix outside Compaction: ${offenders.mkString(", ")}")
   }
 
   test("parquet/csv/json/orc round-trips preserve row counts") {
