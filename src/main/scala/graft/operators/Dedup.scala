@@ -942,8 +942,9 @@ object Dedup {
     * (node → cluster representative). Returns the [[updateClusters]]
     * assignment over stored nodes ∪ newly-paired endpoints, EQUAL to the
     * batch fixpoint `dedupClusters(old pairs ∪ all true new pairs)`
-    * (spec-pinned): exactly the shape q95's canonicalization, q190's
-    * leakage-safe split, and `CorpusPipeline.curate` consume.
+    * (spec-pinned): exactly the shape q95's canonicalization and q190's
+    * leakage-safe split consume. `CorpusPipeline.curateIncrement` reads
+    * the two edge channels of [[assignIncrementEdges]] instead.
     *
     * Why the work is ~linear in the batch where the pair mode is
     * quadratic:

@@ -1,10 +1,14 @@
 package graft.pipeline
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{Decontaminate, Dedup}
+import graft.operators.{Decontaminate, Dedup, Similarity}
 
 /** The composed corpus-curation loop — the training-data analog of
   * [[EtlPipeline.run]]: one eager call takes a raw document table to a
@@ -32,11 +36,13 @@ import graft.operators.{Decontaminate, Dedup}
   *    streamed once (Decontaminate.overlapFlags).
   *  - shard: the q106 epoch shuffle — nShards bounds every shard sort.
   *
-  * Everything is deterministic (seeded hashes, total-order tie-breaks),
-  * so re-running the same input yields byte-identical shards — asserted
-  * in CorpusPipelineSpec. All intermediates persist for the duration of
-  * the call and are released before returning (including the dedup
-  * operators' internal caches via [[Dedup.releaseCaches]]).
+  * [[curate]] and [[curateIncrement]] run the same stage chain through
+  * one [[Ledger]] per call. Everything is deterministic (seeded hashes,
+  * total-order tie-breaks), so re-running the same input yields
+  * byte-identical shards — asserted in CorpusPipelineSpec. All
+  * intermediates persist for the duration of the call and are released
+  * when it returns or fails (including the dedup operators' internal
+  * caches via [[Dedup.releaseCaches]]).
   */
 object CorpusPipeline {
 
@@ -47,7 +53,7 @@ object CorpusPipeline {
     * the text (documents emptied by the rewrite drop, rejects reason
     * `span_rewrite` — the stage name). It runs before near-dup so shared
     * boilerplate spans can't glue unrelated documents into one LSH
-    * cluster.
+    * cluster. [[curate]] only: [[curateIncrement]] has no span stage.
     *
     * `adaptiveBanding = true` replaces the fixed (numPerm, bands) for
     * the near-dup stage with [[Dedup.adaptiveBanding]]'s measured
@@ -67,15 +73,7 @@ object CorpusPipeline {
       nShards: Int = 16,
       epoch: Long = 0L,
       spanRewriteTokens: Option[Int] = None,
-      adaptiveBanding: Boolean = false,
-      // Incremental near-dup engine: true (default) = the linear-output
-      // assignment mode (Dedup.assignIncrementEdges — verify stops at
-      // each group's first true edge, output is one row per affected
-      // doc); false = the pair mode (Dedup.dedupIncrement — every
-      // verified pair enumerated, the r12 shape). Kept-set equality of
-      // the two modes is spec-pinned; the dial exists so a deployment
-      // that consumes the pair list itself (audit trails) can keep it.
-      incrementAssign: Boolean = true)
+      adaptiveBanding: Boolean = false)
 
   /** Optional DSIR importance gate (q158's operator as a curation
     * stage): keep documents whose domain-match score against the
@@ -115,6 +113,204 @@ object CorpusPipeline {
     */
   case class CurationResult(nIn: Long, nClean: Long, stages: Seq[StageCount])
 
+  /** A stage's survivors and their count. */
+  private case class Kept(df: DataFrame, n: Long)
+
+  /** One curation call's ledger and its stage chain. The ledger owns
+    * every frame the call persists (released by [[release]], which both
+    * entry points call in a `finally`, so a refused or failed call
+    * leaks nothing), the per-stage counts and the reject reasons. Each
+    * stage splits its input into persisted survivors and logged drops.
+    */
+  private final class Ledger(cfg: CurationConfig, idCol: String, textCol: String) {
+    private val frames = ArrayBuffer.empty[DataFrame]
+    private val counts = Seq.newBuilder[StageCount]
+    private val rejects = Seq.newBuilder[DataFrame]
+
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      frames += p
+      p
+    }
+
+    def input(docs: DataFrame): Kept = {
+      val p = persist(docs)
+      Kept(p, p.count())
+    }
+
+    def stage(name: String, in: Kept, kept: DataFrame, dropped: DataFrame): Kept = {
+      val n = kept.count()
+      counts += StageCount(name, in.n, n, in.n - n)
+      rejects += dropped.select(col(idCol), lit(name).as("reason"))
+      Kept(kept, n)
+    }
+
+    /** The split of every id-decided stage: `ids` are the stage's drops
+      * (with `keep`, its survivors); survivors persist.
+      */
+    def byId(name: String, in: Kept, ids: DataFrame, keep: Boolean = false): Kept = {
+      val (k, d) = if (keep) ("left_semi", "left_anti") else ("left_anti", "left_semi")
+      stage(name, in, persist(in.df.join(ids, Seq(idCol), k)),
+        in.df.join(ids, Seq(idCol), d))
+    }
+
+    /** The chain both entry points run: quality gate → exact dedup →
+      * [span rewrite] → [importance] → near-dup → [SemDeDup] →
+      * [decontamination]. `seenHashes` and `index` are a stored
+      * corpus's content hashes and LSH index; a batch doc matching
+      * either drops (first-seen wins). Returns the quality survivors
+      * and the clean set.
+      */
+    def chain(in: Kept, seenHashes: Option[DataFrame],
+              index: Option[(DataFrame, DataFrame)],
+              spanTokens: Option[Int], importance: Option[ImportanceConfig],
+              semdedup: Option[SemDedupConfig],
+              evalDocs: Option[DataFrame]): (Kept, Kept) = {
+      // 1. quality gate — map-only, so it runs on the raw scan; a null
+      //    text scores 0 (dropped), never a null that would slip both
+      //    the kept and the dropped filter
+      val scored = in.df.withColumn("__q",
+        TF.qualityScore(coalesce(col(textCol), lit(""))))
+      val q = stage("quality", in,
+        persist(scored.filter(col("__q") >= cfg.minQuality).drop("__q")),
+        scored.filter(col("__q") < cfg.minQuality))
+      // 2. exact dedup — keep the smallest id per identical text, then
+      //    drop what the stored hash registry has seen (an 8-byte-key
+      //    anti join; the corpus text never loads)
+      val first = Dedup.exact(q.df.withColumn("__h", xxhash64(col(textCol))),
+        Seq(col("__h")), col(idCol))
+      val e = byId("exact_dup", q, seenHashes
+        .fold(first)(h => first.join(h.select(col("__h")), Seq("__h"), "left_anti"))
+        .select(col("keep_id").as(idCol)), keep = true)
+      val s = spanTokens.fold(e)(spanRewrite(e, _))
+      // 2.5 importance gate — DSIR domain-match selection (q158). Runs
+      //     on the exact-deduped corpus so duplicated texts cannot skew
+      //     the feature model, and before the LSH stage so near-dup
+      //     shuffles see only selected documents.
+      val i = importance.fold(s)(ic => byId("importance", s,
+        graft.operators.Importance
+          .dsirScore(s.df, idCol, textCol, ic.isTarget, ic.vocabSize)
+          .filter(col("score_micro") >= ic.minScoreMicro).select(col(idCol)),
+        keep = true))
+      val n = nearDup(i, index)
+      val m = semdedup.fold(n)(semDedup(n, _))
+      // 4. decontamination — any shared eval word-n-gram disqualifies
+      (q, evalDocs.fold(m)(ev => byId("contaminated", m, Decontaminate
+        .overlapFlags(m.df, ev, idCol, textCol, cfg.decontamNgram)
+        .select(col(idCol)))))
+    }
+
+    // 2.2 span rewrite — execute q81's removal plan on the exact-deduped
+    //     corpus (identical texts are already collapsed, so the window
+    //     never sees byte-duplicate span floods); a doc whose every cell
+    //     was a later occurrence comes back empty and drops here rather
+    //     than polluting downstream stages
+    private def spanRewrite(in: Kept, tokens: Int): Kept = {
+      val rewritten = persist(Dedup.removeSpans(in.df, idCol, textCol, tokens)
+        .drop("n_spans_kept", "n_spans_removed"))
+      // coalesce: a NULL text (passed through removeSpans unchanged)
+      // must land in the REJECT branch — a bare `> 0` / `=== 0` pair
+      // is NULL for it on both sides and the doc would vanish from
+      // the ledger entirely, breaking the stage-count reconciliation
+      val keptPred = coalesce(length(trim(col(textCol))) > 0, lit(false))
+      stage("span_rewrite", in, rewritten.filter(keptPred),
+        rewritten.filter(!keptPred))
+    }
+
+    // 3. near-dup canonicalization — LSH-verified pairs, connected
+    //    components, q95's canonical per cluster (longest text, tie →
+    //    smallest id). Against a stored index the engine is the
+    //    ASSIGNMENT mode: one verified edge per (batch doc, corpus doc)
+    //    with first-true-edge early exit, stage B scoped to the
+    //    survivors, so the steady-state loop never bills the quadratic
+    //    within-cluster pair mass. A corpus match drops the batch doc
+    //    whatever its length. The stored corpus is pairwise
+    //    near-dup-free by this very loop, so its cluster table is all
+    //    singletons — the empty frame below IS the maintained table, and
+    //    stage A's coalesce labels each index doc as its own
+    //    representative.
+    private def nearDup(in: Kept, index: Option[(DataFrame, DataFrame)]): Kept = {
+      val (pairs, corpusDrop) = index match {
+        case Some((bands, sets)) =>
+          val edges = Dedup.assignIncrementEdges(bands, sets,
+            in.df.select(col(idCol).as("node"), col(idCol).as("cluster")).limit(0),
+            in.df, idCol, textCol, cfg.shingleK, cfg.jaccardThreshold,
+            cfg.numPerm, cfg.bands, contractedBatchOnly = true)
+          // stage-B labels of surviving docs are their own ids, so the
+          // batch channel is already the survivor-survivor pair list
+          (edges.batch.select(col("ea").as("id_a"), col("eb").as("id_b")),
+            Some(edges.corpus.select(col("ea").as(idCol)).distinct()))
+        case None =>
+          val (numPerm, bands, densityHint) =
+            if (cfg.adaptiveBanding) {
+              val c = Dedup.adaptiveBanding(in.df, idCol, textCol,
+                cfg.shingleK, cfg.jaccardThreshold)
+              (c.numPerm, c.bands, Some(c.estPairsPerDoc))
+            } else (cfg.numPerm, cfg.bands, None)
+          (Dedup.lshVerifiedPairs(in.df, idCol, textCol, cfg.shingleK,
+            cfg.jaccardThreshold, numPerm, bands,
+            candidatesPerDocHint = densityHint), None)
+      }
+      val clusters = Dedup.dedupClusters(pairs, "id_a", "id_b")
+      val canon = clusters
+        .join(in.df.select(col(idCol).as("node"),
+          length(col(textCol)).as("__len")), Seq("node"))
+        .groupBy("cluster")
+        .agg(max_by(col("node"), struct(col("__len"), -col("node"))).as("node"))
+        .select(col("node"))
+      val drops = clusters.select("node")
+        .join(canon, Seq("node"), "left_anti")
+        .select(col("node").as(idCol))
+      byId("near_dup", in, corpusDrop.fold(drops)(drops.unionByName))
+    }
+
+    // 3.5 SemDeDup — embedding-level pruning of the lexically-
+    //     canonicalized survivors (the paper's pipeline position: shingle
+    //     near-dup already collapsed the literal copies, this removes
+    //     semantic re-tellings LSH structurally misses). Only docs WITH
+    //     an embedding are judged; the prune runs on exactly the
+    //     surviving subset so a dropped doc can never dominate a kept one.
+    private def semDedup(in: Kept, sc: SemDedupConfig): Kept = {
+      val vecs = sc.embeddings
+        .select(col(sc.vecIdCol).as(idCol), col(sc.vecCol))
+        .join(in.df.select(idCol), Seq(idCol), "left_semi")
+      // one sizing pass doubles as the 1:1 precondition check: a
+      // duplicate vec_id would feed semDedup duplicate ids and make
+      // the (csim, id) dominance order self-referential for that doc
+      val sz = vecs.agg(count(lit(1)), count_distinct(col(idCol))).head()
+      require(sz.getLong(0) == sz.getLong(1),
+        s"SemDeDup needs exactly one embedding per doc: " +
+          s"${sz.getLong(0) - sz.getLong(1)} duplicate ${sc.vecIdCol} row(s)")
+      // KMeans needs >= 2 rows; below that there is nothing to prune
+      byId("semdedup", in,
+        if (sz.getLong(0) < 2) vecs.select(col(idCol)).limit(0)
+        else Similarity.semDedup(vecs, idCol, sc.vecCol, sc.threshold, sc.nClusters)
+          .filter(!col("kept")).select(col(idCol)))
+    }
+
+    // 5. shard assignment — deterministic epoch shuffle, payload joined
+    //    back on the id
+    def sharded(clean: Kept): DataFrame = graft.queries.PipelineQueries
+      .epochShuffle(clean.df, idCol, cfg.nShards, cfg.epoch)
+      .join(clean.df, Seq(idCol))
+
+    /** Writes the rejects and the stage log to `path("rejects")` and
+      * `path("stage_log")`.
+      */
+    def writeLog(spark: SparkSession, path: String => String): Unit = {
+      rejects.result().reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(path("rejects"))
+      import spark.implicits._
+      counts.result().toDF().coalesce(1)
+        .write.mode("overwrite").parquet(path("stage_log"))
+    }
+
+    def result(in: Kept, clean: Kept): CurationResult =
+      CurationResult(in.n, clean.n, counts.result())
+
+    def release(): Unit = frames.foreach(_.unpersist(blocking = false))
+  }
+
   def curate(spark: SparkSession, docs: DataFrame, evalDocs: Option[DataFrame],
              outDir: String,
              cfg: CurationConfig = CurationConfig(),
@@ -123,182 +319,28 @@ object CorpusPipeline {
              semdedup: Option[SemDedupConfig] = None): CurationResult = {
     require(cfg.minQuality >= 0 && cfg.minQuality <= 1,
       s"minQuality must be in [0,1], got ${cfg.minQuality}")
-    val stages = Seq.newBuilder[StageCount]
-    val rejects = Seq.newBuilder[DataFrame]
-    def stage(name: String, kept: DataFrame, dropped: DataFrame,
-              nIn: Long): Long = {
-      val nOut = kept.count()
-      stages += StageCount(name, nIn, nOut, nIn - nOut)
-      rejects += dropped.select(col(idCol), lit(name).as("reason"))
-      nOut
+    val l = new Ledger(cfg, idCol, textCol)
+    try {
+      val in = l.input(docs)
+      val (_, clean) = l.chain(in, None, None, cfg.spanRewriteTokens,
+        importance, semdedup, evalDocs)
+      // eager writes (snapshot semantics: overwrite = the run's output)
+      l.sharded(clean).write.mode("overwrite").partitionBy("shard")
+        .parquet(s"$outDir/clean")
+      l.writeLog(spark, t => s"$outDir/$t")
+      if (Seq("source", "lang").forall(docs.columns.contains)) {
+        clean.df.groupBy("source", "lang")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(TF.tokenCount(col(textCol))).as("n_tokens"),
+            sum(length(col(textCol)).cast("long")).as("n_chars_total"))
+          .write.mode("overwrite").parquet(s"$outDir/card")
+      }
+      l.result(in, clean)
+    } finally {
+      l.release()
+      Dedup.releaseCaches()
+      Similarity.releaseCaches()
     }
-
-    val input = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nIn = input.count()
-
-    // 1. quality gate — map-only, so it runs on the raw scan; a null
-    //    text scores 0 (dropped), never a null that would slip both
-    //    the kept and the dropped filter
-    val scored = input.withColumn("__q",
-      TF.qualityScore(coalesce(col(textCol), lit(""))))
-    val qKept = scored.filter(col("__q") >= cfg.minQuality).drop("__q")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n1 = stage("quality", qKept,
-      scored.filter(col("__q") < cfg.minQuality), nIn)
-
-    // 2. exact dedup — keep the smallest id per identical text
-    val keep = Dedup.exact(qKept, Seq(xxhash64(col(textCol)).as("__h")),
-      col(idCol)).select(col("keep_id").as(idCol))
-    val eKept = qKept.join(keep, Seq(idCol), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n2 = stage("exact_dup", eKept,
-      qKept.join(keep, Seq(idCol), "left_anti"), n1)
-
-    // 2.2 (optional) span rewrite — execute q81's removal plan on the
-    //     exact-deduped corpus (identical texts are already collapsed,
-    //     so the window never sees byte-duplicate span floods); a doc
-    //     whose every cell was a later occurrence comes back empty and
-    //     drops here rather than polluting downstream stages
-    val (sKept, n2a, sFrame) = cfg.spanRewriteTokens match {
-      case Some(st) =>
-        val rewritten = Dedup.removeSpans(eKept, idCol, textCol, st)
-          .drop("n_spans_kept", "n_spans_removed")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // coalesce: a NULL text (passed through removeSpans unchanged)
-        // must land in the REJECT branch — a bare `> 0` / `=== 0` pair
-        // is NULL for it on both sides and the doc would vanish from
-        // the ledger entirely, breaking the stage-count reconciliation
-        val keptPred = coalesce(length(trim(col(textCol))) > 0, lit(false))
-        val kept = rewritten.filter(keptPred)
-        val n = stage("span_rewrite", kept, rewritten.filter(!keptPred), n2)
-        (kept, n, Some(rewritten))
-      case None => (eKept, n2, None)
-    }
-
-    // 2.5 (optional) importance gate — DSIR domain-match selection
-    //     (operators.Importance, q158). Runs on the exact-deduped
-    //     corpus so duplicated texts cannot skew the feature model,
-    //     and before the LSH stage so near-dup shuffles see only
-    //     selected documents.
-    val (iKept, n2b) = importance match {
-      case Some(ic) =>
-        val keepIds = graft.operators.Importance
-          .dsirScore(sKept, idCol, textCol, ic.isTarget, ic.vocabSize)
-          .filter(col("score_micro") >= ic.minScoreMicro)
-          .select(col(idCol))
-        val kept = sKept.join(keepIds, Seq(idCol), "left_semi")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = stage("importance", kept,
-          sKept.join(keepIds, Seq(idCol), "left_anti"), n2a)
-        (kept, n)
-      case None => (sKept, n2a)
-    }
-
-    // 3. near-dup canonicalization — LSH-verified pairs, connected
-    //    components, longest-text representative per cluster (q95);
-    //    banding from the measured census when the dial asks for it
-    val (numPerm, bands, densityHint) =
-      if (cfg.adaptiveBanding) {
-        val c = Dedup.adaptiveBanding(iKept, idCol, textCol,
-          cfg.shingleK, cfg.jaccardThreshold)
-        (c.numPerm, c.bands, Some(c.estPairsPerDoc))
-      } else (cfg.numPerm, cfg.bands, None)
-    val pairs = Dedup.lshVerifiedPairs(iKept, idCol, textCol,
-      cfg.shingleK, cfg.jaccardThreshold, numPerm, bands,
-      candidatesPerDocHint = densityHint)
-    val clusters = Dedup.dedupClusters(pairs, "id_a", "id_b")
-    val canon = clusters
-      .join(iKept.select(col(idCol).as("node"),
-        length(col(textCol)).as("__len")), Seq("node"))
-      .groupBy("cluster")
-      .agg(max_by(col("node"), struct(col("__len"), -col("node"))).as("node"))
-      .select(col("node"))
-    val nearDropped = clusters.select("node")
-      .join(canon, Seq("node"), "left_anti")
-      .select(col("node").as(idCol))
-    val nKept = iKept.join(nearDropped, Seq(idCol), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n3 = stage("near_dup", nKept,
-      iKept.join(nearDropped, Seq(idCol), "left_semi"), n2b)
-
-    // 3.5 (optional) SemDeDup — embedding-level pruning of the
-    //     lexically-canonicalized survivors (the paper's pipeline
-    //     position: shingle near-dup already collapsed the literal
-    //     copies, this removes semantic re-tellings LSH structurally
-    //     misses). Only docs WITH an embedding are judged; the prune
-    //     runs on exactly the surviving subset so a dropped doc can
-    //     never dominate a kept one.
-    val (mKept, n3a) = semdedup match {
-      case Some(sc) =>
-        val vecs = sc.embeddings
-          .select(col(sc.vecIdCol).as(idCol), col(sc.vecCol))
-          .join(nKept.select(idCol), Seq(idCol), "left_semi")
-        // one sizing pass doubles as the 1:1 precondition check: a
-        // duplicate vec_id would feed semDedup duplicate ids and make
-        // the (csim, id) dominance order self-referential for that doc
-        val sz = vecs.agg(count(lit(1)), count_distinct(col(idCol))).head()
-        require(sz.getLong(0) == sz.getLong(1),
-          s"SemDeDup needs exactly one embedding per doc: " +
-            s"${sz.getLong(0) - sz.getLong(1)} duplicate ${sc.vecIdCol} row(s)")
-        // KMeans needs >= 2 rows; below that there is nothing to prune
-        val dropIds =
-          if (sz.getLong(0) < 2) vecs.select(col(idCol)).limit(0)
-          else graft.operators.Similarity
-            .semDedup(vecs, idCol, sc.vecCol, sc.threshold, sc.nClusters)
-            .filter(!col("kept")).select(col(idCol))
-        val kept = nKept.join(dropIds, Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = stage("semdedup", kept,
-          nKept.join(dropIds, Seq(idCol), "left_semi"), n3)
-        (kept, n)
-      case None => (nKept, n3)
-    }
-
-    // 4. decontamination — any shared eval word-n-gram disqualifies
-    val (cKept, nClean) = evalDocs match {
-      case Some(ev) =>
-        val flagged = Decontaminate
-          .overlapFlags(mKept, ev, idCol, textCol, cfg.decontamNgram)
-          .select(col(idCol))
-        val kept = mKept.join(flagged, Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n4 = stage("contaminated", kept,
-          mKept.join(flagged, Seq(idCol), "left_semi"), n3a)
-        (kept, n4)
-      case None => (mKept, n3a)
-    }
-
-    // 5. shard assignment — deterministic epoch shuffle, payload joined
-    //    back on the id
-    val sharded = graft.queries.PipelineQueries
-      .epochShuffle(cKept, idCol, cfg.nShards, cfg.epoch)
-      .join(cKept, Seq(idCol))
-
-    // eager writes (snapshot semantics: overwrite = the run's output)
-    sharded.write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$outDir/clean")
-    rejects.result().reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$outDir/rejects")
-    val sp = spark
-    import sp.implicits._
-    stages.result().toDF().coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/stage_log")
-    if (Seq("source", "lang").forall(docs.columns.contains)) {
-      cKept.groupBy("source", "lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TF.tokenCount(col(textCol))).as("n_tokens"),
-          sum(length(col(textCol)).cast("long")).as("n_chars_total"))
-        .write.mode("overwrite").parquet(s"$outDir/card")
-    }
-
-    Seq(input, qKept, eKept, nKept).foreach(_.unpersist(blocking = false))
-    sFrame.foreach(_.unpersist(blocking = false))
-    if (iKept ne sKept) iKept.unpersist(blocking = false)
-    if (mKept ne nKept) mKept.unpersist(blocking = false)
-    if (cKept ne mKept) cKept.unpersist(blocking = false)
-    Dedup.releaseCaches()
-    graft.operators.Similarity.releaseCaches()
-    CurationResult(nIn, nClean, stages.result())
   }
 
   /** The STEADY-STATE curation loop — [[curate]] is the one-time
@@ -313,12 +355,12 @@ object CorpusPipeline {
     * (`clean/ index_bands/ index_sets/ text_hashes/ rejects/
     * stage_log/`, each with a `batch=<id>` subdirectory per call); the
     * first call bootstraps empty state, so the backfill is just the
-    * first increment. `clean/batch=<id>` doubles as the COMMIT MARKER
-    * (written last): a COMPLETED id is refused on re-run (the
-    * EtlPipeline duplicate-business-date precedent), while a CRASHED
-    * batch leaves metadata partials but no marker — retrying the SAME
-    * id is safe, because every state read excludes the in-flight id's
-    * partials and the final writes overwrite them.
+    * first increment. `clean/batch=<id>` is the COMMIT MARKER (written
+    * last), and state reads see ONLY committed batches: a COMPLETED id
+    * is refused on re-run (the EtlPipeline duplicate-business-date
+    * precedent), while a CRASHED batch leaves metadata partials but no
+    * marker — no later batch dedups against them, and retrying the SAME
+    * id is safe, because the final writes overwrite them.
     *
     * Dedup policy is FIRST-SEEN-WINS (the q67/dedupStream semantics):
     * a batch doc that matches the stored corpus drops, whatever its
@@ -326,10 +368,13 @@ object CorpusPipeline {
     * which cannot be honored without rewriting history. Batch-internal
     * clusters still pick the longest-text representative. Consequence:
     * re-delivering the same CONTENT under fresh ids yields zero new
-    * documents (spec-asserted idempotence).
+    * documents (spec-asserted idempotence). Near-dup runs
+    * [[Dedup.assignIncrementEdges]] against the stored index, and
+    * [[Dedup.lshVerifiedPairs]] on the bootstrap batch.
     *
     * New ids must be new — stored ids colliding with the batch fail
-    * loudly (the [[Dedup.dedupIncrement]] precondition).
+    * loudly (checked up front; it is also the
+    * [[Dedup.assignIncrementEdges]] precondition).
     */
   def curateIncrement(spark: SparkSession, newDocs: DataFrame,
                       evalDocs: Option[DataFrame], stateDir: String,
@@ -346,190 +391,70 @@ object CorpusPipeline {
         "backfill and pass its choice explicitly")
     // Leading letter/underscore: the id round-trips partition-value
     // type inference. A numeric-looking id ("001") comes back from the
-    // `batch=001` directory as integer 1, so the crash-retry
-    // self-exclusion filter below (`cast("string") =!= batchId`
-    // comparing "1" to "001") would silently keep the partial rows and
-    // fail the ids-must-be-new check with a misleading error.
+    // `batch=001` directory as integer 1, so the committed-batch filter
+    // below (`cast("string")` comparing "1" to "001") would silently
+    // drop the batch's committed rows from the state.
     require(batchId.matches("[A-Za-z_][A-Za-z0-9_.-]*"),
       s"batchId must start with a letter/underscore and use only " +
         s"[A-Za-z0-9_.-] (a numeric-looking id does not survive partition " +
         s"type inference), got '$batchId'")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(stateDir), spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(stateDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def part(table: String) = s"$stateDir/$table/batch=$batchId"
-    // `clean/batch=<id>` is the COMMIT MARKER: it is written last, so a
-    // crashed batch leaves metadata partials but no clean dir — the
-    // retry below ignores and overwrites them (stateTable filters out
-    // the current batch id), while a COMPLETED batch id is refused.
-    require(!fs.exists(new org.apache.hadoop.fs.Path(part("clean"))),
+    require(!fs.exists(new Path(part("clean"))),
       s"batch '$batchId' already ingested into $stateDir — re-running a batch id " +
         "would double-count; pick a new id (or delete the batch= directories to redo)")
+    val committed = {
+      val c = new Path(s"$stateDir/clean")
+      if (!fs.exists(c)) Nil
+      else fs.listStatus(c).map(_.getPath.getName)
+        .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=")).toSeq
+    }
     def stateTable(table: String): Option[DataFrame] = {
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/$table")
-      if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-        Some(spark.read.parquet(s"$stateDir/$table")
-          .filter(col("batch").cast("string") =!= batchId)
+      val p = new Path(s"$stateDir/$table")
+      if (committed.nonEmpty && fs.exists(p) && fs.listStatus(p).nonEmpty)
+        Some(spark.read.parquet(p.toString)
+          .filter(col("batch").cast("string").isin(committed: _*))
           .drop("batch"))
       else None
     }
 
-    val stages = Seq.newBuilder[StageCount]
-    val rejects = Seq.newBuilder[DataFrame]
-    def stage(name: String, kept: DataFrame, dropped: DataFrame,
-              nIn: Long): Long = {
-      val nOut = kept.count()
-      stages += StageCount(name, nIn, nOut, nIn - nOut)
-      rejects += dropped.select(col(idCol), lit(name).as("reason"))
-      nOut
-    }
-
-    val input = newDocs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nIn = input.count()
-    val storedHashes = stateTable("text_hashes")
-    storedHashes.foreach { h =>
-      val clash = input.select(col(idCol)).join(h.select(col(idCol)), Seq(idCol), "left_semi").count()
-      require(clash == 0,
-        s"$clash batch ids already exist in the corpus state — ingest ids must be new")
-    }
-
-    // 1. quality gate
-    val scored = input.withColumn("__q",
-      TF.qualityScore(coalesce(col(textCol), lit(""))))
-    val qKept = scored.filter(col("__q") >= cfg.minQuality).drop("__q")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n1 = stage("quality", qKept,
-      scored.filter(col("__q") < cfg.minQuality), nIn)
-
-    // 2. exact dedup — within the batch, then against the stored corpus
-    //    hash table (an 8-byte-key anti join; the corpus text never loads)
-    val hashed = qKept.withColumn("__h", xxhash64(col(textCol)))
-    val keep = Dedup.exact(hashed, Seq(col("__h")), col(idCol))
-      .select(col("keep_id").as(idCol))
-    val batchKept = hashed.join(keep, Seq(idCol), "left_semi")
-    val eKept = storedHashes match {
-      case Some(h) => batchKept.join(h.select(col("__h")), Seq("__h"), "left_anti")
-      case None    => batchKept
-    }
-    val eKeptP = eKept.drop("__h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n2 = stage("exact_dup", eKeptP,
-      qKept.join(eKeptP.select(col(idCol)), Seq(idCol), "left_anti"), n1)
-
-    // 3. near-dup vs the stored LSH index + within the batch. Corpus
-    //    matches drop the batch side (first-seen wins); batch-internal
-    //    clusters keep the longest text. Default engine: the ASSIGNMENT
-    //    mode — one verified edge per (batch doc, corpus doc) with
-    //    first-true-edge early exit and stage-B scoped to survivors by
-    //    construction, so the steady-state loop never bills the
-    //    quadratic within-cluster pair mass (the r13 sf10 crossover:
-    //    419 s assignment vs 474 s pair, 450× fewer rows). The stored
-    //    corpus is pairwise near-dup-free by this very loop, so its
-    //    cluster table is all singletons — the empty frame below IS the
-    //    maintained table, and stage A's coalesce labels each index doc
-    //    as its own representative.
-    val (vsCorpusDrop, innerPairs) =
-      (stateTable("index_bands"), stateTable("index_sets")) match {
-        case (Some(bands), Some(sets)) if cfg.incrementAssign =>
-          val edges = Dedup.assignIncrementEdges(bands, sets,
-            eKeptP.select(col(idCol).as("node"), col(idCol).as("cluster"))
-              .limit(0),
-            eKeptP, idCol, textCol, cfg.shingleK, cfg.jaccardThreshold,
-            cfg.numPerm, cfg.bands, contractedBatchOnly = true)
-          // stage-B labels of surviving docs are their own ids, so the
-          // batch channel is already the survivor-survivor pair list
-          (edges.corpus.select(col("ea").as(idCol)).distinct(),
-            edges.batch.select(col("ea").as("id_a"), col("eb").as("id_b")))
-        case st =>
-          val pairs = st match {
-            case (Some(bands), Some(sets)) =>
-              Dedup.dedupIncrement(bands, sets, eKeptP, idCol, textCol,
-                cfg.shingleK, cfg.jaccardThreshold, cfg.numPerm, cfg.bands)
-            case _ =>
-              Dedup.lshVerifiedPairs(eKeptP, idCol, textCol,
-                cfg.shingleK, cfg.jaccardThreshold, cfg.numPerm, cfg.bands)
-          }
-          val batchIds = eKeptP.select(col(idCol))
-          val aInBatch = pairs.select(col("id_a").as(idCol))
-            .join(batchIds, Seq(idCol), "left_semi").select(col(idCol).as("id_a"))
-          val bInBatch = pairs.select(col("id_b").as(idCol))
-            .join(batchIds, Seq(idCol), "left_semi").select(col(idCol).as("id_b"))
-          val tagged = pairs
-            .join(aInBatch.distinct().withColumn("__a_new", lit(1)), Seq("id_a"), "left")
-            .join(bInBatch.distinct().withColumn("__b_new", lit(1)), Seq("id_b"), "left")
-          // any batch doc paired with a corpus doc drops immediately
-          val corpusDrop = tagged
-            .filter(col("__a_new").isNull || col("__b_new").isNull)
-            .select(when(col("__a_new").isNotNull, col("id_a"))
-              .otherwise(col("id_b")).as(idCol)).distinct()
-          // batch-internal pairs among the remaining docs cluster as in curate()
-          val inner = tagged
-            .filter(col("__a_new").isNotNull && col("__b_new").isNotNull)
-            .join(corpusDrop.select(col(idCol).as("id_a")), Seq("id_a"), "left_anti")
-            .join(corpusDrop.select(col(idCol).as("id_b")), Seq("id_b"), "left_anti")
-            .select("id_a", "id_b")
-          (corpusDrop, inner)
+    val l = new Ledger(cfg, idCol, textCol)
+    try {
+      val in = l.input(newDocs)
+      val storedHashes = stateTable("text_hashes")
+      storedHashes.foreach { h =>
+        val clash = in.df.select(col(idCol))
+          .join(h.select(col(idCol)), Seq(idCol), "left_semi").count()
+        require(clash == 0,
+          s"$clash batch ids already exist in the corpus state — ingest ids must be new")
       }
-    val clusters = Dedup.dedupClusters(innerPairs, "id_a", "id_b")
-    val canon = clusters
-      .join(eKeptP.select(col(idCol).as("node"),
-        length(col(textCol)).as("__len")), Seq("node"))
-      .groupBy("cluster")
-      .agg(max_by(col("node"), struct(col("__len"), -col("node"))).as("node"))
-      .select(col("node"))
-    val nearDropped = clusters.select("node")
-      .join(canon, Seq("node"), "left_anti")
-      .select(col("node").as(idCol))
-      .unionByName(vsCorpusDrop)
-    val nKept = eKeptP.join(nearDropped, Seq(idCol), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n3 = stage("near_dup", nKept,
-      eKeptP.join(nearDropped, Seq(idCol), "left_semi"), n2)
+      val index = for (b <- stateTable("index_bands"); s <- stateTable("index_sets"))
+        yield (b, s)
+      val (passed, clean) = l.chain(in, storedHashes, index, None, None, None, evalDocs)
 
-    // 4. decontamination
-    val (cKept, nClean) = evalDocs match {
-      case Some(ev) =>
-        val flagged = Decontaminate
-          .overlapFlags(nKept, ev, idCol, textCol, cfg.decontamNgram)
-          .select(col(idCol))
-        val kept = nKept.join(flagged, Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n4 = stage("contaminated", kept,
-          nKept.join(flagged, Seq(idCol), "left_semi"), n3)
-        (kept, n4)
-      case None => (nKept, n3)
+      // commit the batch: metadata the NEXT batch will dedup against
+      // (bands / sets / text hashes) first, the clean shards LAST —
+      // clean's existence is the batch's commit marker
+      val (nbRaw, nsRaw) = Dedup.nearDupIndex(clean.df, idCol, textCol,
+        cfg.shingleK, cfg.numPerm, cfg.bands)
+      nbRaw.write.mode("overwrite").parquet(part("index_bands"))
+      nsRaw.write.mode("overwrite").parquet(part("index_sets"))
+      // text_hashes is the SEEN-CONTENT registry, not the clean set: every
+      // doc admitted past the quality gate registers, kept OR dropped.
+      // Re-delivered content then always exact-drops against it — without
+      // this, a transitive-cluster member whose only above-threshold
+      // partners were themselves dropped would re-enter on re-delivery
+      // (its canonical is below threshold from it; only its dropped twin
+      // matched). 16 bytes per seen doc — linear, tiny state.
+      passed.df.select(col(idCol), xxhash64(col(textCol)).as("__h"))
+        .write.mode("overwrite").parquet(part("text_hashes"))
+      l.writeLog(spark, part)
+      l.sharded(clean).write.mode("overwrite").parquet(part("clean"))
+      l.result(in, clean)
+    } finally {
+      l.release()
+      Dedup.releaseCaches()
     }
-
-    // 5. commit the batch: metadata the NEXT batch will dedup against
-    //    (bands / sets / text hashes) first, the clean shards LAST —
-    //    clean's existence is the batch's commit marker
-    val (nbRaw, nsRaw) = Dedup.nearDupIndex(cKept, idCol, textCol,
-      cfg.shingleK, cfg.numPerm, cfg.bands)
-    nbRaw.write.mode("overwrite").parquet(part("index_bands"))
-    nsRaw.write.mode("overwrite").parquet(part("index_sets"))
-    // text_hashes is the SEEN-CONTENT registry, not the clean set: every
-    // doc admitted past the quality gate registers, kept OR dropped.
-    // Re-delivered content then always exact-drops against it — without
-    // this, a transitive-cluster member whose only above-threshold
-    // partners were themselves dropped would re-enter on re-delivery
-    // (its canonical is below threshold from it; only its dropped twin
-    // matched). 16 bytes per seen doc — linear, tiny state.
-    qKept.select(col(idCol), xxhash64(col(textCol)).as("__h"))
-      .write.mode("overwrite").parquet(part("text_hashes"))
-    rejects.result().reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(part("rejects"))
-    val sp = spark
-    import sp.implicits._
-    stages.result().toDF().coalesce(1)
-      .write.mode("overwrite").parquet(part("stage_log"))
-    graft.queries.PipelineQueries
-      .epochShuffle(cKept, idCol, cfg.nShards, cfg.epoch)
-      .join(cKept, Seq(idCol))
-      .write.mode("overwrite").parquet(part("clean"))
-
-    Seq(input, qKept, eKeptP, nKept).foreach(_.unpersist(blocking = false))
-    if (cKept ne nKept) cKept.unpersist(blocking = false)
-    Dedup.releaseCaches()
-    CurationResult(nIn, nClean, stages.result())
   }
 
   /** The mixture-assembly result: `allocations` — one row per source

@@ -23,32 +23,31 @@ object WarehouseOps {
 
   private val MetaTables = Set(WatermarkTable, TsWatermarkTable, RunLogTable)
 
-  /** One row per warehouse table: file/byte footprint, last file
-    * modification, stored watermark — the file loop's business date or
-    * the database loop's timestamp, whichever store names the table
-    * (null when neither does) — and the id/time of the LAST run that
-    * wrote it, taken from one run-log row (struct-max on
-    * (run_end_dt, run_id), so the pair is internally consistent even
-    * when caller-supplied run ids aren't time-ordered). Meta tables and
-    * snapshot-swap stage directories are excluded.
-    */
   /** The file-footprint half of [[inventory]]: one row per table —
     * (table_name, n_files, total_bytes, last_modified) from a
     * recursive FS listing alone. No meta-table reads, so it works on
     * any directory of parquet tables (including warehouses whose run
     * log predates the run_start/end columns); [[measuredWriteAmp]]'s
-    * presence gate uses exactly this.
+    * presence gate uses exactly this. Meta tables and snapshot-swap
+    * stage directories are not listed; a stage directory whose table
+    * or meta store is missing is an interrupted swap, and the listing
+    * refuses it like every warehouse reader
+    * ([[Compaction.requireNoOrphanStage]]).
     */
   def footprint(spark: SparkSession, warehouseDir: String): DataFrame = {
     import spark.implicits._
     val root = new Path(warehouseDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tables =
+    val dirs =
       if (!fs.exists(root)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(root).filter { s =>
-        val name = s.getPath.getName
-        s.isDirectory && !MetaTables(name) && !Compaction.isStage(name)
-      }
+      else fs.listStatus(root).filter(_.isDirectory)
+    dirs.map(_.getPath.getName).filter(Compaction.isStage).foreach(s =>
+      Compaction.requireNoOrphanStage(spark,
+        s"$warehouseDir/${s.stripSuffix(Compaction.StageSuffix)}"))
+    val tables = dirs.filter { s =>
+      val name = s.getPath.getName
+      !MetaTables(name) && !Compaction.isStage(name)
+    }
     tables.map { t =>
       val it = fs.listFiles(t.getPath, true)
       var nFiles = 0L; var bytes = 0L; var lastMod = 0L
@@ -64,6 +63,16 @@ object WarehouseOps {
     }.toSeq.toDF("table_name", "n_files", "total_bytes", "last_modified")
   }
 
+  /** One row per warehouse table: file/byte footprint, last file
+    * modification, stored watermark — the file loop's business date or
+    * the database loop's timestamp, whichever store names the table
+    * (null when neither does) — and the id/time of the LAST run that
+    * wrote it, taken from one run-log row (struct-max on
+    * (run_end_dt, run_id), so the pair is internally consistent even
+    * when caller-supplied run ids aren't time-ordered). Meta tables and
+    * snapshot-swap stage directories are excluded; an interrupted swap
+    * of any table or meta store is refused ([[footprint]]'s check).
+    */
   def inventory(spark: SparkSession, warehouseDir: String): DataFrame = {
     import spark.implicits._
     val root = new Path(warehouseDir)

@@ -111,38 +111,83 @@ class CorpusPipelineSpec extends SparkSpec {
     assertThrows[IllegalArgumentException] {
       CorpusPipeline.curateIncrement(spark, b1, None, state, "b1")
     }
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val clash = intercept[IllegalArgumentException] {
       CorpusPipeline.curateIncrement(spark, b1, None, state, "b3")
     }
     assert(clash.getMessage.contains("ids must be new"))
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted,
+      "a refused call must release every frame it persisted")
     clean.unpersist(blocking = false)
   }
 
-  test("curateIncrement: assignment mode (default) keeps the exact pair-mode set") {
-    // the r13→r14 engine swap — assignIncrementEdges with stage B scoped
-    // to survivors must reproduce the pair mode's first-seen-wins kept
-    // set doc-for-doc, including the batch-internal longest-text
-    // canonicals, on a split where cross-batch near-dups exist
+  test("curateIncrement: assignment near-dup keeps the exact pair-mode set") {
+    // assignIncrementEdges with stage B scoped to survivors must keep
+    // the pair mode's first-seen-wins set doc-for-doc, including the
+    // batch-internal longest-text canonicals, on a split where
+    // cross-batch near-dups exist. The pair-mode reference is built
+    // here from Dedup.dedupIncrement + dedupClusters on b1's near-dup
+    // stage input and b0's stored index.
     val docs = graft.sources.Tables.documents(spark, sf)
     val b0 = docs.filter(col("doc_id") % 3 === 0)
     val b1 = docs.filter(col("doc_id") % 3 =!= 0)
-    def run(cfg: CorpusPipeline.CurationConfig)
-        : (org.apache.spark.sql.DataFrame, Long) = {
-      val state = java.nio.file.Files.createTempDirectory("graft_am").toString
-      CorpusPipeline.curateIncrement(spark, b0, None, state, "b0", cfg)
-      CorpusPipeline.curateIncrement(spark, b1, None, state, "b1", cfg)
-      val nearDrops = spark.read.parquet(s"$state/rejects")
-        .filter(col("batch").cast("string") === "b1" &&
-          col("reason") === "near_dup").count()
-      (spark.read.parquet(s"$state/clean").select("doc_id", "batch"), nearDrops)
+    val state = java.nio.file.Files.createTempDirectory("graft_am").toString
+    CorpusPipeline.curateIncrement(spark, b0, None, state, "b0")
+    CorpusPipeline.curateIncrement(spark, b1, None, state, "b1")
+    val rej1 = spark.read.parquet(s"$state/rejects")
+      .filter(col("batch").cast("string") === "b1")
+    val nearDrops = rej1.filter(col("reason") === "near_dup").count()
+    val kept = spark.read.parquet(s"$state/clean")
+      .filter(col("batch").cast("string") === "b1")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+
+    val stageIn = b1.join(rej1.filter(col("reason").isin("quality", "exact_dup"))
+      .select("doc_id"), Seq("doc_id"), "left_anti")
+    def b0State(t: String) = spark.read.parquet(s"$state/$t/batch=b0")
+    val pairs = Dedup.dedupIncrement(b0State("index_bands"), b0State("index_sets"),
+      stageIn, "doc_id", "text", 3, 0.6, 16, 16)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val batch = stageIn.select("doc_id").collect().map(_.getLong(0)).toSet
+    // a batch doc paired with a corpus doc drops (first-seen wins); the
+    // batch-internal pairs among the rest cluster, the longest text of
+    // each cluster (tie: smallest id) stays
+    val corpusDrop = pairs.collect {
+      case (a, b) if batch(a) != batch(b) => if (batch(a)) a else b
+    }.toSet
+    val inner = pairs.filter { case (a, b) =>
+      batch(a) && batch(b) && !corpusDrop(a) && !corpusDrop(b)
     }
-    val (assign, aDrops) = run(CorpusPipeline.CurationConfig(incrementAssign = true))
-    val (pair, pDrops) = run(CorpusPipeline.CurationConfig(incrementAssign = false))
-    assert(assign.exceptAll(pair).isEmpty && pair.exceptAll(assign).isEmpty,
+    val len = stageIn.select(col("doc_id"), length(col("text"))).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val sp = spark
+    import sp.implicits._
+    val members = Dedup.dedupClusters(inner.toSeq.toDF("id_a", "id_b"), "id_a", "id_b")
+      .collect().map(r => (r.getAs[Long]("node"), r.getAs[Long]("cluster")))
+    val canonDrop = members.groupBy(_._2).values.flatMap { ms =>
+      val canon = ms.map(_._1).maxBy(n => (len(n), -n))
+      ms.map(_._1).filter(_ != canon)
+    }.toSet
+    val pairKept = batch -- corpusDrop -- canonDrop
+
+    assert(kept === pairKept,
       "assignment-mode kept set must equal the pair-mode kept set")
     // the cross-batch channel was genuinely exercised, identically
-    assert(aDrops === pDrops)
-    assert(aDrops > 0, "fixture must exercise cross-batch near-dup drops")
+    assert(nearDrops === (corpusDrop ++ canonDrop).size.toLong)
+    assert(nearDrops > 0, "fixture must exercise cross-batch near-dup drops")
+  }
+
+  test("curateIncrement: a batch that never committed is not dedup state") {
+    val state = java.nio.file.Files.createTempDirectory("graft_uncommitted").toString
+    val b0 = graft.sources.Tables.documents(spark, sf).filter(col("doc_id") < 250)
+    val r0 = CorpusPipeline.curateIncrement(spark, b0, None, state, "b0")
+    // b0 crashed after its metadata writes, before its commit marker
+    assert(org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(s"$state/clean/batch=b0")))
+    // the same content under fresh ids is new to every committed batch
+    val r1 = CorpusPipeline.curateIncrement(spark,
+      b0.withColumn("doc_id", col("doc_id") + 1000000L), None, state, "b1")
+    assert(r1.nClean === r0.nClean,
+      "a batch must not dedup against state no committed batch wrote")
   }
 
   test("curate without an eval set skips the contamination stage") {

@@ -516,8 +516,9 @@ class EtlPipelineSpec extends SparkSpec {
         decimalCols = Seq("rate")))
     mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\nEUR;99,1\n")
     EtlPipeline.run(spark, inbox, wh, mappings, runId = 21)
-    // stage directories of an in-flight or interrupted swap
-    Seq("dwh_rates", "etl_watermark", "dwh_gone").foreach(t =>
+    // stage directories of in-flight swaps (the targets still exist;
+    // a stage whose target is gone is refused, see the next test)
+    Seq("dwh_rates", "etl_watermark").foreach(t =>
       Files.createDirectories(Paths.get(s"$wh/${t}__stage")))
 
     val inv = WarehouseOps.inventory(spark, wh).collect()
@@ -533,6 +534,37 @@ class EtlPipelineSpec extends SparkSpec {
     val none = WarehouseOps.inventory(spark,
       Files.createTempDirectory("graft_nowh").toString)
     assert(none.isEmpty && none.columns.length === 7)
+  }
+
+  test("warehouse inventory refuses a table or watermark store left at its stage path") {
+    val inbox = Files.createTempDirectory("graft_wiinbox").toString
+    val wh = Files.createTempDirectory("graft_wiwh").toString
+    val mappings = Seq(
+      FileMapping("rates_*.csv", "dwh_rates", "cur", Seq("rate"), scd = 1,
+        decimalCols = Seq("rate")),
+      FileMapping("fx_*.csv", "dwh_fx", "cur", Seq("rate"), scd = 1,
+        decimalCols = Seq("rate")))
+    mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\n")
+    mkFile(inbox, "fx_01012024.csv", "cur;rate\nEUR;99,1\n")
+    EtlPipeline.run(spark, inbox, wh, mappings, runId = 22)
+    assert(WarehouseOps.inventory(spark, wh).count() === 2)
+    // an interrupted swap leaves the only copy at <table>__stage
+    def toStage(t: String): Unit =
+      Files.move(Paths.get(s"$wh/$t"), Paths.get(s"$wh/${t}__stage"))
+    def refused(): Unit = {
+      val e = intercept[IllegalStateException](WarehouseOps.inventory(spark, wh))
+      assert(e.getMessage.contains("interrupted"))
+    }
+    toStage("dwh_fx")
+    refused()
+    toStage("etl_watermark")
+    refused()
+    Files.move(Paths.get(s"$wh/dwh_fx__stage"), Paths.get(s"$wh/dwh_fx"))
+    refused() // the watermark store alone is still orphaned
+    Files.move(Paths.get(s"$wh/etl_watermark__stage"), Paths.get(s"$wh/etl_watermark"))
+    // a stage directory of a table that no longer exists at all
+    Files.createDirectories(Paths.get(s"$wh/dwh_gone__stage"))
+    refused()
   }
 
   test("quarantined rows do not read as deleted-at-source in an scd2 snapshot merge") {
