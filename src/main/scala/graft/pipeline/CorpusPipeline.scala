@@ -53,7 +53,8 @@ object CorpusPipeline {
     * the text (documents emptied by the rewrite drop, rejects reason
     * `span_rewrite` — the stage name). It runs before near-dup so shared
     * boilerplate spans can't glue unrelated documents into one LSH
-    * cluster. [[curate]] only: [[curateIncrement]] has no span stage.
+    * cluster. [[curate]] only: [[curateIncrement]] has no span stage
+    * and refuses the dial.
     *
     * `adaptiveBanding = true` replaces the fixed (numPerm, bands) for
     * the near-dup stage with [[Dedup.adaptiveBanding]]'s measured
@@ -389,6 +390,9 @@ object CorpusPipeline {
       "adaptiveBanding is a backfill-only dial: the stored index fixes " +
         "(numPerm, bands) for every increment — run Dedup.adaptiveBanding at " +
         "backfill and pass its choice explicitly")
+    require(cfg.spanRewriteTokens.isEmpty,
+      "spanRewriteTokens is a backfill-only dial: curateIncrement has no " +
+        "span-rewrite stage, so a batch would keep the spans it was asked to remove")
     // Leading letter/underscore: the id round-trips partition-value
     // type inference. A numeric-looking id ("001") comes back from the
     // `batch=001` directory as integer 1, so the committed-batch filter

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StructField, StructType, TimestampType}
 
 import graft.operators.Scd
-import graft.sources.{DelimitedSource, FileIngest, JsonlSource, XlsxSource}
+import graft.sources.FileIngest
 import graft.sources.Compaction.{requireNoOrphanStage, writeSwap}
 
 /** Metadata-driven staging→DWH orchestration — the reference's ETL core
@@ -68,18 +68,6 @@ object EtlPipeline {
       payload: Seq[String],
       scd: Int,
       decimalCols: Seq[String] = Nil)
-
-  /** The all-strings parse schema for a jsonl-fed mapping: key +
-    * payload, every field read as a raw string exactly like the
-    * delimited reader delivers them (decimal normalization and the
-    * create_dt timestamp cast happen downstream, shared with the
-    * delimited path; create_dt itself comes from the file's business
-    * date, not the JSON body).
-    */
-  private def jsonlSchema(m: FileMapping): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(
-      (m.key +: m.payload).map(c => org.apache.spark.sql.types.StructField(
-        c, org.apache.spark.sql.types.StringType)))
 
   /** What one `run` did: the run-log rows it appended (also persisted to
     * the [[RunLogTable]] with run start/end timestamps), and
@@ -213,9 +201,9 @@ object EtlPipeline {
     * files strictly past the target's stored watermark (etl.py:158 —
     * the per-table `last_update_dt` check):
     *
-    *  1. read the file — txt/csv via [[DelimitedSource]], xlsx via
-    *     [[XlsxSource]] (file.py's `__HANDLER` dispatch on extension) —
-    *     and normalize decimal-comma columns,
+    *  1. read the file through [[FileIngest.read]] (or
+    *     [[FileIngest.readQuarantined]]), which picks the format by
+    *     extension and normalizes decimal-comma columns,
     *  2. merge into the parquet DWH table at
     *     `<warehouseDir>/<targetName>` (scd1 upsert or scd2 versioning;
     *     absent keys tombstone at the file's business date),
@@ -259,14 +247,15 @@ object EtlPipeline {
     * (facts) flows through [[runFromTables]]' incremental pull against
     * partitioned sources, not through this inbox loop.
     *
-    * `quarantineDir`: when set, delimited files read through
-    * [[DelimitedSource.readWithQuarantine]] — rows missing the mapping
+    * `quarantineDir`: when set, every file, whatever its format, reads
+    * through [[FileIngest.readQuarantined]] — rows missing the mapping
     * key or carrying unparseable decimal values are appended (raw, with
     * `reject_reason`/`src_file`/`run_id`) to
-    * `<quarantineDir>/<targetName>` instead of flowing into the merge
-    * as silent nulls, and each file's reject count is logged as a
-    * `qtn_<target>` run-log row. Without it the permissive legacy
-    * behavior is unchanged.
+    * `<quarantineDir>/<targetName>` instead of reaching the merge, and
+    * each file's reject count is logged as a `qtn_<target>` run-log
+    * row. Without it, a row missing its key still merges with a null
+    * key, and an unparseable decimal fails the run (the decimal cast is
+    * ANSI); the failed target's table and watermark stay as they were.
     */
   def run(spark: SparkSession, inboxDir: String, warehouseDir: String,
           mappings: Seq[FileMapping], runId: Long,
@@ -296,7 +285,6 @@ object EtlPipeline {
         s"mapping ${m.template}: multiple inbox files share a business date — " +
           s"merge order is undefined. ${dup.mkString("; ")}")
       fresh.foreach { case (path, dt) =>
-        val isXlsx = path.toLowerCase.endsWith(".xlsx")
         // A quarantined row's key was PRESENT in the delivery — only its
         // payload was unparseable. The snapshot-based scd2 merge reads
         // key absence as deleted-at-source, so feeding it the thinned
@@ -304,57 +292,26 @@ object EtlPipeline {
         // When rejects exist, liveness switches to an explicit key list
         // covering good ∪ quarantined keys; scd1 ignores liveness.
         var liveness: Scd.Liveness = Scd.SnapshotStg
-        val isJsonl = path.toLowerCase.endsWith(".jsonl")
-        val norm = (quarantineDir, isXlsx) match {
-          case (Some(qdir), false) =>
-            // jsonl shards get the SAME audited reject loop as
-            // delimited files: raw-line quarantine (replayable verbatim
-            // via JsonlSource.splitRaw), a qtn_ run-log row, and the
-            // key-list liveness switch. The jsonl quarantine stores raw
-            // lines, so its key-list contribution is a best-effort
-            // get_json_object pull — a line that is not even valid JSON
-            // has no extractable key to protect.
-            val q =
-              if (isJsonl)
-                JsonlSource.readWithQuarantine(spark, path,
-                  jsonlSchema(m), Seq(m.key), m.decimalCols)
-              else DelimitedSource.readWithQuarantine(
-                spark, path, Seq(m.key), m.decimalCols)
+        val stg = quarantineDir match {
+          case None => FileIngest.read(spark, path, m.key, m.payload, m.decimalCols)
+          case Some(qdir) =>
+            val d = FileIngest.readQuarantined(spark, path, m.key, m.payload, m.decimalCols)
             // count first (rejects are small by construction); write
             // only when non-empty so a clean run leaves no empty dirs
-            val nBad = q.bad.count()
+            val nBad = d.bad.count()
             if (nBad > 0) {
               // appending must not recreate a quarantine whose only
               // copy sits at the stage after an interrupted replay swap —
               // that would hide the orphan from replay's guard forever
               requireNoOrphanStage(spark, s"$qdir/${m.targetName}")
-              q.bad.withColumn("run_id", lit(runId))
-                .write.mode(org.apache.spark.sql.SaveMode.Append)
+              d.bad.withColumn("run_id", lit(runId))
+                .write.mode(SaveMode.Append)
                 .parquet(s"$qdir/${m.targetName}")
               out.log += ((runId, s"qtn_${m.targetName}", nBad, 0L, 0L))
-              val badKeys =
-                if (isJsonl)
-                  q.bad.select(get_json_object(col("raw_line"), s"$$.${m.key}").as(m.key))
-                else q.bad.select(m.key)
-              liveness = Scd.KeyList(
-                q.good.select(m.key).union(
-                  badKeys.filter(col(m.key).isNotNull)).distinct())
+              liveness = Scd.KeyList(d.good.select(m.key).union(d.badKeys).distinct())
             }
-            if (isJsonl)
-              q.good.withColumn("create_dt", lit(java.sql.Date.valueOf(dt)))
-            else q.good
-          case _ =>
-            val raw =
-              if (isXlsx) XlsxSource.read(spark, path)
-              else if (isJsonl)
-                JsonlSource.read(spark, path, jsonlSchema(m))
-                  .withColumn("create_dt", lit(java.sql.Date.valueOf(dt)))
-              else DelimitedSource.read(spark, path)
-            DelimitedSource.normalizeDecimalColumns(raw, m.decimalCols)
+            d.good
         }
-        val stg = norm.select(
-          (m.key +: m.payload).map(col) :+
-            col("create_dt").cast("timestamp").as("create_dt"): _*)
         val staged = new Staged(stg)
 
         val deleteTs = dt.atStartOfDay().format(
@@ -576,11 +533,13 @@ object EtlPipeline {
     * The quarantine shrinks atomically (snapshot swap; the directory
     * is removed outright when nothing remains); still-invalid rows
     * stay with a recomputed `reject_reason` and original
-    * `src_file`/`run_id` provenance. A jsonl row whose `src_file`
-    * carries no parseable `_DDMMYYYY` business date cannot be stamped
-    * for replay: it stays quarantined with `reject_reason =
-    * 'dateless_src_file'` (rename the file to release it) rather than
-    * aborting the batch — the other repairable rows still merge. Refresh
+    * `src_file`/`run_id` provenance. The rows re-split through
+    * [[FileIngest.resplit]], whatever format they were delivered in: a
+    * row whose `src_file` carries no valid `_DDMMYYYY` business date
+    * cannot be stamped for replay, so it stays quarantined with
+    * `reject_reason = 'dateless_src_file'` (rename the file to release
+    * it) rather than aborting the batch — the other repairable rows
+    * still merge. Refresh
     * marts afterwards with [[refreshMarts]] — note a `MartAccumulate`
     * whose stored watermark already covers the replayed rows' dates
     * will not re-derive them (strictly-greater contract); pair
@@ -595,47 +554,7 @@ object EtlPipeline {
     val fs = hadoopFs(spark, path)
     requireNoOrphanStage(spark, path)
     if (fs.exists(new Path(path))) {
-      val qtn = spark.read.parquet(path)
-      // a raw_line column marks a jsonl quarantine (stored verbatim
-      // lines); re-split it through the SAME parser the ingest used,
-      // deriving create_dt from the source file's business date — the
-      // value run() stamped on the good rows of that delivery
-      val sp =
-        if (qtn.columns.contains("raw_line")) {
-          // a dateless src_file (hand-renamed file) cannot be stamped
-          // with a replay create_dt. It must not produce a null create_dt
-          // — null fails the watermark filter, gets counted "stale", and
-          // leaves the quarantine WITHOUT being merged: silent data loss.
-          // But aborting the WHOLE replay on the first offender would
-          // block every other repairable row behind one bad filename — so
-          // dateless rows are split to a REJECTED side-channel instead:
-          // they stay quarantined with reject_reason 'dateless_src_file'
-          // (visible provenance, rename the file to release them) while
-          // every dated row merges normally this run.
-          // Gate on the PARSED date, not the regex: an 8-digit but
-          // invalid business date (_31132024) passes the regex, then
-          // to_date('ddMMyyyy') either throws executor-side under ANSI
-          // (aborting the whole replay — the failure mode this branch
-          // exists to remove) or yields a NULL create_dt under legacy
-          // mode (counted "stale", never merged, never released:
-          // silent loss). try_to_date turns both into NULL here, and
-          // NULL routes to the dateless side-channel. A NULL src_file
-          // makes regexp_extract NULL → try_to_date NULL → same
-          // branch: NULL provenance is dateless.
-          val parsedDate = call_function("try_to_date",
-            regexp_extract(col("src_file"),
-              graft.sources.FileIngest.BusinessDateRegex, 1), lit("ddMMyyyy"))
-          val hasDate = parsedDate.isNotNull
-          val dateless = qtn.filter(!hasDate)
-            .withColumn("reject_reason", lit("dateless_src_file"))
-          val s0 = graft.sources.JsonlSource.splitRaw(
-            qtn.filter(hasDate).drop("reject_reason"),
-            jsonlSchema(m), Seq(m.key), m.decimalCols)
-          s0.copy(
-            good = s0.good.withColumn("create_dt", parsedDate),
-            bad = s0.bad.unionByName(dateless))
-        } else DelimitedSource.validitySplit(
-          qtn.drop("reject_reason"), Seq(m.key), m.decimalCols)
+      val sp = FileIngest.resplit(spark.read.parquet(path), m.key, m.payload, m.decimalCols)
       val current = loadWatermarks(spark, warehouseDir, WatermarkTable).get(m.targetName) match {
         case Some(d) => sp.good.filter(col("create_dt").cast("date") >= lit(d).cast("date"))
         case None    => sp.good
@@ -645,9 +564,7 @@ object EtlPipeline {
       if (nGood > 0 || nStale > 0) {
         logRows += ((runId, s"qrp_${m.targetName}", nGood, 0L, nStale))
         if (nGood > 0) {
-          val stg = current.select(
-            (m.key +: m.payload).map(col) :+
-              col("create_dt").cast("timestamp").as("create_dt"): _*).persist()
+          val stg = current.persist()
           logRows += mergeInto(spark, warehouseDir,
             TableMapping(m.template, m.targetName, m.key, m.payload, m.scd),
             stg, runId, deleteTs = "9999-12-31 00:00:00", Scd.NoDeletes)

@@ -25,18 +25,56 @@ object FraudMart {
 
   private val wUser = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
 
+  // Each rule is defined once below — its dimension or window columns
+  // and its firing predicate — and used by both the standalone rule
+  // (q16-q19) and the fused report (unionRules).
+  private val purchase = col("event_type") === "purchase"
+
+  /** Blacklist = negative account balance. */
+  private def blacklisted(customer: DataFrame): DataFrame = customer.filter(col("c_acctbal") < 0)
+
+  /** R2 fires on a purchase past the client's `valid_to`. */
+  private val expired = purchase && col("ts") > col("valid_to")
+
+  /** R3's window columns: the location `k` and the previous event's. */
+  private def withVelocityCols(ev: DataFrame): DataFrame =
+    ev.withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
+      .withColumn("prv_k", lag(col("k"), 1).over(wUser))
+      .withColumn("prv_ts", lag(col("ts"), 1).over(wUser))
+
+  /** R3 fires on a location change within one hour. */
+  private val velocity =
+    col("k") =!= col("prv_k") && col("ts") < col("prv_ts") + expr("INTERVAL 1 HOUR")
+
+  /** R4's window columns, framed like the reference: LAG(amt), MIN/SUM
+    * over ROWS BETWEEN n PRECEDING.
+    */
+  private def withGuessingCols(ev: DataFrame): DataFrame = {
+    val frame3 = wUser.rowsBetween(-3, -1)
+    val frame2 = wUser.rowsBetween(-2, 0)
+    ev.withColumn("prv_amt", lag(col("value"), 1).over(wUser))
+      .withColumn("min_dt", min(col("ts")).over(frame3))
+      .withColumn("errs",
+        sum(when(col("event_type") === "error", 1).otherwise(0)).over(frame3))
+      .withColumn("red",
+        min(when(col("value") < col("prv_amt"), 1).otherwise(0)).over(frame2))
+  }
+
+  /** R4 fires on a purchase after >=2 errors inside 96 h, each attempt
+    * smaller than the previous.
+    */
+  private val guessing = purchase && col("errs") >= 2 &&
+    col("ts") < col("min_dt") + expr("INTERVAL 96 HOURS") && col("red") === 1
+
   /** R1 — operation while the client is blacklisted
-    * (trsh_rep_fraud_sync.sql:3-24). Blacklist = negative account
-    * balance; the dim side broadcasts.
+    * (trsh_rep_fraud_sync.sql:3-24); the dim side broadcasts.
     */
   def r1Blacklist(s: SparkSession, dir: String): DataFrame =
     r1On(events(s, dir), Tables.customer(s, dir))
 
   private[graft] def r1On(ev: DataFrame, customer: DataFrame): DataFrame = {
-    val bl = customer
-      .filter(col("c_acctbal") < 0)
-      .select(col("c_custkey"), col("c_name").as("fio"))
-    ev.filter(col("event_type") === "purchase")
+    val bl = blacklisted(customer).select(col("c_custkey"), col("c_name").as("fio"))
+    ev.filter(purchase)
       .join(broadcast(bl), col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("ts").as("event_dt"), col("user_id"), col("fio"),
         lit(1).as("rule"))
@@ -61,48 +99,26 @@ object FraudMart {
       .agg((min(col("ts")) + expr("INTERVAL 20 DAYS")).as("valid_to"))
 
   private[graft] def r2On(ev: DataFrame, validity: DataFrame): DataFrame =
-    ev.filter(col("event_type") === "purchase").alias("e")
-      .join(validity.alias("v"), Seq("user_id"))
-      .filter(col("e.ts") > col("v.valid_to"))
+    ev.join(validity, Seq("user_id"))
+      .filter(expired)
       .select(col("event_id"), col("ts").as("event_dt"), col("user_id"), lit(2).as("rule"))
 
   /** R3 — operations from different locations within one hour
     * (trsh_rep_fraud_sync.sql:47-80: LAG(city) per client). Location =
     * the `k` property of the event JSON payload.
     */
-  def r3Velocity(s: SparkSession, dir: String): DataFrame = r3On(events(s, dir))
-
-  private def r3On(ev: DataFrame): DataFrame =
-    ev.withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-      .withColumn("prv_k", lag(col("k"), 1).over(wUser))
-      .withColumn("prv_ts", lag(col("ts"), 1).over(wUser))
-      .filter(col("k") =!= col("prv_k"))
-      .filter(col("ts") < col("prv_ts") + expr("INTERVAL 1 HOUR"))
+  def r3Velocity(s: SparkSession, dir: String): DataFrame =
+    withVelocityCols(events(s, dir)).filter(velocity)
       .select(col("event_id"), col("ts").as("event_dt"), col("user_id"),
         col("k"), col("prv_k"), lit(3).as("rule"))
 
   /** R4 — amount-guessing (trsh_rep_fraud_sync.sql:86-129): a successful
     * operation preceded by >=2 errors in the trailing window, each
-    * attempt smaller than the previous. Frames mirror the reference:
-    * LAG(amt), MIN/SUM over ROWS BETWEEN n PRECEDING.
+    * attempt smaller than the previous.
     */
-  def r4Guessing(s: SparkSession, dir: String): DataFrame = r4On(events(s, dir))
-
-  private def r4On(ev: DataFrame): DataFrame = {
-    val frame3 = wUser.rowsBetween(-3, -1)
-    val frame2 = wUser.rowsBetween(-2, 0)
-    ev.withColumn("prv_amt", lag(col("value"), 1).over(wUser))
-      .withColumn("min_dt", min(col("ts")).over(frame3))
-      .withColumn("errs",
-        sum(when(col("event_type") === "error", 1).otherwise(0)).over(frame3))
-      .withColumn("red",
-        min(when(col("value") < col("prv_amt"), 1).otherwise(0)).over(frame2))
-      .filter(col("event_type") === "purchase" && col("errs") >= 2 &&
-        col("ts") < col("min_dt") + expr("INTERVAL 96 HOURS") && col("red") === 1)
+  def r4Guessing(s: SparkSession, dir: String): DataFrame =
+    withGuessingCols(events(s, dir)).filter(guessing)
       .select(col("event_id"), col("ts").as("event_dt"), col("user_id"), lit(4).as("rule"))
-  }
-
-  private val CommonCols = Seq("event_id", "event_dt", "user_id", "rule")
 
   /** All four rules in ONE pass over the fact stream. The naive shape
     * (union of the four standalone rules) scans `ev` four times and
@@ -124,38 +140,32 @@ object FraudMart {
     *    UNION ALL semantics.
     *
     * Net: one fact scan, one fact shuffle, zero extra sorts — vs four
-    * scans and two shuffles. Per-rule semantics stay byte-identical to
-    * r1On..r4On (q16-q19 assert them individually; FraudMartSpec asserts
-    * this fused plan equals the four-way union row-for-row).
+    * scans and two shuffles. The window columns and predicates are the
+    * standalone rules' own (FraudMartSpec asserts this fused plan equals
+    * the four-way union row-for-row).
     */
   private def unionRules(ev: DataFrame, customer: DataFrame,
                          validity: DataFrame): DataFrame = {
-    val bl = customer.filter(col("c_acctbal") < 0)
-      .select(col("c_custkey").as("user_id"), lit(1).as("bl"))
-    val frame3 = wUser.rowsBetween(-3, -1)
-    val frame2 = wUser.rowsBetween(-2, 0)
-    val purchase = col("event_type") === "purchase"
-    ev.withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
-      .withColumn("prv_k", lag(col("k"), 1).over(wUser))
-      .withColumn("prv_ts", lag(col("ts"), 1).over(wUser))
-      .withColumn("prv_amt", lag(col("value"), 1).over(wUser))
-      .withColumn("min_dt", min(col("ts")).over(frame3))
-      .withColumn("errs",
-        sum(when(col("event_type") === "error", 1).otherwise(0)).over(frame3))
-      .withColumn("red",
-        min(when(col("value") < col("prv_amt"), 1).otherwise(0)).over(frame2))
+    val bl = blacklisted(customer).select(col("c_custkey").as("user_id"), lit(1).as("bl"))
+    withGuessingCols(withVelocityCols(ev))
       .join(broadcast(bl), Seq("user_id"), "left")
       .join(validity, Seq("user_id"), "left")
       .withColumn("rule", explode(filter(array(
         when(purchase && col("bl") === 1, lit(1)),
-        when(purchase && col("ts") > col("valid_to"), lit(2)),
-        when(col("k") =!= col("prv_k") &&
-          col("ts") < col("prv_ts") + expr("INTERVAL 1 HOUR"), lit(3)),
-        when(purchase && col("errs") >= 2 &&
-          col("ts") < col("min_dt") + expr("INTERVAL 96 HOURS") &&
-          col("red") === 1, lit(4))), x => x.isNotNull)))
+        when(expired, lit(2)),
+        when(velocity, lit(3)),
+        when(guessing, lit(4))), x => x.isNotNull)))
       .select(col("event_id"), col("ts").as("event_dt"), col("user_id"), col("rule"))
   }
+
+  /** The fused rules over `ev`, only rows newer than `after`, stamped
+    * with their report date.
+    */
+  private def reportOn(ev: DataFrame, customer: DataFrame, validity: DataFrame,
+                       after: String): DataFrame =
+    unionRules(ev, customer, validity)
+      .filter(col("event_dt") > lit(after).cast("timestamp"))
+      .withColumn("report_dt", to_date(col("event_dt")))
 
   /** The accumulated report: UNION ALL of the four rules projected to the
     * common schema, only rows newer than the last report watermark.
@@ -163,9 +173,7 @@ object FraudMart {
   def report(s: SparkSession, dir: String,
              watermark: String = Watermark): DataFrame = {
     val ev = events(s, dir)
-    unionRules(ev, Tables.customer(s, dir), validityOf(ev))
-      .filter(col("event_dt") > lit(watermark).cast("timestamp"))
-      .withColumn("report_dt", to_date(col("event_dt")))
+    reportOn(ev, Tables.customer(s, dir), validityOf(ev), watermark)
   }
 
   /** Incremental mart refresh — the 100 TB answer to the reference's
@@ -189,7 +197,6 @@ object FraudMart {
     */
   def incrementalReport(s: SparkSession, dir: String, since: String,
                         lookbackHours: Int = 96): DataFrame = {
-    val sinceTs = lit(since).cast("timestamp")
     // Tables.eventsSince bounds the scan on the RAW time column, so the
     // horizon predicate reaches parquet row-group stats — on a
     // time-partitioned 100 TB fact table this is the difference between
@@ -197,9 +204,7 @@ object FraudMart {
     val bufferStart = java.time.LocalDateTime.parse(since.replace(' ', 'T'))
       .minusHours(lookbackHours)
       .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-    val buffered = Tables.eventsSince(s, dir, bufferStart)
-    unionRules(buffered, Tables.customer(s, dir), validityOf(events(s, dir)))
-      .filter(col("event_dt") > sinceTs)
-      .withColumn("report_dt", to_date(col("event_dt")))
+    reportOn(Tables.eventsSince(s, dir, bufferStart), Tables.customer(s, dir),
+      validityOf(events(s, dir)), since)
   }
 }

@@ -31,13 +31,17 @@ object Compaction {
   def isStage(name: String): Boolean = name.endsWith(StageSuffix)
 
   /** Snapshot-swap write: parquet to the stage directory, then rename
-    * over the old table.
+    * over the old table. A write that throws leaves its (empty or
+    * partial) output directory behind; it is deleted before the error
+    * goes on, or the next run would read it as an interrupted swap of a
+    * target that does not exist yet.
     */
   def writeSwap(df: DataFrame, path: String): Unit = {
     val p = new Path(path)
     val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val stage = new Path(path + StageSuffix)
-    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    try df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    catch { case e: Throwable => fs.delete(stage, true); throw e }
     if (fs.exists(p)) fs.delete(p, true)
     if (!fs.rename(stage, p))
       throw new java.io.IOException(s"rename $stage -> $p failed")

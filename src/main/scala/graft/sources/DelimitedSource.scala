@@ -24,13 +24,9 @@ object DelimitedSource {
       .option("header", "true")
       .option("encoding", "UTF-8")
       .csv(pathGlob)
-      .withColumn("create_dt", {
-        // regexp_extract yields '' for non-matching names, and ANSI mode
-        // makes to_date('') THROW executor-side — one stray file in the
-        // glob must yield a null date, not an opaque parse error
-        val d = regexp_extract(input_file_name(), FileIngest.BusinessDateRegex, 1)
-        when(d === "", lit(null).cast("date")).otherwise(to_date(d, "ddMMyyyy"))
-      })
+      // a stray file in the glob (no date, or an invalid one) gets a
+      // null create_dt, not a parse error
+      .withColumn("create_dt", FileIngest.businessDateCol(input_file_name()))
 
   /** Normalize decimal-comma columns to doubles (file.py:33 replaces all
     * `,` with `.` before parsing — here it's per-column and codegen'd).
@@ -47,9 +43,10 @@ object DelimitedSource {
     */
   case class QuarantinedRead(good: DataFrame, bad: DataFrame)
 
-  /** Read with bad-record routing instead of the permissive default
-    * (where a short row or unparseable number silently becomes null and
-    * flows into the warehouse). A row is quarantined when a required
+  /** Read with bad-record routing. Without it, [[read]] +
+    * [[normalizeDecimalColumns]] let a row with a missing key flow on
+    * with a null key, and a decimal value that does not parse fails the
+    * whole read (the cast is ANSI). A row is quarantined when a required
     * column is missing/empty or a decimal-comma column carries a value
     * that parses to neither `12,5` nor `12.5` form; everything else is
     * returned normalized, exactly as [[read]] +
@@ -69,9 +66,10 @@ object DelimitedSource {
   }
 
   /** The validity split itself, applicable to ANY frame of raw string
-    * columns — the file reader above and the quarantine REPLAY path
-    * (`EtlPipeline.replayQuarantine`, where the input is the quarantine
-    * table, not a file) share it. `bad` gains `reject_reason` only;
+    * columns — the file readers (delimited and xlsx, through
+    * [[FileIngest.readQuarantined]]) and the quarantine REPLAY path
+    * ([[FileIngest.resplit]], where the input is the quarantine table,
+    * not a file) share it. `bad` gains `reject_reason` only;
     * extra columns on the input (e.g. a preserved `src_file`) pass
     * through both sides untouched.
     */

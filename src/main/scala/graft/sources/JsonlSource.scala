@@ -23,8 +23,9 @@ import org.apache.spark.sql.types.{StringType, StructType}
 object JsonlSource {
 
   /** Permissive read: parse every line against `schema`, malformed
-    * lines yielding null fields. For ingestion use
-    * [[readWithQuarantine]]; this entry point is for exploration.
+    * lines yielding null fields — the ingest path of a run without a
+    * quarantine ([[FileIngest.read]]); [[readWithQuarantine]] routes
+    * those lines out instead.
     */
   def read(spark: SparkSession, pathGlob: String, schema: StructType): DataFrame =
     spark.read.text(pathGlob)
@@ -54,11 +55,7 @@ object JsonlSource {
     // validate BEFORE the read — spark.read.text resolves the glob
     // eagerly, and a bad schema must fail as a contract violation, not
     // as whatever the path produces
-    require(!schema.fieldNames.contains(CorruptField),
-      s"schema must not define $CorruptField — it marks parse failures")
-    (requiredCols ++ decimalCols).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"column '$c' is not in the schema"))
+    requireSchema(schema, requiredCols ++ decimalCols)
     val raw = spark.read.text(pathGlob)
       .select(col("value").as("raw_line"), input_file_name().as("src_file"))
     val sp = splitRaw(raw, schema, requiredCols, decimalCols)
@@ -69,8 +66,8 @@ object JsonlSource {
 
   /** The jsonl validity split applicable to ANY frame carrying a
     * `raw_line` column — the file reader above and the quarantine
-    * REPLAY path (`EtlPipeline.replayQuarantine`, where the input is
-    * the stored quarantine table) share it, mirroring
+    * REPLAY path ([[FileIngest.resplit]], where the input is the stored
+    * quarantine table) share it, mirroring
     * [[DelimitedSource.validitySplit]]. `good` projects `schema`'s
     * columns (decimals normalized) plus every NON-schema input column
     * except `raw_line` (so replay provenance like `src_file` survives
@@ -80,11 +77,7 @@ object JsonlSource {
   def splitRaw(raw: DataFrame, schema: StructType,
                requiredCols: Seq[String],
                decimalCols: Seq[String] = Nil): DelimitedSource.QuarantinedRead = {
-    require(!schema.fieldNames.contains(CorruptField),
-      s"schema must not define $CorruptField — it marks parse failures")
-    (requiredCols ++ decimalCols).foreach(c =>
-      require(schema.fieldNames.contains(c),
-        s"column '$c' is not in the schema"))
+    requireSchema(schema, requiredCols ++ decimalCols)
     require(raw.columns.contains("raw_line"), "splitRaw needs a raw_line column")
     val extras = raw.columns.filterNot(_ == "raw_line").toSeq
     val clash = extras.toSet.intersect(schema.fieldNames.toSet)
@@ -124,4 +117,10 @@ object JsonlSource {
   }
 
   private val CorruptField = "_corrupt_record"
+
+  private def requireSchema(schema: StructType, cols: Seq[String]): Unit = {
+    require(!schema.fieldNames.contains(CorruptField),
+      s"schema must not define $CorruptField — it marks parse failures")
+    cols.foreach(c => require(schema.fieldNames.contains(c), s"column '$c' is not in the schema"))
+  }
 }

@@ -7,7 +7,8 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Reader for the reference's daily xlsx uploads (file.py:38-44 —
   * terminals, passport blacklist). xlsx is a zip of XML parts, so the
@@ -15,7 +16,8 @@ import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType
   *
   * Output contract matches [[DelimitedSource.read]]: every sheet cell
   * surfaces as a string column (named by the header row), plus
-  * `create_dt` parsed from the `name_DDMMYYYY.ext` filename. Numeric and
+  * `create_dt` parsed from the `name_DDMMYYYY.ext` filename (null for a
+  * file whose name carries no valid date). Numeric and
   * date cells yield their raw stored text (xlsx stores dates as day
   * serials); downstream normalization is explicit, same as the
   * decimal-comma handling for txt files.
@@ -50,8 +52,9 @@ object XlsxSource {
       s"XlsxSource: $firstPath header has duplicate column name(s): " +
         header.diff(header.distinct).distinct.mkString(", "))
     val width = header.length
-    val schema = StructType(
-      header.map(h => StructField(h, StringType)) :+ StructField("create_dt", DateType))
+    // each row carries its file's path in the create_dt slot, replaced
+    // by the business date column below
+    val schema = StructType((header :+ "create_dt").map(StructField(_, StringType)))
 
     val rows = spark.sparkContext.binaryFiles(pathGlob).flatMap { case (path, stream) =>
       val all = parseWorkbook(readAllBytes(stream.open()))
@@ -60,7 +63,6 @@ object XlsxSource {
         val h = all.head.map(_.trim)
         require(h == header,
           s"XlsxSource: $path header $h differs from $firstPath header $header")
-        val dt = businessDate(path)
         all.iterator.drop(1).map { r =>
           // data beyond the header width means a malformed sheet —
           // dropping the cells silently would lose data; styled-but-
@@ -69,25 +71,16 @@ object XlsxSource {
           require(extra.isEmpty,
             s"XlsxSource: $path has a data row ${r.length} cells wide but the " +
               s"header has $width columns; overflow values: ${extra.mkString(", ")}")
-          Row.fromSeq((0 until width).map(i => r.lift(i).filter(_.nonEmpty).orNull) :+ dt)
+          Row.fromSeq((0 until width).map(i => r.lift(i).filter(_.nonEmpty).orNull) :+ path)
         }
       }
     }
     spark.createDataFrame(rows, schema)
+      .withColumn("create_dt", FileIngest.businessDateCol(col("create_dt")))
   }
 
-  /** Business date from `name_DDMMYYYY.ext` — the shared definition. */
-  private def businessDate(path: String): java.sql.Date =
-    java.sql.Date.valueOf(FileIngest.businessDate(path))
-
   private def readAllBytes(in: InputStream): Array[Byte] =
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
+    try readAllBytesNoClose(in) finally in.close()
 
   /** All sheet rows (header included) of the workbook's first worksheet,
     * each row an IndexedSeq of cell strings by column position.

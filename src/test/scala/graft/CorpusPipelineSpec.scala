@@ -231,6 +231,16 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(ex.getMessage.contains("backfill-only"))
   }
 
+  test("curateIncrement refuses a span-rewrite config instead of ignoring it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_spaninc").toString
+    val ex = intercept[IllegalArgumentException] {
+      CorpusPipeline.curateIncrement(spark, graft.sources.Tables.documents(spark, sf), None,
+        dir, "b1", cfg = CorpusPipeline.CurationConfig(spanRewriteTokens = Some(3)))
+    }
+    assert(ex.getMessage.contains("spanRewriteTokens"))
+    assert(new java.io.File(dir).list().isEmpty, "a refused batch writes nothing")
+  }
+
   test("curate with an importance gate: DSIR selection drops off-domain docs") {
     val dir = java.nio.file.Files.createTempDirectory("graft_curate_imp").toString
     val docs = graft.sources.Tables.documents(spark, sf)

@@ -396,6 +396,71 @@ class EtlPipelineSpec extends SparkSpec {
       .filter(col("cur") === "USD").collect()(0).getAs[Double]("rate") == 91.0)
   }
 
+  test("without a quarantine a bad decimal fails the run, leaves no stage, and a clean rerun merges") {
+    val inbox = Files.createTempDirectory("graft_nqinbox").toString
+    val wh = Files.createTempDirectory("graft_nqwh").toString
+    val m = FileMapping("rates_*.csv", "dwh_nqrates", "cur", Seq("rate"), scd = 1,
+      decimalCols = Seq("rate"))
+    // the target's first delivery: the decimal cast fails inside the
+    // table's stage write
+    mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\nJPY;1x2,3\n")
+    val e = intercept[Exception](EtlPipeline.run(spark, inbox, wh, Seq(m), runId = 101))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CAST_INVALID_INPUT")), e)
+    assert(!Files.exists(Paths.get(s"$wh/dwh_nqrates__stage")),
+      "a failed stage write must not be left to read as an interrupted swap")
+    assert(!Files.exists(Paths.get(s"$wh/dwh_nqrates")))
+    // the redelivered file replaces the bad one; a row missing its key
+    // still merges, with a null key
+    mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\n;77,0\n")
+    val r = EtlPipeline.run(spark, inbox, wh, Seq(m), runId = 102)
+    assert(logRow(r, "dwh_nqrates").getAs[Long]("rows_inserted") == 2)
+    val rates = spark.read.parquet(s"$wh/dwh_nqrates").collect()
+    assert(rates.map(x => Option(x.getString(0))).toSet === Set(Some("USD"), None))
+    assert(rates.find(_.getString(0) == "USD").get.getDouble(1) === 90.5)
+  }
+
+  test("xlsx deliveries get the quarantine split: rejects park, clean rows merge, a fix replays") {
+    val inbox = Files.createTempDirectory("graft_xqinbox").toString
+    val wh = Files.createTempDirectory("graft_xqwh").toString
+    val qdir = Files.createTempDirectory("graft_xqtn").toString
+    val m = FileMapping("limits_*.xlsx", "dwh_xlimits", "account_id", Seq("credit_limit"),
+      scd = 1, decimalCols = Seq("credit_limit"))
+    // good comma-decimal, missing key, unparseable decimal, good number
+    TestXlsx.write(s"$inbox/limits_01012024.xlsx", Seq("account_id", "credit_limit"),
+      Seq(Seq("A1", "100,5"), Seq(null, "200"), Seq("A3", "1x2,3"), Seq("A4", "300")))
+    val r1 = EtlPipeline.run(spark, inbox, wh, Seq(m), runId = 111,
+      quarantineDir = Some(qdir))
+    assert(r1.archivedFiles.size == 1)
+    def limits() = spark.read.parquet(s"$wh/dwh_xlimits").collect()
+      .map(x => x.getString(0) -> x.getDouble(1)).toMap
+    assert(limits() === Map("A1" -> 100.5, "A4" -> 300.0))
+    assert(logRow(r1, "stg_dwh_xlimits").getAs[Long]("rows_inserted") == 2)
+    assert(logRow(r1, "qtn_dwh_xlimits").getAs[Long]("rows_inserted") == 2)
+    val qtn = spark.read.parquet(s"$qdir/dwh_xlimits").collect()
+    assert(qtn.map(r => Option(r.getAs[String]("account_id")) ->
+      r.getAs[String]("reject_reason")).toMap ===
+      Map(None -> "missing_required", Some("A3") -> "bad_decimal"))
+    assert(qtn.forall(_.getAs[String]("src_file").endsWith("limits_01012024.xlsx")),
+      "an xlsx reject names its delivery")
+    assert(qtn.forall(_.getAs[Long]("run_id") == 111L))
+    assert(qtn.find(r => r.getAs[String]("account_id") == "A3").get
+      .getAs[String]("credit_limit") === "1x2,3", "a reject keeps its raw value")
+
+    // fix the decimal in place; the keyless row stays parked
+    val fixed = spark.read.parquet(s"$qdir/dwh_xlimits")
+      .withColumn("credit_limit",
+        when(col("account_id") === "A3", "1,23").otherwise(col("credit_limit")))
+    val tmp = Files.createTempDirectory("graft_xqfix").toString
+    fixed.write.mode("overwrite").parquet(tmp)
+    spark.read.parquet(tmp).write.mode("overwrite").parquet(s"$qdir/dwh_xlimits")
+    val r2 = EtlPipeline.replayQuarantine(spark, qdir, wh, m, runId = 112)
+    assert(logRow(r2, "qrp_dwh_xlimits").getAs[Long]("rows_inserted") == 1)
+    assert(limits() === Map("A1" -> 100.5, "A3" -> 1.23, "A4" -> 300.0))
+    val left = spark.read.parquet(s"$qdir/dwh_xlimits").collect()
+    assert(left.map(_.getAs[String]("reject_reason")).toSeq === Seq("missing_required"))
+  }
+
   test("jsonl shards get the audited reject loop: qtn_ row, raw-line quarantine, replay") {
     val inbox = Files.createTempDirectory("graft_jinbox").toString
     val wh = Files.createTempDirectory("graft_jwh").toString

@@ -24,6 +24,16 @@ class SourcesSpec extends SparkSpec {
     assert(r.getAs[java.sql.Date]("create_dt").toString == "2024-03-15")
   }
 
+  test("delimited reader gives a file with an invalid filename date a null create_dt") {
+    val dir = Files.createTempDirectory("graft_baddt").toString
+    mkTxt(dir, "x_31132024.txt", "k;v\nA;1\n") // month 13: matches the regex, no date
+    mkTxt(dir, "x_15032024.txt", "k;v\nB;2\n")
+    val dates = DelimitedSource.read(spark, s"$dir/x_*.txt").collect()
+      .map(r => r.getAs[String]("k") ->
+        Option(r.getAs[java.sql.Date]("create_dt")).map(_.toString)).toMap
+    assert(dates === Map("A" -> None, "B" -> Some("2024-03-15")))
+  }
+
   test("delimited reader tolerates a UTF-8 BOM: first header name comes out clean") {
     val dir = Files.createTempDirectory("graft_bom").toString
     val bytes = ("﻿" + "cur;rate\nUSD;90,5\n").getBytes("UTF-8")
