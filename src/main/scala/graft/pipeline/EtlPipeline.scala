@@ -86,14 +86,9 @@ object EtlPipeline {
     * ids instead (the reference's sequence lives in the database and
     * doesn't have this gap).
     */
-  def nextRunId(spark: SparkSession, warehouseDir: String): Long = {
-    val path = s"$warehouseDir/$RunLogTable"
-    if (!hadoopFs(spark, path).exists(new Path(path))) 1L
-    else {
-      val mx = spark.read.parquet(path).agg(max(col("run_id"))).collect()(0)
-      if (mx.isNullAt(0)) 1L else mx.getAs[Number](0).longValue() + 1L
-    }
-  }
+  def nextRunId(spark: SparkSession, warehouseDir: String): Long =
+    storedMax(spark, s"$warehouseDir/$RunLogTable", "run_id")
+      .fold(1L)(_.getAs[Number](0).longValue() + 1L)
 
   /** How a mart refreshes after the merge loop (main.py `mart_update`). */
   sealed trait MartRefresh
@@ -175,14 +170,7 @@ object EtlPipeline {
       writeSwap(build(spark, warehouseDir), s"$warehouseDir/$name")
     case MartAccumulate(full, increment, wmCol) =>
       val path = s"$warehouseDir/$name"
-      val exists = hadoopFs(spark, path).exists(new Path(path))
-      val since =
-        if (!exists) None
-        else {
-          val mx = spark.read.parquet(path).agg(max(col(wmCol))).collect()(0)
-          if (mx.isNullAt(0)) None else Some(utcString(mx.getTimestamp(0)))
-        }
-      since match {
+      storedMax(spark, path, wmCol).map(r => utcString(r.getTimestamp(0))) match {
         case None     => writeSwap(full(spark, warehouseDir), path)
         case Some(ts) =>
           increment(spark, warehouseDir, ts)
@@ -230,19 +218,12 @@ object EtlPipeline {
     *    write itself (a stage that came out empty may be recounted, see
     *    [[Staged]]). With a quarantine, the reject count and append add
     *    their own jobs.
-    *  - Concurrent by target: distinct targets share nothing but the
-    *    watermark store, so the mappings run in one group per target on
-    *    `min(targets, defaultParallelism)` threads. Inside a group the
-    *    order is the sequential one: mapping order, files in
+    *  - Concurrency and failure are the batch loop's ([[eachTarget]]):
+    *    one group per target, mapping order inside a group (files in
     *    business-date order, each fresh-file filter reading the live
-    *    watermark. Watermark updates and writes are serialized under one
-    *    lock, so every table swap is followed by a watermark write that
-    *    includes it. Run-log rows and the processed/archived file lists
-    *    come out in mapping order.
-    *  - Failure: a failing mapping stops only its own target's group.
-    *    The run waits for every other group to finish, then rethrows the
-    *    first failure in mapping order as it was thrown, and writes no
-    *    run log.
+    *    watermark), the watermark committed with each table swap, and
+    *    on a failure the other targets finish, the first failure in
+    *    mapping order is rethrown and no run log is written.
     * Daily dimension files are small by construction — the 100 TB side
     * (facts) flows through [[runFromTables]]' incremental pull against
     * partitioned sources, not through this inbox loop.
@@ -253,22 +234,17 @@ object EtlPipeline {
     * `reject_reason`/`src_file`/`run_id`) to
     * `<quarantineDir>/<targetName>` instead of reaching the merge, and
     * each file's reject count is logged as a `qtn_<target>` run-log
-    * row. Without it, a row missing its key still merges with a null
-    * key, and an unparseable decimal fails the run (the decimal cast is
-    * ANSI); the failed target's table and watermark stay as they were.
+    * row. Without it, a row missing its key fails the run at the merge
+    * (a null key is refused there), and so does an unparseable decimal
+    * (the decimal cast is ANSI); the failed target's table and watermark
+    * stay as they were.
     */
   def run(spark: SparkSession, inboxDir: String, warehouseDir: String,
           mappings: Seq[FileMapping], runId: Long,
           archiveFiles: Boolean = true,
-          quarantineDir: Option[String] = None): RunReport = {
-    val runStart = new java.sql.Timestamp(System.currentTimeMillis())
-    mappings.foreach(m => requireValidTarget(m.targetName))
-    var wm = loadWatermarks(spark, warehouseDir, WatermarkTable)
-    val wmLock = new Object
-    val outs = mappings.map(_ => new MappingOutput)
-
-    def runMapping(m: FileMapping, out: MappingOutput): Unit = {
-      val last = wmLock.synchronized(wm.get(m.targetName)).map(java.time.LocalDate.parse)
+          quarantineDir: Option[String] = None): RunReport =
+    eachTarget(spark, warehouseDir, runId, WatermarkTable, mappings)(_.targetName) { (m, out) =>
+      val last = out.watermark.map(java.time.LocalDate.parse)
       val fresh = FileIngest.find(spark, inboxDir, Seq(m.template))
         .map(p => (p, businessDate(p)))
         .filter { case (_, d) => last.forall(d.isAfter) }
@@ -312,63 +288,89 @@ object EtlPipeline {
             }
             d.good
         }
-        val staged = new Staged(stg)
-
         val deleteTs = dt.atStartOfDay().format(
           java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-        val merged = mergeInto(spark, warehouseDir,
-          TableMapping(m.template, m.targetName, m.key, m.payload, m.scd),
-          staged.frame, runId, deleteTs, liveness)
-        out.log += ((runId, s"stg_${m.targetName}", staged.rows, 0L, 0L))
-        out.log += merged
-
-        // persist the watermark WITH each table swap, not once at the
-        // end of the whole run: a later mapping failing must not leave
-        // an already-merged table accepting a redelivered older
-        // snapshot (which would tombstone newer keys and invert
-        // version intervals)
-        wmLock.synchronized {
-          wm += (m.targetName -> dt.toString)
-          saveWatermarks(spark, warehouseDir, WatermarkTable, "last_dt", wm)
-        }
+        out.mergeStaged(tableMapping(m), new Staged(stg), deleteTs, liveness)
+        out.commit(dt.toString)
         out.processed += path
         if (archiveFiles) out.archived += FileIngest.archive(spark, path)
       }
     }
 
-    // one group per target, each in mapping order; a group stops at its
-    // first failure, which it reports with the failing mapping's index
+  private type LogRow = (Long, String, Long, Long, Long)
+
+  private def tableMapping(m: FileMapping): TableMapping =
+    TableMapping(m.template, m.targetName, m.key, m.payload, m.scd)
+
+  /** The one batch loop: [[run]], [[runFromTables]] and
+    * [[replayQuarantine]] each hand it their items and a per-item body.
+    *  - Every item's target is validated before anything merges.
+    *  - Concurrent by target: distinct targets share nothing but the
+    *    watermark store, so the items run in one group per target on
+    *    `min(targets, defaultParallelism)` daemon threads. Inside a
+    *    group the order is the sequential one: item order, each body
+    *    reading the live watermark its predecessors committed.
+    *  - The named watermark store is loaded once; reads and commits are
+    *    serialized under its lock ([[Watermarks]]).
+    *  - Run-log rows and the processed/archived file lists come out in
+    *    item order.
+    *  - Failure: a failing item stops only its own target's group. The
+    *    loop waits for every other group to finish, then rethrows the
+    *    first failure in item order as it was thrown, and writes no run
+    *    log.
+    */
+  private def eachTarget[A](spark: SparkSession, warehouseDir: String, runId: Long,
+                            store: String, items: Seq[A])(target: A => String)
+                           (body: (A, Item) => Unit): RunReport = {
+    val runStart = new java.sql.Timestamp(System.currentTimeMillis())
+    items.foreach(a => requireValidTarget(target(a)))
+    val wm = new Watermarks(spark, warehouseDir, store)
+    val outs = items.map(a => new Item(spark, warehouseDir, runId, target(a), wm))
+    // a group stops at its first failure, which it reports with the
+    // failing item's index
     def runGroup(ix: Seq[Int]): Option[(Int, Throwable)] =
       ix.iterator.flatMap { i =>
-        try { runMapping(mappings(i), outs(i)); None }
+        try { body(items(i), outs(i)); None }
         catch { case e: Throwable => Some(i -> e) }
       }.nextOption()
-    val groups = mappings.indices.groupBy(i => mappings(i).targetName).values.toSeq
+    val groups = items.indices.groupBy(i => target(items(i))).values.toSeq
     val threads = math.max(1, math.min(groups.size, spark.sparkContext.defaultParallelism))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads,
       (r: Runnable) => { val t = new Thread(r, "graft-etl-merge"); t.setDaemon(true); t })
     val failures =
-      try groups.map(ix => pool.submit(new java.util.concurrent.Callable[Option[(Int, Throwable)]] {
-          def call(): Option[(Int, Throwable)] = {
-            SparkSession.setActiveSession(spark)
-            runGroup(ix)
-          }
-        })).map(_.get())
+      try groups.map(ix => java.util.concurrent.CompletableFuture.supplyAsync(
+          () => { SparkSession.setActiveSession(spark); runGroup(ix) }, pool)).map(_.join())
       finally pool.shutdown()
     failures.flatten.minByOption(_._1).foreach { case (_, e) => throw e }
 
     val log = writeRunLog(spark, warehouseDir, outs.flatMap(_.log.result()), runStart)
-    RunReport(runId, log, outs.flatMap(_.processed.result()),
-      outs.flatMap(_.archived.result()))
+    RunReport(runId, log, outs.flatMap(_.processed.result()), outs.flatMap(_.archived.result()))
   }
 
-  private type LogRow = (Long, String, Long, Long, Long)
-
-  /** What one mapping of a [[run]] did, in the order it did it. */
-  private final class MappingOutput {
+  /** What one item of [[eachTarget]] did, in the order it did it, and its
+    * view of its target's watermark.
+    */
+  private final class Item(spark: SparkSession, warehouseDir: String, runId: Long,
+                           target: String, wm: Watermarks) {
     val log = Seq.newBuilder[LogRow]
     val processed = Seq.newBuilder[String]
     val archived = Seq.newBuilder[String]
+    def watermark: Option[String] = wm.get(target)
+    /** Called after the table swap the value covers: a later item
+      * failing must not leave an already-merged table accepting a
+      * redelivered older snapshot (which would tombstone newer keys and
+      * invert version intervals).
+      */
+    def commit(value: String): Unit = wm.commit(target, value)
+    /** Merge a [[Staged]] frame, logging its `stg_` row and then the
+      * target's counts.
+      */
+    def mergeStaged(m: TableMapping, staged: Staged, deleteTs: String,
+                    liveness: Scd.Liveness): Unit = {
+      val merged = mergeInto(spark, warehouseDir, m, staged.frame, runId, deleteTs, liveness)
+      log += ((runId, s"stg_${m.targetName}", staged.rows, 0L, 0L))
+      log += merged
+    }
   }
 
   /** Append this run's log rows (with run start/end timestamps — the
@@ -381,7 +383,7 @@ object EtlPipeline {
   // physical types in one directory — readers here do NOT mergeSchema,
   // so such a warehouse needs a one-time log rewrite before upgrading.
   private def writeRunLog(spark: SparkSession, warehouseDir: String,
-                          rows: Seq[(Long, String, Long, Long, Long)],
+                          rows: Seq[LogRow],
                           runStart: java.sql.Timestamp): DataFrame = {
     import spark.implicits._
     val log = rows
@@ -415,19 +417,20 @@ object EtlPipeline {
     *
     * Watermarks/run-log live beside the tables in `warehouseDir`, so
     * re-running with an unchanged source stages zero rows and rewrites
-    * identical tables.
+    * identical tables. Concurrency and failure are [[run]]'s, through
+    * the same loop ([[eachTarget]]): every target is validated before
+    * anything merges, feeds run in one group per target, and a failing
+    * feed leaves the other targets merged with their watermarks stored
+    * and no run log written. A staged row with a null key fails its
+    * feed.
     */
   def runFromTables(spark: SparkSession, warehouseDir: String,
                     feeds: Seq[TableFeed], runId: Long,
-                    deleteTs: String): RunReport = {
-    val runStart = new java.sql.Timestamp(System.currentTimeMillis())
-    var wm = loadWatermarks(spark, warehouseDir, TsWatermarkTable)
-    val logRows = Seq.newBuilder[LogRow]
-
-    feeds.foreach { f =>
+                    deleteTs: String): RunReport =
+    eachTarget(spark, warehouseDir, runId, TsWatermarkTable,
+               feeds)(_.mapping.targetName) { (f, out) =>
       val m = f.mapping
-      requireValidTarget(m.targetName)
-      val watermark = wm.getOrElse(m.targetName, "1900-01-01 00:00:00")
+      val watermark = out.watermark.getOrElse("1900-01-01 00:00:00")
       val changeTs = f.updateCol match {
         case Some(u) => coalesce(col(u), col(f.createCol))
         case None    => col(f.createCol)
@@ -442,9 +445,7 @@ object EtlPipeline {
       // full key list: a column-pruned scan of the source (stg_del)
       val liveness = if (m.scd == 2) Scd.KeyList(f.source.select(m.key))
                      else Scd.SnapshotStg
-      val merged = mergeInto(spark, warehouseDir, m, staged.frame, runId, deleteTs, liveness)
-      logRows += ((runId, s"stg_${m.targetName}", staged.rows, 0L, 0L))
-      logRows += merged
+      out.mergeStaged(m, staged, deleteTs, liveness)
       // Only the merge's own observation may move the watermark. A source
       // is live (a JDBC table), so recomputing max(create_dt) with a read
       // of its own could cover rows committed after the merge read it and
@@ -455,14 +456,8 @@ object EtlPipeline {
       // run) is UTC, silently shifting the watermark and skipping rows on
       // tz-offset drivers.
       staged.observedRow.flatMap(r => Option(r.getAs[java.sql.Timestamp]("next_wm")))
-        .foreach(ts => wm += (m.targetName -> utcString(ts)))
-      // persist per feed, same reasoning as the file loop
-      saveWatermarks(spark, warehouseDir, TsWatermarkTable, "last_ts", wm)
+        .foreach(ts => out.commit(utcString(ts)))
     }
-
-    val log = writeRunLog(spark, warehouseDir, logRows.result(), runStart)
-    RunReport(runId, log, Seq.empty, Seq.empty)
-  }
 
   /** Continuous warehouse ingestion: each micro-batch of a stream
     * merges into the parquet target through the SAME merge→log→swap
@@ -546,38 +541,33 @@ object EtlPipeline {
     * replay-heavy feeds with `MartRebuild` or a lookback increment.
     */
   def replayQuarantine(spark: SparkSession, quarantineDir: String,
-                       warehouseDir: String, m: FileMapping, runId: Long): RunReport = {
-    requireValidTarget(m.targetName)
-    val runStart = new java.sql.Timestamp(System.currentTimeMillis())
-    val path = s"$quarantineDir/${m.targetName}"
-    val logRows = Seq.newBuilder[LogRow]
-    val fs = hadoopFs(spark, path)
-    requireNoOrphanStage(spark, path)
-    if (fs.exists(new Path(path))) {
-      val sp = FileIngest.resplit(spark.read.parquet(path), m.key, m.payload, m.decimalCols)
-      val current = loadWatermarks(spark, warehouseDir, WatermarkTable).get(m.targetName) match {
-        case Some(d) => sp.good.filter(col("create_dt").cast("date") >= lit(d).cast("date"))
-        case None    => sp.good
-      }
-      val nGood = current.count()
-      val nStale = sp.good.count() - nGood
-      if (nGood > 0 || nStale > 0) {
-        logRows += ((runId, s"qrp_${m.targetName}", nGood, 0L, nStale))
-        if (nGood > 0) {
-          val stg = current.persist()
-          logRows += mergeInto(spark, warehouseDir,
-            TableMapping(m.template, m.targetName, m.key, m.payload, m.scd),
-            stg, runId, deleteTs = "9999-12-31 00:00:00", Scd.NoDeletes)
-          stg.unpersist(blocking = false)
+                       warehouseDir: String, m: FileMapping, runId: Long): RunReport =
+    eachTarget(spark, warehouseDir, runId, WatermarkTable, Seq(m))(_.targetName) { (m, out) =>
+      val path = s"$quarantineDir/${m.targetName}"
+      val fs = hadoopFs(spark, path)
+      requireNoOrphanStage(spark, path)
+      if (fs.exists(new Path(path))) {
+        val sp = FileIngest.resplit(spark.read.parquet(path), m.key, m.payload, m.decimalCols)
+        val current = out.watermark match {
+          case Some(d) => sp.good.filter(col("create_dt").cast("date") >= lit(d).cast("date"))
+          case None    => sp.good
         }
-        // replayed AND superseded rows both leave; only still-invalid stay
-        if (sp.bad.isEmpty) fs.delete(new Path(path), true)
-        else writeSwap(sp.bad, path)
+        val nGood = current.count()
+        val nStale = sp.good.count() - nGood
+        if (nGood > 0 || nStale > 0) {
+          out.log += ((runId, s"qrp_${m.targetName}", nGood, 0L, nStale))
+          if (nGood > 0) {
+            val stg = current.persist()
+            out.log += mergeInto(spark, warehouseDir, tableMapping(m), stg, runId,
+              deleteTs = "9999-12-31 00:00:00", Scd.NoDeletes)
+            stg.unpersist(blocking = false)
+          }
+          // replayed AND superseded rows both leave; only still-invalid stay
+          if (sp.bad.isEmpty) fs.delete(new Path(path), true)
+          else writeSwap(sp.bad, path)
+        }
       }
     }
-    val log = writeRunLog(spark, warehouseDir, logRows.result(), runStart)
-    RunReport(runId, log, Seq.empty, Seq.empty)
-  }
 
   // The run-log's table_name column doubles as a namespace: staging
   // counts log as stg_<target>, quarantine as qtn_/qrp_<target>, and
@@ -594,13 +584,19 @@ object EtlPipeline {
   /** Shared merge→log→snapshot-swap step for every loop: ONE SQL
     * execution writes the merged table, and the run-log counts are
     * observed on the written frame (nothing is cached, no DAG runs
-    * twice). Any [[Observation]] on `stg` completes in the same write.
-    * Returns the target's run-log row.
+    * twice). Any [[Observation]] on `stage` completes in the same write.
+    * A stage row with a null key fails that write. Returns the target's
+    * run-log row.
     */
   private def mergeInto(spark: SparkSession, warehouseDir: String,
-                        m: TableMapping, stg: DataFrame, runId: Long,
+                        m: TableMapping, stage: DataFrame, runId: Long,
                         deleteTs: String, liveness: Scd.Liveness): LogRow = {
     val targetPath = s"$warehouseDir/${m.targetName}"
+    // a null key would merge as a row whose key and payload are all null;
+    // it fails the table's own write instead (no job of its own), which
+    // leaves the table and its watermark as they were
+    val stg = stage.filter(col(m.key).isNotNull ||
+      raise_error(lit(s"${m.targetName}: a staged row has a null key ${m.key}")))
     // the empty target is built from the schema, not derived from stg: a
     // second copy of an observed stg in the plan would observe it twice
     val stgCols = stg.select((m.key +: m.payload).map(col): _*).schema.fields.toSeq
@@ -674,6 +670,13 @@ object EtlPipeline {
   def businessDate(path: String): java.time.LocalDate =
     FileIngest.businessDate(path)
 
+  /** The one-row MAX(`c`) of the parquet table at `path`; None when the
+    * table is absent or `c` has no value.
+    */
+  private def storedMax(spark: SparkSession, path: String, c: String): Option[Row] =
+    Option.when(hadoopFs(spark, path).exists(new Path(path)))(
+      spark.read.parquet(path).agg(max(col(c))).collect()(0)).filterNot(_.isNullAt(0))
+
   private def hadoopFs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -691,26 +694,30 @@ object EtlPipeline {
     if (fs.exists(new Path(path))) spark.read.parquet(path) else empty
   }
 
-  /** A watermark store: one (table_name, `valueCol`) string row per
-    * target, collected driver-side and snapshot-swapped whole on every
-    * save — the reference's meta `last_update_dt`/`max_update_dt`
+  /** A watermark store: one (table_name, value) string row per target,
+    * collected driver-side once per loop and snapshot-swapped whole when a
+    * value moves — the reference's meta `last_update_dt`/`max_update_dt`
     * (etl.py:75-106). The file loop keeps business dates in
     * [[WatermarkTable]] (`last_dt`), the database loop timestamps in
-    * [[TsWatermarkTable]] (`last_ts`).
+    * [[TsWatermarkTable]] (`last_ts`). Reads and commits are serialized
+    * under one lock, so every table swap is followed by a store write
+    * that includes it.
     */
-  private def loadWatermarks(spark: SparkSession, warehouseDir: String,
-                             store: String): Map[String, String] = {
-    val path = s"$warehouseDir/$store"
+  private final class Watermarks(spark: SparkSession, warehouseDir: String, store: String) {
+    private val path = s"$warehouseDir/$store"
+    private val valueCol = if (store == WatermarkTable) "last_dt" else "last_ts"
     requireNoOrphanStage(spark, path)
-    if (!hadoopFs(spark, path).exists(new Path(path))) Map.empty
-    else spark.read.parquet(path).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-  }
+    private var wm: Map[String, String] =
+      if (!hadoopFs(spark, path).exists(new Path(path))) Map.empty
+      else spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-  private def saveWatermarks(spark: SparkSession, warehouseDir: String, store: String,
-                             valueCol: String, wm: Map[String, String]): Unit = {
-    import spark.implicits._
-    if (wm.nonEmpty)
-      writeSwap(wm.toSeq.toDF("table_name", valueCol), s"$warehouseDir/$store")
+    def get(target: String): Option[String] = synchronized(wm.get(target))
+
+    def commit(target: String, value: String): Unit = synchronized {
+      if (!wm.get(target).contains(value)) { wm += target -> value; saveWatermarks() }
+    }
+
+    private def saveWatermarks(): Unit =
+      writeSwap(spark.createDataFrame(wm.toSeq).toDF("table_name", valueCol), path)
   }
 }

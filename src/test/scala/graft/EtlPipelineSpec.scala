@@ -411,13 +411,19 @@ class EtlPipelineSpec extends SparkSpec {
       "a failed stage write must not be left to read as an interrupted swap")
     assert(!Files.exists(Paths.get(s"$wh/dwh_nqrates")))
     // the redelivered file replaces the bad one; a row missing its key
-    // still merges, with a null key
+    // fails the run the same way, refused inside the table's write
     mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\n;77,0\n")
-    val r = EtlPipeline.run(spark, inbox, wh, Seq(m), runId = 102)
-    assert(logRow(r, "dwh_nqrates").getAs[Long]("rows_inserted") == 2)
+    val k = intercept[Exception](EtlPipeline.run(spark, inbox, wh, Seq(m), runId = 102))
+    assert(Iterator.iterate[Throwable](k)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("null key")), k)
+    assert(!Files.exists(Paths.get(s"$wh/dwh_nqrates__stage")))
+    assert(!Files.exists(Paths.get(s"$wh/dwh_nqrates")))
+    assert(!Files.exists(Paths.get(s"$wh/etl_watermark")))
+    mkFile(inbox, "rates_01012024.csv", "cur;rate\nUSD;90,5\n")
+    val r = EtlPipeline.run(spark, inbox, wh, Seq(m), runId = 103)
+    assert(logRow(r, "dwh_nqrates").getAs[Long]("rows_inserted") == 1)
     val rates = spark.read.parquet(s"$wh/dwh_nqrates").collect()
-    assert(rates.map(x => Option(x.getString(0))).toSet === Set(Some("USD"), None))
-    assert(rates.find(_.getString(0) == "USD").get.getDouble(1) === 90.5)
+    assert(rates.map(x => x.getString(0) -> x.getDouble(1)).toSeq === Seq("USD" -> 90.5))
   }
 
   test("xlsx deliveries get the quarantine split: rejects park, clean rows merge, a fix replays") {
@@ -948,6 +954,69 @@ class EtlPipelineSpec extends SparkSpec {
     assert(logRow(r3, "stg_dwh_live_rates").getAs[Long]("rows_inserted") === 1L)
     assert(rates() === Map("USD" -> 92.0), "the late row merges on the next run")
     assert(storedWm()("dwh_live_rates").startsWith("2024-01-03"))
+  }
+
+  private def storedTsWatermarks(wh: String): Map[String, String] =
+    spark.read.parquet(s"$wh/etl_watermark_ts").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+
+  private def rateFeed(target: String, rows: (String, Double, String)*) = {
+    val s = spark
+    import s.implicits._
+    EtlPipeline.TableFeed(TableMapping("rates", target, "cur", Seq("rate"), 1),
+      rows.map { case (c, r, t) => (c, r, java.sql.Timestamp.valueOf(t)) }
+        .toDF("cur", "rate", "create_dt"), updateCol = None)
+  }
+
+  test("runFromTables refuses a reserved target name before it merges anything") {
+    val wh = Files.createTempDirectory("graft_db_rsv").toString
+    intercept[IllegalArgumentException] {
+      EtlPipeline.runFromTables(spark, wh, Seq(
+        rateFeed("dwh_rsv_rates", ("USD", 90.5, "2024-01-01 08:00:00")),
+        rateFeed("stg_x", ("EUR", 99.1, "2024-01-01 08:00:00"))), 1, "2024-01-02 00:00:00")
+    }
+    for (t <- Seq("dwh_rsv_rates", "stg_x", "etl_watermark_ts", "etl_run_log"))
+      assert(!Files.exists(Paths.get(s"$wh/$t")), s"$t was written before the refusal")
+  }
+
+  test("a failing feed surfaces its own exception after the other feeds' targets finish") {
+    val wh = Files.createTempDirectory("graft_dbf_wh").toString
+    // the first feed's target has an orphaned swap stage
+    Files.createDirectories(Paths.get(s"$wh/dwh_dbf_orphan__stage"))
+    val e = intercept[IllegalStateException] {
+      EtlPipeline.runFromTables(spark, wh, Seq(
+        rateFeed("dwh_dbf_orphan", ("USD", 1.0, "2024-01-01 08:00:00")),
+        rateFeed("dwh_dbf_rates", ("USD", 2.0, "2024-01-01 09:00:00"))), 1, "2024-01-02 00:00:00")
+    }
+    assert(e.getMessage.contains("interrupted"),
+      "the first failure in feed order surfaces as thrown, not wrapped")
+    assert(spark.read.parquet(s"$wh/dwh_dbf_rates").collect()
+      .map(x => x.getString(0) -> x.getDouble(1)).toMap === Map("USD" -> 2.0),
+      "the other target ran")
+    assert(storedTsWatermarks(wh).keySet === Set("dwh_dbf_rates"))
+    assert(storedTsWatermarks(wh)("dwh_dbf_rates").startsWith("2024-01-01"))
+    assert(!Files.exists(Paths.get(s"$wh/dwh_dbf_orphan")))
+    assert(!Files.exists(Paths.get(s"$wh/etl_run_log")), "a failed run logs nothing")
+  }
+
+  test("runFromTables refuses a staged null key and keeps the table and its watermark") {
+    val wh = Files.createTempDirectory("graft_db_nk").toString
+    def feed(rows: (String, Double, String)*) = Seq(rateFeed("dwh_nk_rates", rows: _*))
+    def rates() = spark.read.parquet(s"$wh/dwh_nk_rates").collect()
+      .map(x => x.getString(0) -> x.getDouble(1)).toMap
+    EtlPipeline.runFromTables(spark, wh, feed(("USD", 90.5, "2024-01-01 08:00:00")),
+      1, "2024-01-02 00:00:00")
+    val wm1 = storedTsWatermarks(wh)
+    val e = intercept[Exception] {
+      EtlPipeline.runFromTables(spark, wh, feed(("USD", 92.0, "2024-01-02 08:00:00"),
+        (null, 77.0, "2024-01-02 09:00:00")), 2, "2024-01-03 00:00:00")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("null key")), e)
+    assert(rates() === Map("USD" -> 90.5))
+    assert(storedTsWatermarks(wh) === wm1)
+    assert(!Files.exists(Paths.get(s"$wh/dwh_nk_rates__stage")))
+    assert(spark.read.parquet(s"$wh/etl_run_log").filter(col("run_id") === 2).isEmpty)
   }
 
   test("a mapping resolves staged columns case-insensitively on a new target") {
